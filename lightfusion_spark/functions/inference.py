@@ -12,9 +12,8 @@ Spark-first design decisions:
   equivalent of the reference's session-lifetime ``Booster`` shared across
   threads (``src/lib.rs:64``, ``src/udf.rs:100-112``).
 * **Per-executor model cache** — a module-level registry keyed by model
-  path; each executor process parses the model text once, on first use.
-  The UDF closure captures only (path, batch_size, n_features), all
-  picklable.
+  path and content digest; each executor process parses the shipped
+  model text once, on first use.
 * **Micro-batching parity** — rows are scored in chunks of ``batch_size``
   with a partial tail chunk, exactly like the reference's batching loop
   (``src/udf.rs:181-192``, ``end = min(start + batch_size, n_rows)`` at
@@ -45,7 +44,7 @@ from pyspark.sql.types import ArrayType, DoubleType
 
 from .. import config as lf_config
 from ..errors import LightFusionConfigError, UnsupportedTypeError
-from ..ml.lgbm_model import LightGBMModel, load_model, parse_model_str
+from ..ml.lgbm_model import LightGBMModel, parse_model_str
 
 SUPPORTED_INPUT_TYPES = {"float", "double"}
 SUPPORTED_RETURN_TYPES = {"double"}
@@ -56,10 +55,10 @@ SUPPORTED_RETURN_TYPES = {"double"}
 _MODEL_CACHE: dict[tuple[str, str], LightGBMModel] = {}
 
 
-def _get_model(cache_key: tuple[str, str], model_text: str | None = None) -> LightGBMModel:
+def _get_model(cache_key: tuple[str, str], model_text: str) -> LightGBMModel:
     model = _MODEL_CACHE.get(cache_key)
     if model is None:
-        model = parse_model_str(model_text) if model_text is not None else load_model(cache_key[0])
+        model = parse_model_str(model_text)
         _MODEL_CACHE[cache_key] = model
     return model
 
@@ -106,17 +105,16 @@ def make_lightgbm_udf(
     batch_size: int = 1,
     input_type: str = "double",
     return_type: str = "double",
-    ship_model_text: bool = True,
     spark: SparkSession | None = None,
 ):
     """Build the inference pandas UDF for one registered function.
 
-    ``ship_model_text=True`` ships the model text to executors (they
-    don't need the driver's filesystem).  Small models embed in the UDF
-    closure; past :data:`BROADCAST_THRESHOLD_BYTES` (and when ``spark``
-    is provided) the text ships as a ``SparkContext.broadcast`` so each
-    executor receives one copy via the torrent protocol instead of one
-    copy per task.  Either way the parsed model is cached per executor
+    The model text ships to executors, so they never need the driver's
+    filesystem.  Small models embed in the UDF closure; past
+    :data:`BROADCAST_THRESHOLD_BYTES` (and when ``spark`` is provided)
+    the text ships as a ``SparkContext.broadcast`` so each executor
+    receives one copy via the torrent protocol instead of one copy per
+    task.  Either way the parsed model is cached per executor
     process keyed by content digest.
     """
     if input_type not in SUPPORTED_INPUT_TYPES:
@@ -140,11 +138,10 @@ def make_lightgbm_udf(
     cache_key = (model_path, hashlib.sha256(text.encode("utf-8")).hexdigest()[:16])
     model_text: str | None = None
     model_broadcast = None
-    if ship_model_text:
-        if spark is not None and len(text) > BROADCAST_THRESHOLD_BYTES:
-            model_broadcast = spark.sparkContext.broadcast(text)
-        else:
-            model_text = text
+    if spark is not None and len(text) > BROADCAST_THRESHOLD_BYTES:
+        model_broadcast = spark.sparkContext.broadcast(text)
+    else:
+        model_text = text
     n_features = model.num_features
     del model, text
 

@@ -131,8 +131,10 @@ class Tree:
 
             is_cat = (dtyp & _CATEGORICAL_MASK) != 0
             if is_cat.any():
-                go_left = np.where(
-                    is_cat, self._categorical_go_left(vals, thr), go_left
+                # only categorical rows: a numeric node's threshold is not
+                # a categorical-split index
+                go_left[is_cat] = self._categorical_go_left(
+                    vals[is_cat], thr[is_cat]
                 )
 
             nxt = np.where(go_left, self.left_child[idx], self.right_child[idx])

@@ -34,6 +34,8 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .storemaint import append_cells, read_cells, sum_cells
+
 
 def _tok(col):
     """Whitespace tokens of the lowercased text, empties dropped — the
@@ -1262,36 +1264,14 @@ def wer_append_batch(
     cand_col: str,
     ref_col: str,
 ) -> None:
-    """One append cycle of the maintained corpus-WER store — the WER
-    face of :func:`bleu_append_batch` (round-13 symmetry: every corpus
-    metric whose cells are additive gets a store).  WER's cells are
-    the four totals themselves — ``(n_pairs, n_pairs_dropped,
-    total_edits, total_ref_words)`` — additive over disjoint pair sets
-    because edit distance is computed WITHIN a pair; one 4-long row
-    per batch, however many pairs arrived.  Replay safety is
-    batch-id-addressed identically (deterministic cells, MAX-collapse
-    on read)."""
+    """One append cycle of the maintained corpus-WER store.  WER's
+    cells are the four totals themselves — ``(n_pairs,
+    n_pairs_dropped, total_edits, total_ref_words)`` — additive over
+    disjoint pair sets because edit distance is computed WITHIN a
+    pair; one 4-long row per batch, however many pairs arrived.
+    Replay: the :mod:`.storemaint` cell-store contract."""
     cells = corpus_wer(batch_df, id_col, cand_col, ref_col).drop("wer6")
-    cells.withColumn("batch_id", F.lit(int(batch_id)).cast("long")).write.mode(
-        "append"
-    ).parquet(state_dir)
-
-
-def wer_state_cells(spark, state_dir: str) -> DataFrame:
-    """Read a :func:`wer_append_batch` store back to clean per-batch
-    cells: collapse replay duplicates (MAX per batch_id — replays
-    write identical values, so MAX is the identity on clean stores)."""
-    state = spark.read.parquet(state_dir)
-    return (
-        state.groupBy("batch_id")
-        .agg(
-            F.max("n_pairs").alias("n_pairs"),
-            F.max("n_pairs_dropped").alias("n_pairs_dropped"),
-            F.max("total_edits").alias("total_edits"),
-            F.max("total_ref_words").alias("total_ref_words"),
-        )
-        .select("n_pairs", "n_pairs_dropped", "total_edits", "total_ref_words")
-    )
+    append_cells(cells, state_dir, batch_id)
 
 
 def wer_from_store(spark, state_dir: str) -> DataFrame:
@@ -1300,18 +1280,7 @@ def wer_from_store(spark, state_dir: str) -> DataFrame:
     BIT FOR BIT (additive integer cells + the shared
     :func:`_wer6_expr` finisher; asserted by
     ``tests/test_evalmetrics.py``)."""
-    agg = wer_state_cells(spark, state_dir).groupBy().agg(
-        F.coalesce(F.sum("n_pairs"), F.lit(0)).cast("long").alias("n_pairs"),
-        F.coalesce(F.sum("n_pairs_dropped"), F.lit(0))
-        .cast("long")
-        .alias("n_pairs_dropped"),
-        F.coalesce(F.sum("total_edits"), F.lit(0))
-        .cast("long")
-        .alias("total_edits"),
-        F.coalesce(F.sum("total_ref_words"), F.lit(0))
-        .cast("long")
-        .alias("total_ref_words"),
-    )
+    agg = sum_cells(read_cells(spark, state_dir))
     return agg.select(
         "n_pairs",
         "n_pairs_dropped",
@@ -1742,31 +1711,11 @@ def qa_append_batch(
     batches (gold-alternative dedupe happens within a batch; a
     question re-ingested in a later batch is counted again — the
     caller owns batch boundaries, same as the conversation store).
-    Replay safety is batch-id-addressed identically (deterministic
-    cells, MAX-collapse on read)."""
+    Replay: the :mod:`.storemaint` cell-store contract."""
     cells = _qa_cells(
         qa_em_f1(batch_df, qid_col, pred_col, gold_col), []
     )
-    cells.withColumn("batch_id", F.lit(int(batch_id)).cast("long")).write.mode(
-        "append"
-    ).parquet(state_dir)
-
-
-def qa_state_cells(spark, state_dir: str) -> DataFrame:
-    """Read a :func:`qa_append_batch` store back to clean per-batch
-    cells: collapse replay duplicates (MAX per batch_id — replays
-    write identical values, so MAX is the identity on clean
-    stores)."""
-    state = spark.read.parquet(state_dir)
-    return (
-        state.groupBy("batch_id")
-        .agg(
-            F.max("n_questions").alias("n_questions"),
-            F.max("n_em").alias("n_em"),
-            F.max("f1_sum").alias("f1_sum"),
-        )
-        .select("n_questions", "n_em", "f1_sum")
-    )
+    append_cells(cells, state_dir, batch_id)
 
 
 def qa_from_store(spark, state_dir: str) -> DataFrame:
@@ -1775,15 +1724,7 @@ def qa_from_store(spark, state_dir: str) -> DataFrame:
     BIT FOR BIT (additive integer/DECIMAL cells + the shared
     :func:`_qa_finisher_cols` finisher; asserted by
     ``tests/test_evalmetrics.py``)."""
-    agg = qa_state_cells(spark, state_dir).groupBy().agg(
-        F.coalesce(F.sum("n_questions"), F.lit(0))
-        .cast("long")
-        .alias("n_questions"),
-        F.coalesce(F.sum("n_em"), F.lit(0)).cast("long").alias("n_em"),
-        F.coalesce(F.sum("f1_sum"), F.lit(0).cast("decimal(18,6)"))
-        .cast("decimal(18,6)")
-        .alias("f1_sum"),
-    )
+    agg = sum_cells(read_cells(spark, state_dir))
     return agg.select(*_qa_finisher_cols())
 
 
@@ -2332,31 +2273,12 @@ def rouge_append_batch(
     ref_col: str,
     max_n: int = 2,
 ) -> None:
-    """One append cycle of the maintained corpus-ROUGE store — the
-    fourth face of the additive-store regime (BLEU, chrF, WER, now
-    ROUGE): metric-keyed integer cells per batch (``max_n + 1`` rows,
-    however many pairs arrived), batch-id-addressed replay safety
-    (deterministic cells, MAX-collapse on read)."""
+    """One append cycle of the maintained corpus-ROUGE store:
+    metric-keyed integer cells per batch (``max_n + 1`` rows, however
+    many pairs arrived).  Replay: the :mod:`.storemaint` cell-store
+    contract."""
     cells = _rouge_cells(batch_df, id_col, cand_col, ref_col, max_n=max_n)
-    cells.withColumn("batch_id", F.lit(int(batch_id)).cast("long")).write.mode(
-        "append"
-    ).parquet(state_dir)
-
-
-def rouge_state_cells(spark, state_dir: str) -> DataFrame:
-    """Read a :func:`rouge_append_batch` store back to clean per-batch
-    metric cells (MAX per (metric, batch_id) — replays write identical
-    values, so MAX is the identity on clean stores)."""
-    state = spark.read.parquet(state_dir)
-    return (
-        state.groupBy("metric", "batch_id")
-        .agg(
-            F.max("matched").alias("matched"),
-            F.max("cand_total").alias("cand_total"),
-            F.max("ref_total").alias("ref_total"),
-        )
-        .select("metric", "matched", "cand_total", "ref_total")
-    )
+    append_cells(cells, state_dir, batch_id)
 
 
 def rouge_from_store(spark, state_dir: str) -> DataFrame:
@@ -2364,16 +2286,8 @@ def rouge_from_store(spark, state_dir: str) -> DataFrame:
     :func:`corpus_rouge` over the concatenation of all appended
     batches BIT FOR BIT (additive integer cells + the shared
     :func:`_rouge_finish`; asserted by ``tests/test_evalmetrics.py``)."""
-    summed = (
-        rouge_state_cells(spark, state_dir)
-        .groupBy("metric")
-        .agg(
-            F.sum("matched").cast("long").alias("matched"),
-            F.sum("cand_total").cast("long").alias("cand_total"),
-            F.sum("ref_total").cast("long").alias("ref_total"),
-        )
-    )
-    return _rouge_finish(summed)
+    keys = ("metric",)
+    return _rouge_finish(sum_cells(read_cells(spark, state_dir, keys), keys))
 
 
 def chrf_append_batch(
@@ -2390,11 +2304,10 @@ def chrf_append_batch(
     :func:`chrf_cells` are additive for exactly the same reason BLEU's
     are — clipping happens WITHIN a pair).  Writes the arriving
     pairs' cells as ``(n, matched, cand_total, ref_total, batch_id)``
-    parquet rows; replay safety is batch-id-addressed identically."""
+    parquet rows.  Replay: the :mod:`.storemaint` cell-store
+    contract."""
     cells = chrf_cells(batch_df, id_col, cand_col, ref_col, max_n=max_n)
-    cells.withColumn("batch_id", F.lit(int(batch_id)).cast("long")).write.mode(
-        "append"
-    ).parquet(state_dir)
+    append_cells(cells, state_dir, batch_id)
 
 
 def chrf_from_store(
@@ -2404,17 +2317,9 @@ def chrf_from_store(
     :func:`chrf_score` over the concatenation of all appended batches
     BIT FOR BIT (additive cells + the shared :func:`chrf_from_cells`
     finisher; asserted by ``tests/test_evalmetrics.py``)."""
-    state = spark.read.parquet(state_dir)
-    clean = (
-        state.groupBy("n", "batch_id")
-        .agg(
-            F.max("matched").alias("matched"),
-            F.max("cand_total").alias("cand_total"),
-            F.max("ref_total").alias("ref_total"),
-        )
-        .select("n", "matched", "cand_total", "ref_total")
+    return chrf_from_cells(
+        read_cells(spark, state_dir, ("n",)), max_n=max_n, beta=beta
     )
-    return chrf_from_cells(clean, max_n=max_n, beta=beta)
 
 
 def annotator_agreement(
@@ -3283,38 +3188,11 @@ def bleu_append_batch(
     without re-scoring history).  Writes the arriving pairs'
     :func:`bleu_cells` as ``(n, matched, cand_total, ref_total,
     batch_id)`` parquet rows: O(max_n) integers per batch, however
-    many pairs arrived.
-
-    Replay safety is batch-id-ADDRESSED (the additive-sketch store's
-    mechanism, not the HLL store's idempotence): cells are a
-    deterministic function of the batch's rows, so a micro-batch
-    replayed after checkpoint recovery writes byte-identical rows
-    under the same ``batch_id``, and :func:`bleu_state_cells`
-    collapses duplicates (MAX per (n, batch_id)) before summing —
-    the reported BLEU can never double-count a replay.
+    many pairs arrived.  Replay: the :mod:`.storemaint` cell-store
+    contract, so the reported BLEU can never double-count a replay.
     """
     cells = bleu_cells(batch_df, id_col, cand_col, ref_col, max_n=max_n)
-    cells.withColumn("batch_id", F.lit(int(batch_id)).cast("long")).write.mode(
-        "append"
-    ).parquet(state_dir)
-
-
-def bleu_state_cells(spark, state_dir: str) -> DataFrame:
-    """Read a :func:`bleu_append_batch` store back to clean per-order
-    cells: collapse replay duplicates (MAX per (n, batch_id) — replays
-    write identical values, so MAX is the identity on clean stores)
-    and return ``(n, matched, cand_total, ref_total)`` rows ready for
-    :func:`corpus_bleu_from_cells`."""
-    state = spark.read.parquet(state_dir)
-    return (
-        state.groupBy("n", "batch_id")
-        .agg(
-            F.max("matched").alias("matched"),
-            F.max("cand_total").alias("cand_total"),
-            F.max("ref_total").alias("ref_total"),
-        )
-        .select("n", "matched", "cand_total", "ref_total")
-    )
+    append_cells(cells, state_dir, batch_id)
 
 
 def bleu_from_store(spark, state_dir: str, max_n: int = 4) -> DataFrame:
@@ -3324,7 +3202,9 @@ def bleu_from_store(spark, state_dir: str, max_n: int = 4) -> DataFrame:
     the concatenation of all appended batches BIT FOR BIT — the
     streamed metric is the batch metric (asserted by
     ``tests/test_evalmetrics.py``)."""
-    return corpus_bleu_from_cells(bleu_state_cells(spark, state_dir), max_n=max_n)
+    return corpus_bleu_from_cells(
+        read_cells(spark, state_dir, ("n",)), max_n=max_n
+    )
 
 
 def fleiss_kappa(
@@ -3645,18 +3525,14 @@ def winrate_append_batch(
     in; the Wilson dashboard must stay current without re-reading
     history).  Writes the batch's per-matchup integer cells
     ``(side_lo, side_hi, n_games, n_wins_lo, n_dropped, batch_id)`` —
-    O(matchups) rows per batch however many games arrived.
+    O(matchups) rows per batch however many games arrived.  Replay:
+    the :mod:`.storemaint` cell-store contract, so a replay can never
+    double-count a game.
 
-    Replay safety is batch-id-ADDRESSED (the additive regime shared
-    with the BLEU store, docs/SCALE.md): cells are a deterministic
-    function of the batch's rows, so a replayed micro-batch writes
-    byte-identical rows under the same ``batch_id`` and
-    :func:`winrate_from_store` collapses duplicates (MAX per
-    (matchup, batch)) before summing — a replay can never
-    double-count a game.  The dropped count is carried per batch on a
-    sentinel-free NULL matchup row so raw-vote accounting survives
-    the store (unlike the annotation store, where the resolve itself
-    absorbs what was dropped).  Sides are stringified BEFORE the
+    The dropped count is carried per batch on a sentinel-free NULL
+    matchup row so raw-vote accounting survives the store (unlike the
+    annotation store, where the resolve itself absorbs what was
+    dropped).  Sides are stringified BEFORE the
     least/greatest pairing (an arena's systems are names; a stable
     store schema whatever the caller's id type), so matchups pair
     LEXICOGRAPHICALLY even for numeric ids — identical to running the
@@ -3696,35 +3572,21 @@ def winrate_append_batch(
         F.lit(0).cast("long").alias("n_wins_lo"),
         "n_dropped",
     )
-    cells.unionByName(dropped).withColumn(
-        "batch_id", F.lit(int(batch_id)).cast("long")
-    ).write.mode("append").parquet(state_dir)
+    append_cells(cells.unionByName(dropped), state_dir, batch_id)
 
 
 def winrate_from_store(spark, state_dir: str, z: float = 1.96) -> DataFrame:
     """Wilson win-rate report over EVERYTHING the store has seen:
-    per-(matchup, batch) cells are deduped (MAX — replays write
-    identical values) then summed, and the finisher is
+    clean per-matchup cells are summed and the finisher is
     :func:`_winrate_finish` verbatim, so the result equals
     :func:`winrate_report` over the concatenation of all appended
     batches BIT FOR BIT (asserted by ``tests/test_evalmetrics.py``)."""
-    state = spark.read.parquet(state_dir)
-    clean = state.groupBy("side_lo", "side_hi", "batch_id").agg(
-        F.max("n_games").alias("n_games"),
-        F.max("n_wins_lo").alias("n_wins_lo"),
-        F.max("n_dropped").alias("n_dropped"),
+    keys = ("side_lo", "side_hi")
+    clean = read_cells(spark, state_dir, keys)
+    agg = sum_cells(
+        clean.where(F.col("side_lo").isNotNull()).drop("n_dropped"), keys
     )
-    agg = (
-        clean.where(F.col("side_lo").isNotNull())
-        .groupBy("side_lo", "side_hi")
-        .agg(
-            F.sum("n_games").cast("long").alias("n_games"),
-            F.sum("n_wins_lo").cast("long").alias("n_wins_lo"),
-        )
-    )
-    dropped = clean.agg(
-        F.coalesce(F.sum("n_dropped"), F.lit(0)).cast("long").alias("n_dropped")
-    )
+    dropped = sum_cells(clean.select("n_dropped"))
     return _winrate_finish(agg, dropped, z)
 
 
@@ -4587,10 +4449,8 @@ def binary_scores_append_batch(
     future threshold metric — the counts are the sufficient
     statistic).  Contract: item ids must not repeat across batches (a
     re-ingested item is counted again — the caller owns batch
-    boundaries, the qa-store rule).  Replay safety is
-    batch-id-addressed: cells are a deterministic function of the
-    batch, so replays write identical rows and the read side
-    MAX-collapses per (batch_id, _ok, _s).
+    boundaries, the qa-store rule).  Replay: the :mod:`.storemaint`
+    cell-store contract.
 
     The first append writes a one-row ``_meta`` manifest
     (score_decimals + the score/label column names) beside the cells
@@ -4651,27 +4511,14 @@ def binary_scores_append_batch(
     _, _, per_group = _binary_score_groups(
         batch_df, score_col, label_col, None, score_decimals, pin=False
     )
-    per_group.select("_ok", "_s", "_np", "_nn", "_cnt").withColumn(
-        "batch_id", F.lit(int(batch_id)).cast("long")
-    ).write.mode("append").parquet(state_dir)
+    append_cells(
+        per_group.select("_ok", "_s", "_np", "_nn", "_cnt"), state_dir, batch_id
+    )
 
 
-def binary_scores_state_groups(spark, state_dir: str) -> DataFrame:
-    """Read a :func:`binary_scores_append_batch` store back to the
-    ``(_ok, _s, _np, _nn, _cnt)`` relation the one-shot reports build
-    from raw rows: MAX-collapse replay duplicates per
-    (batch_id, _ok, _s), then SUM across batches."""
-    state = spark.read.parquet(state_dir)
-    per_batch = state.groupBy("batch_id", "_ok", "_s").agg(
-        F.max("_np").alias("_np"),
-        F.max("_nn").alias("_nn"),
-        F.max("_cnt").alias("_cnt"),
-    )
-    return per_batch.groupBy("_ok", "_s").agg(
-        F.sum("_np").cast("long").alias("_np"),
-        F.sum("_nn").cast("long").alias("_nn"),
-        F.sum("_cnt").cast("long").alias("_cnt"),
-    )
+#: the binary-score store's cell keys: the ``(_ok, _s, _np, _nn, _cnt)``
+#: relation the one-shot reports build from raw rows, summed per key
+_BINARY_KEYS = ("_ok", "_s")
 
 
 def auc_from_store(spark, state_dir: str) -> DataFrame:
@@ -4680,9 +4527,8 @@ def auc_from_store(spark, state_dir: str) -> DataFrame:
     BIT FOR BIT (additive bounded cells + the shared
     :func:`_auc_from_groups` finisher; asserted by
     ``tests/test_evalmetrics.py``)."""
-    return _auc_from_groups(
-        False, [], binary_scores_state_groups(spark, state_dir), None
-    )
+    cells = read_cells(spark, state_dir, _BINARY_KEYS)
+    return _auc_from_groups(False, [], sum_cells(cells, _BINARY_KEYS), None)
 
 
 def pr_from_store(spark, state_dir: str) -> DataFrame:
@@ -4690,9 +4536,8 @@ def pr_from_store(spark, state_dir: str) -> DataFrame:
     — equals :func:`pr_report` over the concatenation bit for bit
     (the same store serves AUC and PR: the per-score class counts are
     the sufficient statistic for every threshold metric)."""
-    return _pr_from_groups(
-        False, [], binary_scores_state_groups(spark, state_dir), None
-    )
+    cells = read_cells(spark, state_dir, _BINARY_KEYS)
+    return _pr_from_groups(False, [], sum_cells(cells, _BINARY_KEYS), None)
 
 
 def brier_report(
@@ -4860,10 +4705,11 @@ def brier_from_store(spark, state_dir: str) -> DataFrame:
             "the cells' rounding and backfill _meta as documented in "
             "binary_scores_append_batch, then retry"
         ) from None
+    cells = read_cells(spark, state_dir, _BINARY_KEYS)
     return _brier_from_groups(
         False,
         [],
-        binary_scores_state_groups(spark, state_dir),
+        sum_cells(cells, _BINARY_KEYS),
         None,
         int(meta["score_decimals"]),
     )
@@ -5868,10 +5714,8 @@ def pass_at_k_append_batch(
     caller owns batch boundaries).  Each batch writes one row per
     observed task plus one NULL-task row carrying the batch's
     ``n_rows_dropped`` (unambiguous: a valid task id is never NULL),
-    so exclusions ride the store.  Replay safety is
-    batch-id-addressed: cells are a deterministic function of the
-    batch, replays write identical rows, the read side MAX-collapses
-    per (batch_id, task).  O(tasks-in-batch) rows per append; compact
+    so exclusions ride the store.  Replay: the :mod:`.storemaint`
+    cell-store contract.  O(tasks-in-batch) rows per append; compact
     with :func:`~lightfusion_spark.operators.storemaint.
     compact_cell_store` when the file count warrants it."""
     valid = F.col(task_col).isNotNull() & F.col(correct_col).isNotNull()
@@ -5899,36 +5743,7 @@ def pass_at_k_append_batch(
         .cast("long")
         .alias("_dropped"),
     )
-    per_task.unionByName(dropped_row).withColumn(
-        "batch_id", F.lit(int(batch_id)).cast("long")
-    ).write.mode("append").parquet(state_dir)
-
-
-def pass_at_k_state_tasks(spark, state_dir: str) -> tuple[DataFrame, DataFrame]:
-    """Read a :func:`pass_at_k_append_batch` store back to the
-    ``(_task, _n, _c)`` per-task relation (replay duplicates
-    MAX-collapsed per (batch_id, task), then attempt pools SUMMED per
-    task across batches) and the one-row dropped-count frame."""
-    state = spark.read.parquet(state_dir)
-    per_batch = state.groupBy("batch_id", "_task").agg(
-        F.max("_n").alias("_n"),
-        F.max("_c").alias("_c"),
-        F.max("_dropped").alias("_dropped"),
-    )
-    tasks = (
-        per_batch.where(F.col("_task").isNotNull())
-        .groupBy("_task")
-        .agg(
-            F.sum("_n").cast("long").alias("_n"),
-            F.sum("_c").cast("long").alias("_c"),
-        )
-    )
-    dropped = per_batch.where(F.col("_task").isNull()).agg(
-        F.coalesce(F.sum("_dropped"), F.lit(0))
-        .cast("long")
-        .alias("n_rows_dropped")
-    )
-    return tasks, dropped
+    append_cells(per_task.unionByName(dropped_row), state_dir, batch_id)
 
 
 def pass_at_k_from_store(
@@ -5944,5 +5759,16 @@ def pass_at_k_from_store(
     if not ks or any(int(k) < 1 for k in ks):
         raise ValueError(f"ks must be positive ints, got {ks!r}")
     ks = tuple(int(k) for k in dict.fromkeys(ks))
-    tasks, dropped = pass_at_k_state_tasks(spark, state_dir)
+    # attempt pools summed per task across batches; the NULL-task rows
+    # carry the per-batch dropped counts
+    cells = read_cells(spark, state_dir, ("_task",))
+    task = F.col("_task")
+    tasks = sum_cells(
+        cells.where(task.isNotNull()).drop("_dropped"), ("_task",)
+    )
+    dropped = sum_cells(
+        cells.where(task.isNull()).select(
+            F.col("_dropped").alias("n_rows_dropped")
+        )
+    )
     return _pass_at_k_finish(tasks, ks, dropped, None, None)

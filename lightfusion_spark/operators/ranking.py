@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .storemaint import append_cells, read_cells, sum_cells
+
 
 def _gain6(rel_col, pos_col):
     """Per-item DCG gain ``round(rel / log2(pos + 1), 6)`` as
@@ -575,43 +577,16 @@ def ranking_append_batch(
     arrived.  Contract: query ids must not repeat across batches (a
     query re-graded in a later batch is counted again), and ``k``
     must be constant for the life of the store (it is stored with
-    each cell and the read path MAX-collapses it — a mixed-k store is
-    a caller bug, not an average that silently means nothing).
-    Replay safety is batch-id-addressed identically (deterministic
-    cells, MAX-collapse on read)."""
+    each cell and the read keys on it — a mixed-k store is a caller
+    bug, read as one row per k, never an average that silently means
+    nothing).  Replay: the :mod:`.storemaint` cell-store contract."""
     per = ranking_report_per_query(
         results, gold, query_col, item_col, rank_col, k=k, rel_col=rel_col
     )
     cells = _ranking_cells(per, []).withColumn(
         "k", F.lit(int(k)).cast("int")
     )
-    cells.withColumn("batch_id", F.lit(int(batch_id)).cast("long")).write.mode(
-        "append"
-    ).parquet(state_dir)
-
-
-_RANKING_CELL_COLS = (
-    "n_queries",
-    "n_ndcg_ungraded",
-    "n_hits_total",
-    "n_gold_total",
-    "rr_sum",
-    "p_sum",
-    "r_sum",
-    "ndcg_sum",
-    "n_graded",
-)
-
-
-def ranking_state_cells(spark, state_dir: str) -> DataFrame:
-    """Read a :func:`ranking_append_batch` store back to clean
-    per-batch cells: collapse replay duplicates (MAX per batch_id —
-    replays write identical values, so MAX is the identity on clean
-    stores)."""
-    state = spark.read.parquet(state_dir)
-    return state.groupBy("batch_id").agg(
-        *[F.max(c).alias(c) for c in _RANKING_CELL_COLS + ("k",)]
-    ).select(*_RANKING_CELL_COLS, "k")
+    append_cells(cells, state_dir, batch_id)
 
 
 def ranking_from_store(spark, state_dir: str) -> DataFrame:
@@ -621,29 +596,6 @@ def ranking_from_store(spark, state_dir: str) -> DataFrame:
     contract (additive cells + the shared
     :func:`_ranking_finisher_cols` finisher; asserted by
     ``tests/test_ranking.py``)."""
-    cells = ranking_state_cells(spark, state_dir)
-    agg = cells.groupBy().agg(
-        F.coalesce(F.sum("n_queries"), F.lit(0))
-        .cast("long")
-        .alias("n_queries"),
-        F.coalesce(F.sum("n_ndcg_ungraded"), F.lit(0))
-        .cast("long")
-        .alias("n_ndcg_ungraded"),
-        F.coalesce(F.sum("n_hits_total"), F.lit(0))
-        .cast("long")
-        .alias("n_hits_total"),
-        F.coalesce(F.sum("n_gold_total"), F.lit(0))
-        .cast("long")
-        .alias("n_gold_total"),
-        *[
-            F.coalesce(F.sum(c), F.lit(0).cast("decimal(18,6)"))
-            .cast("decimal(18,6)")
-            .alias(c)
-            for c in ("rr_sum", "p_sum", "r_sum", "ndcg_sum")
-        ],
-        F.coalesce(F.sum("n_graded"), F.lit(0))
-        .cast("long")
-        .alias("n_graded"),
-        F.max("k").alias("_k"),
-    )
-    return agg.select(*_ranking_finisher_cols(F.col("_k")))
+    keys = ("k",)
+    agg = sum_cells(read_cells(spark, state_dir, keys), keys)
+    return agg.select(*_ranking_finisher_cols(F.col("k")))

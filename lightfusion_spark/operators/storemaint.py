@@ -1,36 +1,87 @@
-"""Generic layout maintenance for batch-appended CELL stores — the
-small-files half of the store family's lifecycle (r16 verdict item 3).
+"""The batch-appended CELL store contract, and its layout maintenance.
 
-Every maintained store in this repo (the eval-metric cell stores —
-BLEU/chrF/WER/ROUGE/QA/ranking/winrate, the binary-score store — the
-conversation-dedup relations, the additive sketch store) follows one
-append discipline: each batch appends rows that are a DETERMINISTIC
-function of the batch's data, tagged with a ``batch_id``, and the read
-side collapses replay duplicates (MAX per cell-and-batch, or a
-full-row drop) before summing.  The cheapest correct append is one
-parquet file per batch — so a long-lived store accumulates one file
-per batch forever, and every read pays a task per file.  The sketch
-stores solved this with a semantic fold (``sketch_compact_state`` — a
-fence plus cell summation); the IVF index with a validated rewrite
-(``ivf_compact``).  This module is the store-agnostic version of the
-latter: a PHYSICAL rewrite that never interprets the cells.
+Every maintained eval-metric store in this repo — BLEU, chrF, WER,
+ROUGE, QA, ranking, win-rate, binary-score (AUC/PR/Brier) and pass@k —
+follows one replay contract, implemented here once:
 
-:func:`compact_cell_store` works on any append-dir whose rows carry a
-``batch_id`` column because it only ever collapses BIT-IDENTICAL full
-rows — exactly the rows a replayed batch re-appends (appends are
-deterministic, the family contract), and never two distinct logical
-rows (within a batch, cells are grouped per key — one row each; across
-batches, ``batch_id`` differs).  Streamed-equals-one-shot parity
-therefore survives compaction bit for bit, replay stays addressable
-(batch ids live in the rows, untouched), and a post-compaction replay
-of an already-applied batch re-appends rows the read side still
-collapses — all test-pinned in ``tests/test_storemaint.py``.
+* append (:func:`append_cells`): each batch appends cells that are a
+  DETERMINISTIC function of the batch's data, tagged with its
+  ``batch_id``, so a micro-batch replayed after checkpoint recovery
+  re-appends bit-identical rows under the same id;
+* read (:func:`read_cells`): MAX of every non-key cell per (keys,
+  ``batch_id``) — the identity on a clean store, and a collapse of any
+  replay residue — then ``batch_id`` dropped;
+* finish: :func:`sum_cells` adds the clean cells across batches where
+  the store's finisher does not sum for itself, and the finisher is
+  shared verbatim with the one-shot operator, so the store read equals
+  the one-shot metric over the concatenation of all batches bit for
+  bit (``tests/test_storemaint.py`` pins this for all nine stores).
+
+A replay can therefore never double-count.  The cheapest correct append
+is one parquet file per batch — so a long-lived store accumulates one
+file per batch forever, and every read pays a task per file.  The
+sketch stores solved this with a semantic fold
+(``sketch_compact_state`` — a fence plus cell summation); the IVF index
+with a validated rewrite (``ivf_compact``).  :func:`compact_cell_store`
+is the store-agnostic version of the latter: a PHYSICAL rewrite that
+never interprets the cells.
+
+It works on any append-dir whose rows carry a ``batch_id`` column
+(the conversation-dedup relations included) because it only ever
+collapses BIT-IDENTICAL full rows — exactly the rows a replayed batch
+re-appends (appends are deterministic, the family contract), and never
+two distinct logical rows (within a batch, cells are grouped per key —
+one row each; across batches, ``batch_id`` differs).  Streamed-equals-
+one-shot parity therefore survives compaction bit for bit, replay stays
+addressable (batch ids live in the rows, untouched), and a
+post-compaction replay of an already-applied batch re-appends rows the
+read side still collapses — all test-pinned in
+``tests/test_storemaint.py``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+def append_cells(cells: DataFrame, state_dir: str, batch_id: int) -> None:
+    """Append one batch's cells to the store at ``state_dir``, tagged
+    with ``batch_id`` as a long."""
+    cells.withColumn("batch_id", F.lit(int(batch_id)).cast("long")).write.mode(
+        "append"
+    ).parquet(state_dir)
+
+
+def read_cells(
+    spark: SparkSession, state_dir: str, keys: tuple[str, ...] = ()
+) -> DataFrame:
+    """Read a cell store back to clean per-batch cells: MAX of every
+    non-key column per (``keys``, ``batch_id``), then ``batch_id``
+    dropped.  Columns come back as ``keys`` then the cells, in stored
+    order."""
+    state = spark.read.parquet(state_dir)
+    cells = [c for c in state.columns if c not in keys and c != "batch_id"]
+    return (
+        state.groupBy(*keys, "batch_id")
+        .agg(*[F.max(c).alias(c) for c in cells])
+        .select(*keys, *cells)
+    )
+
+
+def sum_cells(cells: DataFrame, keys: tuple[str, ...] = ()) -> DataFrame:
+    """SUM every non-key column of clean cells per ``keys``, cast back
+    to its stored type.  Without keys the sum is one row, and a column
+    with nothing to add reads 0, not NULL."""
+
+    def total(field):
+        s = F.sum(field.name)
+        if not keys:
+            s = F.coalesce(s, F.lit(0))
+        return s.cast(field.dataType).alias(field.name)
+
+    sums = [total(f) for f in cells.schema.fields if f.name not in keys]
+    return cells.groupBy(*keys).agg(*sums)
 
 
 def atomic_replace(spark: SparkSession, df: DataFrame, path: str) -> None:

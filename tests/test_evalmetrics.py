@@ -496,29 +496,6 @@ def test_bleu_store_stream_matches_batch_exactly(spark, tmp_path):
     assert got == want and want["bleu6"] > 0
 
 
-def test_bleu_store_replay_is_a_no_op(spark, tmp_path):
-    """Batch-id-addressed appends: replaying a batch under its original
-    id writes byte-identical cells, and the read-side MAX dedup makes
-    the reported BLEU identical — checkpoint recovery can never
-    double-count."""
-    from lightfusion_spark.operators import evalmetrics as em
-
-    rows = [(i, f"a b c tok{i}", f"a b c d tok{i}") for i in range(20)]
-    pairs = spark.createDataFrame(rows, "id long, cand string, ref string")
-    state_dir = str(tmp_path / "bleu_replay")
-    b0 = pairs.where("id < 10")
-    b1 = pairs.where("id >= 10")
-    em.bleu_append_batch(b0, state_dir, 0, "id", "cand", "ref")
-    em.bleu_append_batch(b1, state_dir, 1, "id", "cand", "ref")
-    before = em.bleu_from_store(spark, state_dir).collect()[0].asDict()
-    em.bleu_append_batch(b1, state_dir, 1, "id", "cand", "ref")  # replay
-    after = em.bleu_from_store(spark, state_dir).collect()[0].asDict()
-    assert after == before
-    assert before == (
-        em.corpus_bleu(pairs, "id", "cand", "ref").collect()[0].asDict()
-    )
-
-
 def test_fleiss_matches_classic_example_and_drops_unbalanced(spark):
     """Fleiss 1971 textbook table: N=10 items x n=14 raters x 5
     categories -> kappa = 0.2099...; an unbalanced extra item is
@@ -1125,28 +1102,6 @@ def test_wer_store_stream_matches_batch_exactly(spark, tmp_path):
     want = em.corpus_wer(pairs, "id", "cand", "ref").collect()[0].asDict()
     assert got == want
     assert want["n_pairs_dropped"] == 2 and want["wer6"] > 0
-
-
-def test_wer_store_replay_is_a_no_op(spark, tmp_path):
-    """Batch-id-addressed appends: replaying a batch under its original
-    id writes byte-identical cells and the read-side MAX dedup keeps
-    the reported WER identical."""
-    from lightfusion_spark.operators import evalmetrics as em
-
-    rows = [(i, f"a b tok{i}", f"a b c tok{i}") for i in range(20)]
-    pairs = spark.createDataFrame(rows, "id long, cand string, ref string")
-    state_dir = str(tmp_path / "wer_replay")
-    b0 = pairs.where("id < 10")
-    b1 = pairs.where("id >= 10")
-    em.wer_append_batch(b0, state_dir, 0, "id", "cand", "ref")
-    em.wer_append_batch(b1, state_dir, 1, "id", "cand", "ref")
-    before = em.wer_from_store(spark, state_dir).collect()[0].asDict()
-    em.wer_append_batch(b1, state_dir, 1, "id", "cand", "ref")  # replay
-    after = em.wer_from_store(spark, state_dir).collect()[0].asDict()
-    assert after == before
-    assert before == (
-        em.corpus_wer(pairs, "id", "cand", "ref").collect()[0].asDict()
-    )
 
 
 def test_qa_em_f1_squad_semantics(spark):
@@ -1822,28 +1777,6 @@ def test_qa_store_stream_matches_batch_exactly(spark, tmp_path):
     got = em.qa_from_store(spark, state_dir).collect()[0].asDict()
     want = em.qa_report(df, "qid", "pred", "gold").collect()[0].asDict()
     assert got == want and want["f1_mean6"] > 0
-
-
-def test_qa_store_replay_is_a_no_op(spark, tmp_path):
-    """Batch-id-addressed appends: replaying a batch under its
-    original id writes identical cells and the MAX-collapse read makes
-    the reported grades identical — checkpoint recovery can never
-    double-count."""
-    from lightfusion_spark.operators import evalmetrics as em
-
-    rows = [(i, f"a b w{i}", f"a b c w{i}") for i in range(20)]
-    df = spark.createDataFrame(rows, "qid long, pred string, gold string")
-    state_dir = str(tmp_path / "qa_replay")
-    b0, b1 = df.where("qid < 10"), df.where("qid >= 10")
-    em.qa_append_batch(b0, state_dir, 0, "qid", "pred", "gold")
-    em.qa_append_batch(b1, state_dir, 1, "qid", "pred", "gold")
-    before = em.qa_from_store(spark, state_dir).collect()[0].asDict()
-    em.qa_append_batch(b1, state_dir, 1, "qid", "pred", "gold")  # replay
-    after = em.qa_from_store(spark, state_dir).collect()[0].asDict()
-    assert after == before
-    assert before == (
-        em.qa_report(df, "qid", "pred", "gold").collect()[0].asDict()
-    )
 
 
 def _auc_reference(pairs):

@@ -233,6 +233,51 @@ def test_categorical_mixed_with_numerical():
         t2.predict(np.array([[10.0, 5.0, 0.5, 0.1, 32.0]]))[0]
 
 
+MIXED_CAT_MODEL = """tree
+version=v4
+num_class=1
+num_tree_per_iteration=1
+label_index=0
+max_feature_idx=1
+objective=regression
+
+Tree=0
+num_leaves=5
+num_cat=2
+split_feature=0 1 1 0
+split_gain=1 1 1 1
+threshold=0 7.5 1 1.5
+decision_type=1 2 1 2
+left_child=1 -1 -2 -4
+right_child=2 3 -3 -5
+cat_boundaries=0 1 2
+cat_threshold=5 10
+leaf_value=10 20 30 40 50
+shrinkage=1
+
+end of trees
+"""
+# node0: categorical on f0, set {0, 2}; left -> node1, right -> node2
+# node1: numerical f1 <= 7.5 -> leaf 0, else node3
+# node2: categorical on f1, set {1, 3} -> leaf 1, else leaf 2
+# node3: numerical f0 <= 1.5 -> leaf 3, else leaf 4
+
+
+def test_categorical_and_numerical_nodes_at_one_depth():
+    """Rows that sit on a numerical node and a categorical node in the
+    same descent step: the numerical node's threshold (7.5) must never
+    be read as a categorical-split index."""
+    m = parse_model_str(MIXED_CAT_MODEL)
+    out = m.predict_raw(np.array([
+        [0.0, 1.0],   # node1: 1 <= 7.5 -> leaf 0
+        [1.0, 2.0],   # node2: 2 not in {1, 3} -> leaf 2
+        [5.0, 3.0],   # node2: 3 in {1, 3} -> leaf 1
+        [0.0, 9.0],   # node1 -> node3: 0 <= 1.5 -> leaf 3
+        [2.0, 9.0],   # node1 -> node3: 2 > 1.5 -> leaf 4
+    ]))
+    assert out[:, 0].tolist() == [10.0, 30.0, 20.0, 40.0, 50.0]
+
+
 def test_categorical_malformed_rejected():
     # bit0 set but no cat_boundaries/cat_threshold section
     bad = SIMPLE_MODEL.replace("decision_type=2 2", "decision_type=1 2")

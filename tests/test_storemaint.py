@@ -244,3 +244,201 @@ def test_atomic_replace_semantics(spark, tmp_path):
     (tmp_path / "store_pre").mkdir()
     with pytest.raises(RuntimeError, match="crashed mid-swap"):
         atomic_replace(spark, doubled, path)
+
+
+# ---------------------------------------------------------------------
+# One replay test for every batch-id-addressed metric store.  Each case
+# builds a corpus, splits it into three disjoint batches, and names the
+# store's append call plus (reader, one-shot operator) pairs that must
+# agree bit for bit, column names and types included (nullability is
+# plan metadata the one-shot operators do not hold constant either).
+
+
+def _pairs(spark):
+    rows = [
+        (
+            i,
+            f"tok{i} the quick brown fox {'x ' * (i % 3)}".strip(),
+            f"the quick brown fox jumps tok{i}" if i % 11 else None,
+        )
+        for i in range(36)
+    ]
+    return spark.createDataFrame(rows, "id long, cand string, ref string")
+
+
+def _thirds(df, col):
+    return [(df.where(F.col(col) % 3 == b),) for b in range(3)]
+
+
+def _pair_store(append, read, one_shot):
+    def build(spark):
+        df = _pairs(spark)
+        return (
+            _thirds(df, "id"),
+            lambda path, b, batch: append(batch, path, b, "id", "cand", "ref"),
+            [(read, one_shot(df, "id", "cand", "ref"))],
+        )
+
+    return build
+
+
+def _qa_case(spark):
+    rows = [
+        (
+            i,
+            " ".join(f"w{(i * j) % 7}" for j in range(1, 6 - i % 2)),
+            " ".join(f"w{(i * j) % 7}" for j in range(1, 4 + (i % 3))),
+        )
+        for i in range(36)
+    ]
+    df = spark.createDataFrame(rows, "qid long, pred string, gold string")
+    return (
+        _thirds(df, "qid"),
+        lambda path, b, batch: em.qa_append_batch(
+            batch, path, b, "qid", "pred", "gold"
+        ),
+        [(em.qa_from_store, em.qa_report(df, "qid", "pred", "gold"))],
+    )
+
+
+def _ranking_case(spark):
+    from lightfusion_spark.operators import ranking as rk
+
+    res = spark.createDataFrame(
+        [
+            (q, f"i{(q * r) % 5}", r)
+            for q in range(1, 10)
+            for r in range(1, 4 + q % 2)
+        ],
+        "q long, item string, rank long",
+    )
+    gold = spark.createDataFrame(
+        [(q, f"i{(q + g) % 5}") for q in range(1, 10) for g in range(2)],
+        "q long, item string",
+    )
+    batches = [
+        (res.where(F.col("q") % 3 == b), gold.where(F.col("q") % 3 == b))
+        for b in range(3)
+    ]
+    return (
+        batches,
+        lambda path, b, r, g: rk.ranking_append_batch(
+            r, g, path, b, "q", "item", "rank", k=3
+        ),
+        [
+            (
+                rk.ranking_from_store,
+                rk.ranking_report(res, gold, "q", "item", "rank", k=3),
+            )
+        ],
+    )
+
+
+def _winrate_case(spark):
+    rows = []
+    for i in range(60):
+        a, b = f"sys{i % 4}", f"sys{(i // 4) % 4}"
+        rows.append((i, a, b, a if i % 3 else b))
+    # invalid: self-matches above, a foreign winner, a NULL winner
+    rows += [(90, "sys1", "sys0", "sysX"), (91, "sys2", "sys3", None)]
+    df = spark.createDataFrame(rows, "mid long, a string, b string, w string")
+    return (
+        _thirds(df, "mid"),
+        lambda path, b, batch: em.winrate_append_batch(
+            batch, path, b, "a", "b", "w"
+        ),
+        [(em.winrate_from_store, em.winrate_report(df, "a", "b", "w"))],
+    )
+
+
+def _binary_case(spark):
+    rows = [
+        (
+            i,
+            None if i % 17 == 0 else (i * 7 % 10) / 10.0,
+            1 if (i * 7 % 10) >= (i % 5) * 2 else 0,
+        )
+        for i in range(90)
+    ]
+    df = spark.createDataFrame(rows, "id long, score double, label int")
+    args = (df, "id", "score", "label")
+    return (
+        _thirds(df, "id"),
+        lambda path, b, batch: em.binary_scores_append_batch(
+            batch, path, b, "id", "score", "label"
+        ),
+        [
+            (em.auc_from_store, em.auc_report(*args)),
+            (em.pr_from_store, em.pr_report(*args)),
+            (em.brier_from_store, em.brier_report(*args)),
+        ],
+    )
+
+
+def _pass_at_k_case(spark):
+    rows = [
+        (
+            i,
+            f"t{(i // 3) % 6}",
+            None if i % 23 == 0 else i % ((i // 3) % 6 + 2) == 0,
+        )
+        for i in range(72)
+    ]
+    df = spark.createDataFrame(rows, "i long, task string, ok boolean")
+    ks = (1, 5, 10, 20)
+    return (
+        # every task's samples span all three batches
+        _thirds(df, "i"),
+        lambda path, b, batch: em.pass_at_k_append_batch(
+            batch, path, b, "task", "ok"
+        ),
+        [
+            (
+                lambda spark, path: em.pass_at_k_from_store(spark, path, ks=ks),
+                em.pass_at_k(df, "task", "ok", ks=ks),
+            )
+        ],
+    )
+
+
+STORES = {
+    "bleu": _pair_store(em.bleu_append_batch, em.bleu_from_store, em.corpus_bleu),
+    "chrf": _pair_store(em.chrf_append_batch, em.chrf_from_store, em.chrf_score),
+    "wer": _pair_store(em.wer_append_batch, em.wer_from_store, em.corpus_wer),
+    "rouge": _pair_store(
+        em.rouge_append_batch, em.rouge_from_store, em.corpus_rouge
+    ),
+    "qa": _qa_case,
+    "ranking": _ranking_case,
+    "winrate": _winrate_case,
+    "binary_score": _binary_case,
+    "pass_at_k": _pass_at_k_case,
+}
+
+
+@pytest.mark.parametrize("store", sorted(STORES))
+def test_store_replay_and_compaction_match_one_shot(spark, tmp_path, store):
+    """Three batches appended, one replayed under its original id: the
+    store read equals the one-shot operator over the union bit for bit,
+    column names and types included — and again after compact_cell_store, and again
+    after a replay into the compacted store."""
+    batches, append, reads = STORES[store](spark)
+    path = str(tmp_path / store)
+
+    def check():
+        for read, one_shot in reads:
+            got = read(spark, path)
+            assert got.dtypes == one_shot.dtypes
+            assert _rows(got) == _rows(one_shot)
+
+    for b, frames in enumerate(batches):
+        append(path, b, *frames)
+    append(path, 1, *batches[1])
+    assert spark.read.parquet(path).select("batch_id").distinct().count() == 3
+    check()
+    r = compact_cell_store(spark, path)
+    assert r["batches"] == 3 and r["rows_collapsed"] > 0
+    assert r["files_after"] == 1
+    check()
+    append(path, 2, *batches[2])
+    check()
