@@ -42,24 +42,48 @@ Semantics implemented (matching LightGBM's ``Tree::Predict``):
   raw scores go through softmax for ``multiclass``, sigmoid for ``binary``,
   identity otherwise.
 
-Traversal is vectorized over rows with NumPy (no Python-per-row loop): an
-integer ``node`` vector descends all rows simultaneously, masking out rows
-that already reached a leaf.  Tree depth bounds the loop, so scoring a batch
-is O(depth × n_rows) NumPy ops regardless of batch size.
+All trees are scored by one kernel, not a loop over trees.  On the first
+``predict_raw`` the forest is packed into one node table (internal nodes of
+every tree, then every leaf, with global child indices; a leaf's children
+point to itself, so a finished row stays put).  Each chunk of rows then
+advances an (n_rows × n_trees) node matrix one level per step, for the
+forest's maximum depth: a gather of each cell's decision input, one
+``<=`` against the node threshold and a gather of the child.  The
+missing-value and categorical rules never run inside that loop: per
+chunk, each (feature, missing rule) pair used by the forest becomes one
+input column with its missing values replaced by a value that routes
+them the default way, and each categorical node becomes a 0/1 column of
+its bitset decisions.  Chunks hold ``_CHUNK_CELLS`` (row × tree) cells,
+which keeps the working set small at any batch size.  Per-class sums
+add each class's trees in tree order, the order the SQL compiler
+(``corpus/mlqueries.py``) uses too, so the two agree bit for bit.
 """
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass, field
 
 import numpy as np
 
 _CATEGORICAL_MASK = 1
 _DEFAULT_LEFT_MASK = 2
-_MISSING_TYPE_NONE = 0
 _MISSING_TYPE_ZERO = 1
 _MISSING_TYPE_NAN = 2
+#: LightGBM's kZeroThreshold: under missing type Zero, |value| <= this is missing.
+_ZERO_THRESHOLD = 1e-35
+
+#: (row × tree) cells one traversal chunk holds: rows per chunk is
+#: ``max(1, _CHUNK_CELLS // n_trees)``.
+_CHUNK_CELLS = 131072
+
+# Missing-value rules of LightGBM NumericalDecision, by rule id: 0 missing
+# type None (a NaN is compared as 0.0), 1/2 Zero default left/right (a NaN
+# or |v| <= kZeroThreshold takes the default branch), 3/4 NaN default
+# left/right (a NaN takes it).  Replacing a missing value by -inf (default
+# left: -inf <= any threshold) or NaN (default right: NaN <= x is false)
+# turns every rule into the plain ``value <= threshold`` test.
+_RULE_FILL = np.array([0.0, -np.inf, np.nan, -np.inf, np.nan])
+_RULE_ZERO_IS_MISSING = np.array([False, True, True, False, False])
 
 
 @dataclass
@@ -81,79 +105,238 @@ class Tree:
     cat_boundaries: np.ndarray | None = None
     cat_threshold: np.ndarray | None = None
 
-    def _categorical_go_left(self, vals: np.ndarray, thr: np.ndarray) -> np.ndarray:
-        """Vectorized ``Tree::CategoricalDecision`` (LightGBM tree.h):
-        membership of ``trunc(value)`` in the node's uint32 bitset goes
-        left; NaN, negatives and out-of-range categories go right."""
-        # NaN -> -1 -> the int_fval < 0 "go right" branch (LightGBM's
-        # comment: "NaN is always in the right").
-        int_fval = np.trunc(np.where(np.isnan(vals), -1.0, vals)).astype(np.int64)
-        cat_idx = thr.astype(np.int64)
-        start = self.cat_boundaries[cat_idx]
-        n_words = self.cat_boundaries[cat_idx + 1] - start
-        word = int_fval >> 5
-        in_range = (int_fval >= 0) & (word < n_words)
-        safe_word = np.where(in_range, start + word, 0)
-        bit = (self.cat_threshold[safe_word] >> (int_fval & 31)) & 1
-        return in_range & (bit == 1)
 
-    def predict(self, features: np.ndarray) -> np.ndarray:
-        """Score a (n_rows, n_features) float64 matrix -> (n_rows,) raw values."""
-        n_rows = features.shape[0]
-        if self.num_leaves <= 1:
-            return np.full(n_rows, self.leaf_value[0], dtype=np.float64)
+def _concat(trees: list[Tree], name: str) -> np.ndarray:
+    return np.concatenate([getattr(t, name) for t in trees])
 
-        node = np.zeros(n_rows, dtype=np.int64)  # all rows start at the root
-        active = np.ones(n_rows, dtype=bool)
-        # depth can't exceed num_leaves - 1 for any binary tree
-        for _ in range(self.num_leaves):
-            if not active.any():
-                break
-            idx = node[active]
-            feat = self.split_feature[idx]
-            thr = self.threshold[idx]
-            dtyp = self.decision_type[idx]
-            vals = features[active, feat]
 
-            is_nan = np.isnan(vals)
-            missing_type = (dtyp >> 2) & 3
-            default_left = (dtyp & _DEFAULT_LEFT_MASK) != 0
-            # LightGBM NumericalDecision semantics:
-            #   missing_type != NaN  =>  NaN is converted to 0.0 first;
-            #   missing_type == Zero =>  |v| <= kZeroThreshold (1e-35) takes
-            #                            the default_left branch;
-            #   missing_type == NaN  =>  NaN takes the default_left branch.
-            num_vals = np.where(is_nan & (missing_type != _MISSING_TYPE_NAN), 0.0, vals)
-            use_default = (is_nan & (missing_type == _MISSING_TYPE_NAN)) | (
-                (missing_type == _MISSING_TYPE_ZERO) & (np.abs(num_vals) <= 1e-35)
+def _check_trees(trees: list[Tree], num_features: int) -> None:
+    """Reject a structurally malformed forest, as ``Booster::from_file``
+    does.  The packed kernel gathers from all trees' entries at once, so an
+    index past its own tree would read a neighbour's instead of failing."""
+    for i, t in enumerate(trees):
+        n_nodes = t.num_leaves - 1
+        if n_nodes < 0 or any(
+            len(a) != n_nodes
+            for a in (t.split_feature, t.threshold, t.decision_type, t.left_child, t.right_child)
+        ):
+            raise ValueError(
+                f"tree {i}: split_feature, threshold, decision_type, left_child and "
+                f"right_child must have num_leaves - 1 = {n_nodes} entries"
             )
-            go_left = np.where(use_default, default_left, num_vals <= thr)
+        if len(t.leaf_value) != t.num_leaves:
+            raise ValueError(
+                f"tree {i}: leaf_value has {len(t.leaf_value)} entries, "
+                f"expected num_leaves = {t.num_leaves}"
+            )
+        bounds = t.cat_boundaries
+        if bounds is None:
+            continue
+        if len(bounds) == 0 or bounds[0] != 0 or (np.diff(bounds) < 0).any():
+            raise ValueError(f"tree {i}: cat_boundaries must rise from 0")
+        if bounds[-1] != len(t.cat_threshold):
+            raise ValueError(
+                f"tree {i}: cat_boundaries does not cover cat_threshold: "
+                f"last offset {bounds[-1]} != {len(t.cat_threshold)} words"
+            )
+        cat_idx = t.threshold[(t.decision_type & _CATEGORICAL_MASK) != 0]
+        if not ((cat_idx >= 0) & (cat_idx < len(bounds) - 1)).all():
+            raise ValueError(
+                f"tree {i}: categorical split index outside [0, num_cat = {len(bounds) - 1})"
+            )
+    if not trees:
+        return
+    n_nodes = np.array([t.num_leaves - 1 for t in trees])
+    owner = np.repeat(np.arange(len(trees)), n_nodes)
 
-            is_cat = (dtyp & _CATEGORICAL_MASK) != 0
-            if is_cat.any():
-                # only categorical rows: a numeric node's threshold is not
-                # a categorical-split index
-                go_left[is_cat] = self._categorical_go_left(
-                    vals[is_cat], thr[is_cat]
-                )
+    def reject(bad: np.ndarray, tree_of: np.ndarray, what: str) -> None:
+        if bad.any():
+            raise ValueError(f"tree {tree_of[np.argmax(bad)]}: {what}")
 
-            nxt = np.where(go_left, self.left_child[idx], self.right_child[idx])
-            node[active] = nxt
-            active = node >= 0
+    has_cat_table = np.array([t.cat_boundaries is not None for t in trees])
+    is_cat = (_concat(trees, "decision_type") & _CATEGORICAL_MASK) != 0
+    reject(is_cat & ~has_cat_table[owner], owner, "decision_type marks a categorical "
+           "split but the tree has no cat_boundaries/cat_threshold section")
+    feature = _concat(trees, "split_feature")
+    reject((feature < 0) | (feature >= num_features), owner,
+           f"split_feature outside [0, num_features = {num_features})")
+    reject(~is_cat & np.isnan(_concat(trees, "threshold")), owner,
+           "numerical threshold is NaN")
+    # every node but the root, and every leaf, is the child of exactly one
+    # node, so the nodes a root reaches form a tree: no cycle, finite depth
+    kids = np.concatenate([_concat(trees, "left_child"), _concat(trees, "right_child")])
+    kid_owner = np.tile(owner, 2)
+    n_kid_nodes = n_nodes[kid_owner]
+    reject((kids >= n_kid_nodes) | (~kids > n_kid_nodes), kid_owner,
+           "child index out of range")
+    is_node = kids >= 0
+    node_base = np.cumsum(n_nodes) - n_nodes
+    node_refs = np.bincount(
+        node_base[kid_owner[is_node]] + kids[is_node], minlength=len(owner)
+    )
+    node_refs[node_base[n_nodes > 0]] += 1  # the roots, which no node references
+    reject(node_refs != 1, owner, "a node is not referenced exactly once")
+    leaf_owner = np.repeat(np.arange(len(trees)), n_nodes + 1)
+    leaf_base = np.cumsum(n_nodes + 1) - (n_nodes + 1)
+    leaf_refs = np.bincount(
+        leaf_base[kid_owner[~is_node]] + ~kids[~is_node], minlength=len(leaf_owner)
+    )
+    leaf_refs[leaf_base[n_nodes == 0]] += 1  # a one-leaf tree's root
+    reject(leaf_refs != 1, leaf_owner, "a leaf is not referenced exactly once")
 
-        leaf_idx = -node - 1  # ~c for negative child encoding
-        return self.leaf_value[leaf_idx]
+
+class _PackedForest:
+    """Every tree of a model in one node table, scored level by level.
+
+    Node ids are global: the internal nodes of all trees (tree by tree),
+    then all leaves (tree by tree).  Per node: the decision-input column
+    it reads, its threshold, its two children (``children[2 * id]`` right,
+    ``children[2 * id + 1]`` left; a leaf's both point to itself) and its
+    leaf value (0 for internal nodes).
+    """
+
+    def __init__(self, trees: list[Tree], per_iteration: int) -> None:
+        n_nodes = np.array([t.num_leaves - 1 for t in trees])
+        n_leaves = n_nodes + 1
+        total_nodes, total_leaves = int(n_nodes.sum()), int(n_leaves.sum())
+        node_base = np.cumsum(n_nodes) - n_nodes
+        leaf_base = total_nodes + np.cumsum(n_leaves) - n_leaves
+        owner = np.repeat(np.arange(len(trees)), n_nodes)
+
+        def global_id(child: np.ndarray) -> np.ndarray:
+            return np.where(
+                child >= 0, node_base[owner] + child, leaf_base[owner] + ~child
+            )
+
+        feature = _concat(trees, "split_feature")
+        threshold = _concat(trees, "threshold").astype(np.float64)
+        dtype = _concat(trees, "decision_type")
+        is_cat = (dtype & _CATEGORICAL_MASK) != 0
+        missing = (dtype >> 2) & 3
+        default_right = (dtype & _DEFAULT_LEFT_MASK) == 0
+        rule = np.select(
+            [missing == _MISSING_TYPE_ZERO, missing == _MISSING_TYPE_NAN],
+            [1 + default_right, 3 + default_right],
+            0,
+        )
+
+        # decision inputs: one column per (feature, rule) of a numerical
+        # node, then one 0/1 (left/right) column per categorical node
+        keys, num_column = np.unique(
+            feature[~is_cat] * len(_RULE_FILL) + rule[~is_cat], return_inverse=True
+        )
+        self.in_feature = keys // len(_RULE_FILL)
+        self.in_fill = _RULE_FILL[keys % len(_RULE_FILL)]
+        self.in_zero_missing = _RULE_ZERO_IS_MISSING[keys % len(_RULE_FILL)]
+        column = np.empty(total_nodes, dtype=np.int64)
+        column[~is_cat] = num_column
+        column[is_cat] = len(keys) + np.arange(int(is_cat.sum()))
+        self.n_inputs = len(keys) + int(is_cat.sum())
+
+        # categorical nodes: their feature and word range in one table of
+        # every tree's bitset words (plus a trailing zero word, the target of
+        # out-of-range lookups)
+        cat_trees = [t for t in trees if t.cat_boundaries is not None]
+        has_cat = np.array([t.cat_boundaries is not None for t in trees])
+        n_words = np.zeros(len(trees), dtype=np.int64)
+        n_words[has_cat] = [len(t.cat_threshold) for t in cat_trees]
+        n_bounds = np.zeros(len(trees), dtype=np.int64)
+        n_bounds[has_cat] = [len(t.cat_boundaries) for t in cat_trees]
+        self.cat_words = np.concatenate(
+            [t.cat_threshold for t in cat_trees] + [np.zeros(1)]
+        ).astype(np.int64)
+        bounds = np.concatenate(
+            [t.cat_boundaries for t in cat_trees] + [np.zeros(0)]
+        ).astype(np.int64)
+        cat_owner = owner[is_cat]
+        at = (np.cumsum(n_bounds) - n_bounds)[cat_owner] + threshold[is_cat].astype(np.int64)
+        self.cat_feature = feature[is_cat]
+        self.cat_start = (np.cumsum(n_words) - n_words)[cat_owner] + bounds[at]
+        self.cat_n_words = bounds[at + 1] - bounds[at]
+
+        n_total = total_nodes + total_leaves
+        leaf_ids = np.arange(total_nodes, n_total)
+        self.column = np.concatenate([column, np.zeros(total_leaves, dtype=np.int64)])
+        # a categorical column holds 0.0 for left, 1.0 for right
+        self.threshold = np.concatenate(
+            [np.where(is_cat, 0.0, threshold), np.zeros(total_leaves)]
+        )
+        left = np.concatenate([global_id(_concat(trees, "left_child")), leaf_ids])
+        right = np.concatenate([global_id(_concat(trees, "right_child")), leaf_ids])
+        self.children = np.stack([right, left], axis=1).ravel()
+        self.value = np.concatenate(
+            [np.zeros(total_nodes), _concat(trees, "leaf_value").astype(np.float64)]
+        )
+        roots = np.where(n_nodes > 0, node_base, leaf_base)
+        # pad to whole iterations with trees that are one 0.0 leaf
+        pad = -len(trees) % per_iteration
+        if pad:
+            self.column = np.append(self.column, 0)
+            self.threshold = np.append(self.threshold, 0.0)
+            self.children = np.append(self.children, [n_total, n_total])
+            self.value = np.append(self.value, 0.0)
+            roots = np.append(roots, np.full(pad, n_total))
+        self.roots = roots
+        self.n_trees = len(roots)
+
+        # the deepest root-to-leaf path bounds the level loop
+        self.depth = 0
+        frontier = roots[roots < total_nodes]
+        while frontier.size:
+            self.depth += 1
+            kids = np.concatenate([left[frontier], right[frontier]])
+            frontier = kids[kids < total_nodes]
+
+    def _decision_inputs(self, x: np.ndarray) -> np.ndarray:
+        """(n_rows, n_inputs): each numerical column with its missing values
+        replaced by the value that routes them, then each categorical
+        node's decision."""
+        cols = x[:, self.in_feature]
+        missing = np.isnan(cols)
+        if self.in_zero_missing.any():
+            missing |= self.in_zero_missing & (np.abs(cols) <= _ZERO_THRESHOLD)
+        np.copyto(cols, np.broadcast_to(self.in_fill, cols.shape), where=missing)
+        if not self.cat_feature.size:
+            return cols
+        # LightGBM CategoricalDecision: trunc(value) in the node's uint32
+        # bitset goes left; NaN (as -1), negatives and categories past the
+        # bitset's words go right
+        vals = x[:, self.cat_feature]
+        int_fval = np.trunc(np.where(np.isnan(vals), -1.0, vals)).astype(np.int64)
+        word = int_fval >> 5
+        in_range = (int_fval >= 0) & (word < self.cat_n_words)
+        bits = self.cat_words[np.where(in_range, self.cat_start + word, -1)]
+        go_left = in_range & (((bits >> (int_fval & 31)) & 1) == 1)
+        return np.concatenate([cols, (~go_left).astype(np.float64)], axis=1)
+
+    def leaf_values(self, x: np.ndarray) -> np.ndarray:
+        """(n_rows, n_trees): the leaf value every row reaches in every tree."""
+        inputs = self._decision_inputs(x).ravel()
+        row_base = (np.arange(len(x)) * self.n_inputs)[:, None]
+        node = np.broadcast_to(self.roots, (len(x), self.n_trees))
+        for _ in range(self.depth):
+            go_left = inputs[self.column[node] + row_base] <= self.threshold[node]
+            node = self.children[2 * node + go_left]
+        return self.value[node]
 
 
 @dataclass
 class LightGBMModel:
-    """A parsed LightGBM text-format model (ensemble of :class:`Tree`)."""
+    """A parsed LightGBM text-format model (ensemble of :class:`Tree`).
+
+    Construction validates the trees' structure (``ValueError``)."""
 
     num_class: int
     num_tree_per_iteration: int
     max_feature_idx: int
     objective: str
     trees: list[Tree] = field(default_factory=list)
+    _forest: _PackedForest | None = field(
+        default=None, init=False, repr=False, compare=False
+    )
+
+    def __post_init__(self) -> None:
+        _check_trees(self.trees, self.num_features)
 
     @property
     def num_features(self) -> int:
@@ -174,12 +357,22 @@ class LightGBMModel:
             raise ValueError(
                 f"model expects {self.num_features} features, got {features.shape[1]}"
             )
-        n_rows = features.shape[0]
-        k = max(self.num_tree_per_iteration, 1)
-        raw = np.zeros((n_rows, self.n_outputs), dtype=np.float64)
-        for t_idx, tree in enumerate(self.trees):
-            cls = t_idx % k if self.n_outputs > 1 else 0
-            raw[:, cls] += tree.predict(features)
+        raw = np.zeros((features.shape[0], self.n_outputs), dtype=np.float64)
+        if not self.trees:
+            return raw
+        # tree t adds to class t % k
+        k = max(self.num_tree_per_iteration, 1) if self.n_outputs > 1 else 1
+        if self._forest is None:  # packed once per model, on first use
+            self._forest = _PackedForest(self.trees, k)
+        forest = self._forest
+        step = max(1, _CHUNK_CELLS // forest.n_trees)
+        for start in range(0, len(features), step):
+            leaf = forest.leaf_values(features[start:start + step])
+            # a sequential cumsum over iterations adds each class's trees in
+            # tree order; sum() would pair them and change the last bit
+            raw[start:start + step, :k] += (
+                leaf.reshape(len(leaf), -1, k).cumsum(axis=1)[:, -1]
+            )
         return raw
 
     def predict(self, features: np.ndarray) -> np.ndarray:
@@ -236,16 +429,6 @@ def parse_model_str(text: str) -> LightGBMModel:
                     f"cat_boundaries has {len(cat_boundaries)} entries, "
                     f"expected num_cat + 1 = {num_cat + 1}"
                 )
-            if cat_boundaries[-1] != len(cat_threshold):
-                raise ValueError(
-                    "cat_boundaries does not cover cat_threshold: "
-                    f"last offset {cat_boundaries[-1]} != {len(cat_threshold)} words"
-                )
-        elif (dtyp & _CATEGORICAL_MASK).any():
-            raise ValueError(
-                "decision_type marks a categorical split but the tree has no "
-                "cat_boundaries/cat_threshold section"
-            )
         trees.append(
             Tree(
                 num_leaves=num_leaves,
@@ -312,6 +495,3 @@ def load_model(path: str) -> LightGBMModel:
     with open(path, "r", encoding="utf-8") as fh:
         return parse_model_str(fh.read())
 
-
-def sigmoid(x: float) -> float:
-    return 1.0 / (1.0 + math.exp(-x))

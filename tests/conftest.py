@@ -2,6 +2,13 @@ import os
 import sys
 
 import pytest
+from hypothesis import settings
+
+# `HYPOTHESIS_PROFILE=ci` (set by the CI workflow): a failing property
+# test prints the blob that reproduces it (@reproduce_failure), and no
+# example fails for slowness on a loaded runner.
+settings.register_profile("ci", print_blob=True, deadline=None)
+settings.load_profile(os.environ.get("HYPOTHESIS_PROFILE", "default"))
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO_ROOT not in sys.path:

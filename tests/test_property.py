@@ -1,10 +1,10 @@
 """Property-based tests (hypothesis).
 
-The scorer's vectorized tree traversal is checked against an
-independent scalar walker implementing the LightGBM decision rules
-directly — any vectorization/masking bug shows up as a divergence on
-some random tree x row combination (NaN, zeros, and boundary values
-included by construction).
+The scorer's packed-forest traversal is checked against an independent
+scalar walker implementing the LightGBM decision rules directly — any
+vectorization/masking bug shows up as a divergence on some random
+forest x row combination (NaN, zeros, boundary values and out-of-range
+categories included by construction).
 """
 
 import math
@@ -15,16 +15,34 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from lightfusion_spark.frontdoor import rewrite_array_literals
-from lightfusion_spark.ml.lgbm_model import Tree
+from lightfusion_spark.ml import lgbm_model
+from lightfusion_spark.ml.lgbm_model import LightGBMModel, Tree
 from lightfusion_spark.operators.dedup import _MINHASH_MOD
+from tests.test_scorer import one_tree_model
 
 
 def scalar_tree_walk(tree: Tree, row: np.ndarray) -> float:
-    """Reference implementation: LightGBM NumericalDecision, one row."""
+    """Reference implementation: LightGBM NumericalDecision and
+    CategoricalDecision, one row."""
+    if tree.num_leaves == 1:
+        return float(tree.leaf_value[0])
     node = 0
     while node >= 0:
         v = float(row[tree.split_feature[node]])
         dtyp = int(tree.decision_type[node])
+        if dtyp & 1:
+            # trunc(v) in the bitset goes left; NaN and negatives go right
+            go_left = False
+            if not math.isnan(v) and int(v) >= 0:
+                cat = int(tree.threshold[node])
+                start = int(tree.cat_boundaries[cat])
+                n_words = int(tree.cat_boundaries[cat + 1]) - start
+                word, bit = divmod(int(v), 32)
+                go_left = word < n_words and (
+                    int(tree.cat_threshold[start + word]) >> bit
+                ) & 1 == 1
+            node = int(tree.left_child[node] if go_left else tree.right_child[node])
+            continue
         missing_type = (dtyp >> 2) & 3
         default_left = bool(dtyp & 2)
         if math.isnan(v) and missing_type != 2:
@@ -97,9 +115,112 @@ def tree_and_rows(draw):
 @settings(max_examples=200, deadline=None)
 def test_vectorized_traversal_matches_scalar_walk(tr):
     tree, rows = tr
-    got = tree.predict(rows)
+    got = one_tree_model(tree, rows.shape[1]).predict_raw(rows)[:, 0]
     expected = [scalar_tree_walk(tree, row) for row in rows]
     assert got.tolist() == expected
+
+
+# Leaf-wise forests: each tree grows by splitting a drawn leaf, up to 31
+# leaves, with numerical nodes under every missing type x default
+# direction and categorical nodes with bitsets of one to three words.
+_THRESHOLDS = st.one_of(
+    st.sampled_from([-1.5, -0.0, 0.0, 1e-36, 0.5, 2.0, 33.0]),
+    st.floats(min_value=-10, max_value=10, allow_nan=False),
+)
+
+
+@st.composite
+def leafwise_trees(draw, n_features):
+    n_leaves = draw(st.integers(1, 31))
+    feature, threshold, dtype, left, right = [], [], [], [], []
+    bounds, words = [0], []
+    parent = [None]  # per leaf: (node, is_left) it hangs from
+    for new_leaf in range(1, n_leaves):
+        leaf = draw(st.integers(0, new_leaf - 1))
+        node = len(feature)
+        if parent[leaf] is not None:
+            p, is_left = parent[leaf]
+            (left if is_left else right)[p] = node
+        left.append(~leaf)
+        right.append(~new_leaf)
+        parent[leaf] = (node, True)
+        parent.append((node, False))
+        feature.append(draw(st.integers(0, n_features - 1)))
+        # missing type (bits 2-3) and default-left (bit 1) are drawn for
+        # categorical nodes too, where the decision must ignore them
+        flags = draw(st.sampled_from([0, 1, 2])) << 2 | draw(st.booleans()) << 1
+        if draw(st.booleans()):
+            threshold.append(float(len(bounds) - 1))
+            words += draw(st.lists(st.integers(0, 2**32 - 1), min_size=1, max_size=3))
+            bounds.append(len(words))
+            dtype.append(flags | 1)
+        else:
+            threshold.append(draw(_THRESHOLDS))
+            dtype.append(flags)
+    has_cat = len(bounds) > 1
+    return Tree(
+        num_leaves=n_leaves,
+        split_feature=np.array(feature, dtype=np.int64),
+        threshold=np.array(threshold, dtype=np.float64),
+        decision_type=np.array(dtype, dtype=np.int64),
+        left_child=np.array(left, dtype=np.int64),
+        right_child=np.array(right, dtype=np.int64),
+        leaf_value=np.array(
+            draw(st.lists(st.floats(-5, 5), min_size=n_leaves, max_size=n_leaves))
+        ),
+        cat_boundaries=np.array(bounds, dtype=np.int64) if has_cat else None,
+        cat_threshold=np.array(words, dtype=np.int64) if has_cat else None,
+    )
+
+
+@st.composite
+def forest_and_rows(draw):
+    n_features = draw(st.integers(1, 5))
+    num_class = draw(st.sampled_from([1, 3]))
+    n_iter = draw(st.integers(1, 3))
+    trees = [draw(leafwise_trees(n_features)) for _ in range(num_class * n_iter)]
+    model = LightGBMModel(
+        num_class=num_class,
+        num_tree_per_iteration=num_class,
+        max_feature_idx=n_features - 1,
+        objective="",
+        trees=trees,
+    )
+    on_threshold = [float(x) for t in trees for x in t.threshold] or [0.5]
+    value = st.one_of(
+        st.sampled_from([float("nan"), 0.0, -0.0, 1e-40, 1e-35, -1e-35, -1e-34]),
+        st.sampled_from(on_threshold),
+        # categories: negative, fractional, past a three-word bitset
+        st.sampled_from([-3.0, -0.5, 2.7, 31.0, 32.0, 95.0, 96.0, 1000.0]),
+        st.floats(min_value=-50, max_value=50),
+    )
+    pool = np.array(
+        draw(st.lists(
+            st.lists(value, min_size=n_features, max_size=n_features),
+            min_size=1, max_size=7,
+        )),
+        dtype=np.float64,
+    )
+    return model, pool
+
+
+@given(forest_and_rows())
+@settings(max_examples=100, deadline=None)
+def test_packed_forest_matches_scalar_walk(mr):
+    """``predict_raw`` == the per-class sum, in tree order, of the scalar
+    walk, bit for bit; at 1 row, at 64 rows and past a chunk boundary
+    (rows tile a small pool, so chunks see rows at every offset)."""
+    model, pool = mr
+    k = model.n_outputs
+    expected = np.zeros((len(pool), k))
+    for r, row in enumerate(pool):
+        for t, tree in enumerate(model.trees):
+            expected[r, t % k] += scalar_tree_walk(tree, row)
+    chunk_rows = lgbm_model._CHUNK_CELLS // len(model.trees)
+    for n_rows in (1, 64, chunk_rows + 3):
+        got = model.predict_raw(np.resize(pool, (n_rows, pool.shape[1])))
+        want = np.resize(expected, (n_rows, k))
+        assert (got == want).all(), (n_rows, np.argwhere(got != want)[:3])
 
 
 @given(st.integers(0, 2**56 - 1), st.integers(0, 7))

@@ -11,7 +11,7 @@ import numpy as np
 import pytest
 
 from lightfusion_spark.ml.fixture import build_model_text
-from lightfusion_spark.ml.lgbm_model import Tree, parse_model_str
+from lightfusion_spark.ml.lgbm_model import LightGBMModel, Tree, parse_model_str
 
 SIMPLE_MODEL = """tree
 version=v4
@@ -35,6 +35,18 @@ shrinkage=1
 
 end of trees
 """
+
+
+def one_tree_model(tree: Tree, n_features: int) -> LightGBMModel:
+    """A regression model of ``tree`` alone: its ``predict_raw`` column is
+    the tree's output."""
+    return LightGBMModel(
+        num_class=1,
+        num_tree_per_iteration=1,
+        max_feature_idx=n_features - 1,
+        objective="regression",
+        trees=[tree],
+    )
 
 
 def test_parse_header_and_tree():
@@ -86,7 +98,7 @@ def test_single_leaf_tree():
         right_child=np.empty(0, np.int64),
         leaf_value=np.array([7.5]),
     )
-    assert t.predict(np.zeros((3, 2))).tolist() == [7.5, 7.5, 7.5]
+    assert one_tree_model(t, 2).predict_raw(np.zeros((3, 2)))[:, 0].tolist() == [7.5, 7.5, 7.5]
 
 
 def test_multiclass_softmax_hand_computed():
@@ -221,16 +233,18 @@ def test_categorical_mixed_with_numerical():
     assert len(m.trees) == 4 and m.num_features == 5
     t0 = m.trees[0]  # cats {0,2,5,7,11,13,17,19}; below: n_words <= 20
     assert list(t0.cat_boundaries) == [0, 1]
+    m0 = one_tree_model(t0, m.num_features)
     # source 2 (in set), n_words 10 <= 20 -> leaf 0 = -(-0.35) = 0.35
-    assert t0.predict(np.array([[10.0, 5.0, 0.01, 0.1, 2.0]]))[0] == 0.35
+    assert m0.predict_raw(np.array([[10.0, 5.0, 0.01, 0.1, 2.0]]))[0, 0] == 0.35
     # source 2, n_words 30 -> leaf 2 = -(0.45) = -0.45
-    assert t0.predict(np.array([[30.0, 5.0, 0.01, 0.1, 2.0]]))[0] == -0.45
+    assert m0.predict_raw(np.array([[30.0, 5.0, 0.01, 0.1, 2.0]]))[0, 0] == -0.45
     # source 3 (not in set) -> right -> leaf 1 = -(0.12) = -0.12
-    assert t0.predict(np.array([[10.0, 5.0, 0.01, 0.1, 3.0]]))[0] == -0.12
+    assert m0.predict_raw(np.array([[10.0, 5.0, 0.01, 0.1, 3.0]]))[0, 0] == -0.12
     t2 = m.trees[2]  # iteration 1 class 0: cats {1,4,9,16,33}, two words
     assert list(t2.cat_boundaries) == [0, 2]
-    assert t2.predict(np.array([[10.0, 5.0, 0.5, 0.1, 33.0]]))[0] != \
-        t2.predict(np.array([[10.0, 5.0, 0.5, 0.1, 32.0]]))[0]
+    m2 = one_tree_model(t2, m.num_features)
+    assert m2.predict_raw(np.array([[10.0, 5.0, 0.5, 0.1, 33.0]]))[0, 0] != \
+        m2.predict_raw(np.array([[10.0, 5.0, 0.5, 0.1, 32.0]]))[0, 0]
 
 
 MIXED_CAT_MODEL = """tree
@@ -287,6 +301,61 @@ def test_categorical_malformed_rejected():
     bad2 = CAT_MODEL.replace("cat_boundaries=0 1 3", "cat_boundaries=0 1")
     with pytest.raises(ValueError, match="cat_boundaries"):
         parse_model_str(bad2)
+
+
+@pytest.mark.parametrize(
+    "field, bad, match",
+    [
+        ("split_feature=0 1", "split_feature=0", "num_leaves - 1 = 2 entries"),
+        ("leaf_value=10 20 30", "leaf_value=10 20", "leaf_value has 2 entries"),
+        ("split_feature=0 1", "split_feature=0 2", r"split_feature outside \[0, num_features = 2\)"),
+        ("split_feature=0 1", "split_feature=-1 1", "split_feature outside"),
+        ("left_child=1 -1", "left_child=2 -1", "child index out of range"),
+        ("right_child=-2 -3", "right_child=-2 -4", "child index out of range"),
+        # leaf 1 twice, leaf 2 never
+        ("right_child=-2 -3", "right_child=-2 -2", "a leaf is not referenced exactly once"),
+        # node 1 is its own child: a cycle
+        ("left_child=1 -1", "left_child=1 1", "a node is not referenced exactly once"),
+        # the root is a child of node 1
+        ("right_child=-2 -3", "right_child=-2 0", "a node is not referenced exactly once"),
+        ("threshold=0.5 1.5", "threshold=nan 1.5", "numerical threshold is NaN"),
+    ],
+)
+def test_malformed_structure_rejected(field, bad, match):
+    """parse_model_str rejects a tree whose indices leave it (the packed
+    scorer would read a neighbouring tree's entries instead of failing),
+    so CREATE FUNCTION fails as it does on a model Booster::from_file
+    cannot load."""
+    assert field in SIMPLE_MODEL
+    with pytest.raises(ValueError, match=match):
+        parse_model_str(SIMPLE_MODEL.replace(field, bad))
+
+
+@pytest.mark.parametrize(
+    "field, bad, match",
+    [
+        # categorical split index 2 with num_cat = 2
+        ("threshold=0 1", "threshold=0 2", r"categorical split index outside \[0, num_cat = 2\)"),
+        ("threshold=0 1", "threshold=-1 1", "categorical split index outside"),
+        ("cat_boundaries=0 1 3", "cat_boundaries=1 1 3", "cat_boundaries must rise from 0"),
+        ("cat_boundaries=0 1 3", "cat_boundaries=0 4 3", "cat_boundaries must rise from 0"),
+        ("cat_boundaries=0 1 3", "cat_boundaries=0 1 2", "cat_boundaries does not cover"),
+    ],
+)
+def test_malformed_categorical_rejected(field, bad, match):
+    assert field in CAT_MODEL
+    with pytest.raises(ValueError, match=match):
+        parse_model_str(CAT_MODEL.replace(field, bad))
+
+
+def test_wider_feature_matrix_scores_like_exact_width():
+    """Columns past the model's features are ignored: the row stride is
+    the matrix's width, not the model's feature count."""
+    for text in (SIMPLE_MODEL, CAT_MODEL, MIXED_CAT_MODEL):
+        m = parse_model_str(text)
+        x = np.array([[0.0, 1.0], [2.0, 33.0], [np.nan, 9.0], [5.0, 3.0]])
+        wide = np.hstack([x, np.full((4, 3), 1e9)])
+        assert m.predict_raw(wide).tolist() == m.predict_raw(x).tolist()
 
 
 def test_feature_count_validation():
