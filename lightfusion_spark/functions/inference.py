@@ -1,4 +1,4 @@
-"""LightGBM inference as an Arrow-vectorized pandas UDF.
+"""LightGBM inference as an Arrow-native Spark UDF.
 
 Reference counterpart: the ``LightfusionUdf`` scalar UDF (``src/udf.rs``):
 Arrow ``List<Float>`` column in, micro-batched ``Booster::predict`` calls,
@@ -6,11 +6,15 @@ Arrow ``List<Float>`` column in, micro-batched ``Booster::predict`` calls,
 
 Spark-first design decisions:
 
-* **Iterator-of-series pandas UDF** — Arrow batches stream through one
-  Python worker call per partition, and the model is resolved *once per
-  partition* instead of once per batch.  This is the Spark-idiomatic
-  equivalent of the reference's session-lifetime ``Booster`` shared across
-  threads (``src/lib.rs:64``, ``src/udf.rs:100-112``).
+* **Iterator Arrow UDF** (``F.arrow_udf`` over ``Iterator[pa.Array]``) —
+  Arrow batches stream through one Python worker call per partition, and
+  the model is resolved *once per partition* instead of once per batch.
+  This is the Spark-idiomatic equivalent of the reference's
+  session-lifetime ``Booster`` shared across threads (``src/lib.rs:64``,
+  ``src/udf.rs:100-112``).  Features are read straight from the list
+  column's offsets and flat values buffer and the ``List<Float64>`` output
+  is built in one piece (``src/udf.rs:200-221``); no pandas object or
+  per-row Python object is made in either direction.
 * **Per-executor model cache** — a module-level registry keyed by model
   path and content digest; each executor process parses the shipped
   model text once, on first use.
@@ -37,9 +41,10 @@ import hashlib
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import ArrayType, DoubleType
 
 from .. import config as lf_config
@@ -48,6 +53,10 @@ from ..ml.lgbm_model import LightGBMModel, parse_model_str
 
 SUPPORTED_INPUT_TYPES = {"float", "double"}
 SUPPORTED_RETURN_TYPES = {"double"}
+
+#: The Arrow type Spark expects back for ``ARRAY<DOUBLE>``; the output is
+#: built as exactly this type so the worker never casts it.
+_OUTPUT_TYPE = to_arrow_type(ArrayType(DoubleType()))
 
 # Per-process (executor-side) model cache keyed by (path, content digest), so
 # re-creating a function after the model file changed never serves a stale
@@ -63,35 +72,37 @@ def _get_model(cache_key: tuple[str, str], model_text: str) -> LightGBMModel:
     return model
 
 
-def _assemble_features(series: pd.Series, n_features: int) -> np.ndarray:
-    """Series of per-row float vectors -> one (n_rows, n_features) tensor.
+def _assemble_features(arr: pa.Array, n_features: int) -> np.ndarray:
+    """Arrow ``list<float|double>`` batch -> one (n_rows, n_features) tensor.
 
-    The analogue of the reference's zero-copy slice over the Arrow list
-    array's flat values buffer (``src/udf.rs:213-217``): Arrow hands pandas
-    one ndarray per row; a single C-level ``np.concatenate`` + ``reshape``
-    builds the tensor without a per-row Python loop.
+    The reference's slice over the list array's flat values buffer
+    (``src/udf.rs:213-217``): the rows' values are the contiguous range
+    ``offsets[0]:offsets[-1]`` of the values child (so sliced arrays read
+    only their own rows), viewed without a per-row Python object and
+    reshaped.  Every row's length is checked from the offsets, so rows of
+    compensating wrong lengths cannot shift features across rows.
 
     Null semantics (SURVEY §7.6 — the reference declares list items
     non-null and never checks, ``src/udf.rs:70``): a NULL *array* is a hard,
-    clearly-worded error; a NULL *element* arrives as NaN and flows into the
+    clearly-worded error; a NULL *element* becomes NaN and flows into the
     model's missing-value routing.
     """
-    arrs = series.to_numpy()
-    null_mask = pd.isnull(arrs)
-    if null_mask.any():
+    if arr.null_count:
         raise ValueError(
-            f"lightfusion inference: {int(null_mask.sum())} of {len(arrs)} input "
+            f"lightfusion inference: {arr.null_count} of {len(arr)} input "
             "rows have a NULL feature array; feature vectors must be non-null "
             f"ARRAY<FLOAT|DOUBLE> of length {n_features}"
         )
-    flat = np.concatenate(arrs, dtype=np.float64, casting="unsafe")
-    if flat.size != len(arrs) * n_features:
-        lengths = {len(a) for a in arrs}
+    offsets = arr.offsets.to_numpy()
+    lengths = np.diff(offsets)
+    if (lengths != n_features).any():
         raise ValueError(
-            f"lightfusion inference: feature vector length(s) {sorted(lengths)} "
-            f"!= model n_features {n_features}"
+            f"lightfusion inference: feature vector length(s) "
+            f"{sorted(set(lengths.tolist()))} != model n_features {n_features}"
         )
-    return flat.reshape(len(arrs), n_features)
+    start, end = int(offsets[0]), int(offsets[-1])
+    flat = arr.values.slice(start, end - start).to_numpy(zero_copy_only=False)
+    return flat.astype(np.float64, copy=False).reshape(len(arr), n_features)
 
 
 #: Models larger than this ride as a SparkContext broadcast (torrent-style
@@ -107,7 +118,7 @@ def make_lightgbm_udf(
     return_type: str = "double",
     spark: SparkSession | None = None,
 ):
-    """Build the inference pandas UDF for one registered function.
+    """Build the inference Arrow UDF for one registered function.
 
     The model text ships to executors, so they never need the driver's
     filesystem.  Small models embed in the UDF closure; past
@@ -145,22 +156,23 @@ def make_lightgbm_udf(
     n_features = model.num_features
     del model, text
 
-    @F.pandas_udf(ArrayType(DoubleType()))
-    def predict(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+    @F.arrow_udf(ArrayType(DoubleType()))
+    def predict(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
         shipped = model_broadcast.value if model_broadcast is not None else model_text
         mdl = _get_model(cache_key, shipped)
-        for series in batches:
-            n_rows = len(series)
-            if n_rows == 0:
-                yield pd.Series([], dtype=object)
-                continue
-            feats = _assemble_features(series, n_features)
-            out = np.empty((n_rows, mdl.n_outputs), dtype=np.float64)
+        k = mdl.n_outputs
+        for batch in batches:
+            # In-process callers may hand over a pandas Series of row arrays.
+            arr = batch if isinstance(batch, pa.Array) else pa.array(batch)
+            feats = _assemble_features(arr, n_features)
+            n_rows = len(feats)
+            out = np.empty((n_rows, k), dtype=np.float64)
             # Micro-batching loop with partial tail chunk (src/udf.rs:181-192,209)
             for start in range(0, n_rows, batch_size):
                 end = min(start + batch_size, n_rows)
                 out[start:end] = mdl.predict(feats[start:end])
-            yield pd.Series(list(out))
+            offsets = np.arange(0, (n_rows + 1) * k, k, dtype=np.int32)
+            yield pa.ListArray.from_arrays(offsets, out.ravel(), type=_OUTPUT_TYPE)
 
     return predict
 

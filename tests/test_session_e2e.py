@@ -202,6 +202,19 @@ def test_ragged_vector_errors(engine):
         engine.sql("SELECT frag(v) AS p FROM ragged_input").collect()
 
 
+def test_compensating_ragged_vectors_error(engine):
+    """Rows one short and one long hold two rows' worth of values; each row's
+    length is checked, so no row is scored on its neighbour's features."""
+    engine.sql(f"CREATE FUNCTION frag2(DOUBLE[]) LANGUAGE LIGHTGBM AS '{MODEL_PATH}'")
+    df = engine.spark.createDataFrame(
+        [(1, [1.0] * (N_FEATURES - 1)), (2, [2.0] * (N_FEATURES + 1))],
+        "id int, v array<double>",
+    ).coalesce(1)
+    df.createOrReplaceTempView("ragged_pair_input")
+    with pytest.raises(Exception, match="n_features"):
+        engine.sql("SELECT frag2(v) AS p FROM ragged_pair_input").collect()
+
+
 def test_external_table_ddl_verbatim(engine):
     """The reference's exact TSV flow (examples/lightfusion_tsv.rs:20-63)
     runs through the front-door DDL text unchanged."""
