@@ -13,7 +13,21 @@ Extensions: large-scale training-data pipeline operators (dedup, similarity
 search, text analysis, multimodal column plumbing) under ``operators/``.
 """
 
-from .session import LightFusionSession, configure_session
+from ._worker_imports import install as _install_worker_imports
 
 __version__ = "0.1.0"
 __all__ = ["configure_session", "LightFusionSession", "__version__"]
+
+# Inside a Spark task (a worker unpickling one of the package's UDFs), stop
+# every later task from re-reading the worker's zip archives.
+_install_worker_imports()
+
+
+def __getattr__(name):
+    # Lazy (PEP 562): a worker importing ``functions.inference`` never loads
+    # the driver-side session / frontdoor modules.
+    if name in ("configure_session", "LightFusionSession"):
+        from . import session
+
+        return getattr(session, name)
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
