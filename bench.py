@@ -1,16 +1,22 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR.
 
-Prints ONE JSON line:
+Usage:  python bench.py [name ...] [--explain DIR]
+
+Times the named faces (default: every entry of ``BENCH_QUERIES``) and
+prints ONE JSON line:
   {"metric": "total_wall_sec", "value": N, "unit": "sec",
    "queries": {"<name>": sec, ...}, "sf": <scale factor>}
 
 When the per-query name->sec map would push the line past the recorder's
 ~2000-char tail window (134 query names do not fit), ``queries`` is
 emitted empty and the per-query data instead rides ``"qv"``: a positional
-array of CENTISECOND integers, one per entry of ``BENCH_QUERIES`` in
-order (``qv[i] == round(seconds * 100)`` for ``BENCH_QUERIES[i]``).  The
-full-detail map (seconds, spread, sample counts) is always written to
-``BENCH_LAST.json`` alongside.
+array of CENTISECOND integers, one per timed name in order
+(``qv[i] == round(seconds * 100)`` for the i-th name).  The full-detail
+record is always written to ``BENCH_LAST.json`` alongside: per face the
+best sample's seconds, its ``build`` / ``exec`` split and Spark ``jobs``
+count, the ``spread`` and ``samples`` count, plus the session's per-action
+``floor`` (a trivial noop write).  ``--explain DIR`` also writes each
+face's ``explain("formatted")`` to ``DIR/<name>.txt``.
 
 Each query is materialized with the noop sink (full plan executes, no
 driver collect, no result materialization cost), after a small warmup
@@ -19,6 +25,7 @@ that absorbs JVM/codegen startup.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -187,31 +194,130 @@ BENCH_QUERIES = [
 ]
 
 
+def _noop(df) -> float:
+    """Run ``df`` into the noop sink (the full plan executes, nothing is
+    collected); returns the seconds it took."""
+    t0 = time.time()
+    df.write.format("noop").mode("overwrite").save()
+    return time.time() - t0
+
+
+def _two_best_gap(samples: list[float]) -> float:
+    if len(samples) < 2:  # single-run mode (SPARK_GRAFT_BENCH_RUNS=1)
+        return 0.0
+    lo = sorted(samples)
+    return lo[1] - lo[0]
+
+
+def measure_face(
+    spark,
+    query,
+    sf_dir: str,
+    warm_dir: str,
+    n_runs: int = 2,
+    max_runs: int = 5,
+    explain_path: str | None = None,
+) -> dict:
+    """Warm one face (``query(spark, dir) -> DataFrame``) at ``warm_dir``,
+    then time it at ``sf_dir``.
+
+    A sample builds the frame (``build``: for driver-loop operators such
+    as k-means, PageRank or probe training this includes their eager
+    jobs) and runs it into the noop sink (``exec``); ``jobs`` is the
+    number of Spark jobs the sample launched (status-tracker delta).
+    Returns the best sample's ``sec`` (build + exec), ``build``, ``exec``
+    and ``jobs``, with ``spread`` (the two-best gap) and ``samples``
+    (the run count).  With ``explain_path``, the last frame's
+    ``explain("formatted")`` is written there: the pre-execution AQE
+    plan, the same text with or without the noop run.
+    """
+    # Per-query plan warmup at the smallest scale: whole-stage codegen
+    # classes are keyed by the generated code (schema/plan shape, not data
+    # volume), so one tiny-sf run compiles exactly the classes the timed
+    # run needs.  Without it a multi-stage plan can pay ~10 s of janino
+    # compilation INSIDE its timed samples — consistently, so best-of-N
+    # and the adaptive re-run trigger never see it as noise
+    # (events_asof_bucketed measured 9.5 s cold vs 1.6 s warm at sf0.1).
+    _noop(query(spark, warm_dir))
+    spark.catalog.clearCache()
+
+    # Best-of-N with ADAPTIVE re-runs: the host VM shows occasional
+    # multi-x slowdowns (measured in docs/SCALE.md), so a single sample
+    # makes round-over-round deltas meaningless — and a fixed pair of
+    # samples can still be one cold + one warm (round-4 bench:
+    # pipe_dedup_semantic spread 7.8 s on a 4.0 s best).  Each query runs
+    # at least ``n_runs`` times, then keeps re-running (up to
+    # ``max_runs``) until its two best samples agree within 50% of the
+    # best.
+    tracker = spark.sparkContext.statusTracker()
+    samples: list[tuple[float, float, float, int]] = []
+    totals: list[float] = []
+    while len(totals) < max(n_runs, 1) or (
+        n_runs >= 2
+        and len(totals) < max_runs
+        and _two_best_gap(totals) > 0.5 * min(totals)
+    ):
+        # a set difference, not a length one: the status store keeps only
+        # the last spark.ui.retainedJobs (1000) jobs, so its length stops
+        # growing partway through a full run
+        jobs_before = set(tracker.getJobIdsForGroup(None))
+        t0 = time.time()
+        df = query(spark, sf_dir)
+        build = time.time() - t0
+        exec_s = _noop(df)
+        jobs = len(set(tracker.getJobIdsForGroup(None)) - jobs_before)
+        samples.append((build + exec_s, build, exec_s, jobs))
+        totals.append(build + exec_s)
+        # Measurement isolation: a few operators cache intermediate
+        # relations (minhash shingle hashes, simhash fingerprints); each
+        # timed rebuild creates fresh entries, and the accumulated blocks
+        # squeeze execution memory for LATER queries.  Dropping them
+        # between runs keeps each measurement independent.
+        spark.catalog.clearCache()
+    if explain_path is not None:
+        from lightfusion_spark.plans.audit import formatted_plan
+
+        with open(explain_path, "w", encoding="utf-8") as fh:
+            fh.write(formatted_plan(df))
+    sec, build, exec_s, jobs = min(samples)
+    return {
+        "sec": round(sec, 3),
+        "build": round(build, 3),
+        "exec": round(exec_s, 3),
+        "jobs": jobs,
+        "spread": round(_two_best_gap(totals), 3),
+        "samples": len(totals),
+    }
+
+
 def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("names", nargs="*", help="faces to time (default: BENCH_QUERIES)")
+    ap.add_argument(
+        "--explain",
+        metavar="DIR",
+        help="also write each face's explain('formatted') to DIR/<name>.txt",
+    )
+    args = ap.parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(min(os.cpu_count() or 8, 32)))
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
     except ValueError:
         sf = -1.0
 
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entry_mod
-
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("lightfusion-bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    from lightfusion_spark.session import start_spark
 
     qs = entry_mod.queries()
+    names = args.names or BENCH_QUERIES
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        ap.error(f"not in queries(): {unknown}")
+    if args.explain:
+        os.makedirs(args.explain, exist_ok=True)
+
+    spark = start_spark(**{"spark.driver.memory": "16g"})
+
     # Warmup: exercise every engine path the bench set hits (parquet scan,
     # hash agg, shuffle join, window, higher-order funcs, Python worker
     # pool) so JIT/codegen/daemon startup doesn't land on the first timed
@@ -237,38 +343,12 @@ def main() -> None:
     from lightfusion_spark.operators import dedup
 
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).limit(100)
-    dedup.minhash_near_duplicates(docs, "doc_id", "text").write.format(
-        "noop"
-    ).mode("overwrite").save()
+    _noop(dedup.minhash_near_duplicates(docs, "doc_id", "text"))
+    # the per-action floor: a trivial noop write on the warm session
+    floor = min(_noop(spark.range(10)) for _ in range(2))
 
-    # Best-of-N per query with ADAPTIVE re-runs: the host VM shows
-    # occasional multi-x slowdowns (measured in docs/SCALE.md), so a single
-    # sample makes round-over-round deltas meaningless — and a fixed pair
-    # of samples can still be one cold + one warm (round-4 bench:
-    # pipe_dedup_semantic spread 7.8 s on a 4.0 s best).  Each query runs
-    # at least ``n_runs`` times, then keeps re-running (up to ``max_runs``)
-    # until its two best samples agree within 50% of the best.  Reported
-    # ``spread`` is that two-best gap — the confidence of the min
-    # estimate — and ``samples`` the per-query run count.
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
     max_runs = int(os.environ.get("SPARK_GRAFT_BENCH_MAX_RUNS", "5"))
-    timings: dict[str, float] = {}
-    spread: dict[str, float] = {}
-    n_samples: dict[str, int] = {}
-
-    def _two_best_gap(samples: list[float]) -> float:
-        if len(samples) < 2:  # single-run mode (SPARK_GRAFT_BENCH_RUNS=1)
-            return 0.0
-        lo = sorted(samples)
-        return lo[1] - lo[0]
-
-    # Per-query plan warmup at the smallest scale: whole-stage codegen
-    # classes are keyed by the generated code (schema/plan shape, not data
-    # volume), so one tiny-sf run compiles exactly the classes the timed
-    # run needs.  Without it a multi-stage plan can pay ~10 s of janino
-    # compilation INSIDE its timed samples — consistently, so best-of-N
-    # and the adaptive re-run trigger never see it as noise
-    # (events_asof_bucketed measured 9.5 s cold vs 1.6 s warm at sf0.1).
     warm_dir = os.environ.get("SPARK_GRAFT_WARMUP_SF_DIR", "/root/testdata/sf0.001")
     if not os.path.isdir(warm_dir):
         # fall back to the timed dataset: the warmup then costs one full-
@@ -276,71 +356,58 @@ def main() -> None:
         print(f"warmup dir {warm_dir} missing; warming on {sf_dir}", file=sys.stderr)
         warm_dir = sf_dir
 
-    for name in BENCH_QUERIES:
-        qs[name](spark, warm_dir).write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-        samples: list[float] = []
-        while len(samples) < max(n_runs, 1) or (
-            n_runs >= 2
-            and len(samples) < max_runs
-            and _two_best_gap(samples) > 0.5 * min(samples)
-        ):
-            t0 = time.time()
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(time.time() - t0)
-            # Measurement isolation: a few operators cache intermediate
-            # relations (minhash shingle hashes, simhash fingerprints);
-            # each timed rebuild creates fresh entries, and the
-            # accumulated blocks squeeze execution memory for LATER
-            # queries.  Dropping them between runs keeps each
-            # measurement independent.
-            spark.catalog.clearCache()
-        timings[name] = round(min(samples), 3)
-        spread[name] = round(_two_best_gap(samples), 3)
-        n_samples[name] = len(samples)
+    records = {
+        name: measure_face(
+            spark,
+            qs[name],
+            sf_dir,
+            warm_dir,
+            n_runs=n_runs,
+            max_runs=max_runs,
+            explain_path=os.path.join(args.explain, f"{name}.txt") if args.explain else None,
+        )
+        for name in names
+    }
 
+    def per_face(key: str) -> dict:
+        return {name: r[key] for name, r in records.items()}
+
+    timings = per_face("sec")
+    head = {
+        "metric": "total_wall_sec",
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+    }
     # The recorder that captures this process keeps only the LAST ~2000
     # chars of output, so the stdout line must stay compact: rounds 3/5/6
     # shipped spread+samples inline and the recorded line lost its head and
-    # failed to parse.  Full detail (spread, per-query sample counts) goes
-    # to BENCH_LAST.json; stdout carries only the contract fields.
-    detail = json.dumps(
-        {
-            "metric": "total_wall_sec",
-            "value": round(sum(timings.values()), 3),
-            "unit": "sec",
-            "queries": timings,
-            "spread": spread,
-            "samples": n_samples,
-            "runs_per_query": n_runs,
-            "sf": sf,
-        },
-        separators=(",", ":"),
-    )
+    # failed to parse.  Full detail goes to BENCH_LAST.json; stdout
+    # carries only the contract fields.
+    detail = {
+        **head,
+        "queries": timings,
+        "build": per_face("build"),
+        "exec": per_face("exec"),
+        "jobs": per_face("jobs"),
+        "floor": round(floor, 3),
+        "spread": per_face("spread"),
+        "samples": per_face("samples"),
+        "runs_per_query": n_runs,
+        "sf": sf,
+    }
     with open(os.path.join(REPO_ROOT, "BENCH_LAST.json"), "w", encoding="utf-8") as fh:
-        fh.write(detail + "\n")
-    line = json.dumps(
-        {
-            "metric": "total_wall_sec",
-            "value": round(sum(timings.values()), 3),
-            "unit": "sec",
-            "queries": timings,
-            "sf": sf,
-        },
-        separators=(",", ":"),
-    )
+        fh.write(json.dumps(detail, separators=(",", ":")) + "\n")
+    line = json.dumps({**head, "queries": timings, "sf": sf}, separators=(",", ":"))
     if len(line) > 1900:  # stay under the recorder's tail window, whatever grows
         # The name->sec map does not fit; ship the per-query data as the
         # compact positional centisecond array documented in the module
-        # docstring ("qv", BENCH_QUERIES order) so the driver still gets
+        # docstring ("qv", timed-name order) so the driver still gets
         # per-query timings on one parseable line.
         line = json.dumps(
             {
-                "metric": "total_wall_sec",
-                "value": round(sum(timings.values()), 3),
-                "unit": "sec",
+                **head,
                 "queries": {},
-                "qv": [int(round(timings[n] * 100)) for n in BENCH_QUERIES],
+                "qv": [int(round(timings[n] * 100)) for n in names],
                 "sf": sf,
                 "detail": "BENCH_LAST.json",
             },

@@ -45,6 +45,7 @@ from .similarity import (
     kmeans_centroid_pairs,
     seed_centroids,
 )
+from .storemaint import _dir_swap
 
 
 def _geometry_guard(df: DataFrame, vec_col: str, caller: str) -> dict:
@@ -393,7 +394,8 @@ def ivf_compact(spark: SparkSession, path: str) -> dict:
     aborted run never blocks a retry).  The swap itself is two renames
     (``cells`` -> ``cells_pre`` -> deleted); a crash mid-swap leaves
     ``cells_pre`` on disk — never data loss, recover by renaming it
-    back.  Run compaction offline (no concurrent appends), the
+    back; until then the next compaction REFUSES (``_pre`` may be the
+    only copy).  Run compaction offline (no concurrent appends), the
     standard maintenance contract.
 
     100 TB shape: TWO scans of the cells (count + rewrite — the price
@@ -415,73 +417,62 @@ def ivf_compact(spark: SparkSession, path: str) -> dict:
 
     meta = read_index_meta(spark, path)
     id_col = meta["id_col"]
-    ledger = spark.read.parquet(f"{path}/batches")
-    expected = ledger.agg(
-        F.coalesce(F.sum("n_rows"), F.lit(0)).cast("long").alias("n")
-    ).first()["n"]
-    live_batches = {
-        r["batch_id"]
-        for r in ledger.where(F.col("n_rows") > 0)
-        .select("batch_id")
-        .distinct()
-        .collect()
-    }
-    cells = spark.read.parquet(f"{path}/cells")
-    files_before = _cell_files()
-    kept = (
-        cells.join(
-            F.broadcast(ledger.select("batch_id").distinct()),
-            "batch_id",
-            "semi",
-        )
-        # full-row collapse: bit-identical replay residue AND
-        # legitimate within-batch duplicate input rows merge
-        .dropDuplicates([id_col, "_v", "batch_id", "centroid_id"])
-    )
-    n_kept = kept.count()
-    per_batch = {
-        r["batch_id"]: r["n"]
-        for r in kept.groupBy("batch_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .collect()
-    }
-    missing = sorted(live_batches - set(per_batch))
-    if missing:
-        raise RuntimeError(
-            f"ivf_compact: ledgered batches {missing} hold no surviving "
-            f"cell rows at {path} — aborting with the live index untouched"
-        )
-    if n_kept > expected:
-        raise RuntimeError(
-            f"ivf_compact: {n_kept} surviving rows exceed the ledger's "
-            f"accounting of {expected} at {path} — aborting with the "
-            "live index untouched"
-        )
     tmp = f"{path}/cells_compacting"
-    # a previous aborted run's temp dir never blocks a retry
-    if fs.exists(hpath(tmp)):
-        fs.delete(hpath(tmp), True)
-    # one spark partition holds whole cells -> partitionBy emits ONE
-    # file per cell, the build-time layout
-    kept.select(id_col, "_v", "batch_id", "centroid_id").repartition(
-        "centroid_id"
-    ).write.partitionBy("centroid_id").mode("error").parquet(tmp)
-    written = spark.read.parquet(tmp)
-    got = written.count()
-    if got != n_kept:
-        raise RuntimeError(
-            f"ivf_compact: rewrite holds {got} rows but the source scan "
-            f"kept {n_kept} at {path} — aborting with the live index "
-            f"untouched; inspect {tmp}"
+    with _dir_swap(spark, f"{path}/cells", tmp, "ivf_compact"):
+        ledger = spark.read.parquet(f"{path}/batches")
+        expected = ledger.agg(
+            F.coalesce(F.sum("n_rows"), F.lit(0)).cast("long").alias("n")
+        ).first()["n"]
+        live_batches = {
+            r["batch_id"]
+            for r in ledger.where(F.col("n_rows") > 0)
+            .select("batch_id")
+            .distinct()
+            .collect()
+        }
+        cells = spark.read.parquet(f"{path}/cells")
+        files_before = _cell_files()
+        kept = (
+            cells.join(
+                F.broadcast(ledger.select("batch_id").distinct()),
+                "batch_id",
+                "semi",
+            )
+            # full-row collapse: bit-identical replay residue AND
+            # legitimate within-batch duplicate input rows merge
+            .dropDuplicates([id_col, "_v", "batch_id", "centroid_id"])
         )
-    pre = f"{path}/cells_pre"
-    if not fs.rename(hpath(f"{path}/cells"), hpath(pre)):
-        raise RuntimeError(f"ivf_compact: could not stage {path}/cells")
-    if not fs.rename(hpath(tmp), hpath(f"{path}/cells")):
-        # put the original back; tmp still holds the rewrite
-        fs.rename(hpath(pre), hpath(f"{path}/cells"))
-        raise RuntimeError(f"ivf_compact: could not swap in {tmp}")
-    fs.delete(hpath(pre), True)
+        n_kept = kept.count()
+        per_batch = {
+            r["batch_id"]: r["n"]
+            for r in kept.groupBy("batch_id")
+            .agg(F.count(F.lit(1)).cast("long").alias("n"))
+            .collect()
+        }
+        missing = sorted(live_batches - set(per_batch))
+        if missing:
+            raise RuntimeError(
+                f"ivf_compact: ledgered batches {missing} hold no surviving "
+                f"cell rows at {path} — aborting with the live index untouched"
+            )
+        if n_kept > expected:
+            raise RuntimeError(
+                f"ivf_compact: {n_kept} surviving rows exceed the ledger's "
+                f"accounting of {expected} at {path} — aborting with the "
+                "live index untouched"
+            )
+        # one spark partition holds whole cells -> partitionBy emits ONE
+        # file per cell, the build-time layout
+        kept.select(id_col, "_v", "batch_id", "centroid_id").repartition(
+            "centroid_id"
+        ).write.partitionBy("centroid_id").mode("error").parquet(tmp)
+        got = spark.read.parquet(tmp).count()
+        if got != n_kept:
+            raise RuntimeError(
+                f"ivf_compact: rewrite holds {got} rows but the source scan "
+                f"kept {n_kept} at {path} — aborting with the live index "
+                f"untouched; inspect {tmp}"
+            )
     # converge the ledger's row accounting to the surviving counts
     # (same batch_id set — the replay fence — O(batches) rows)
     all_batches = sorted(
@@ -491,18 +482,10 @@ def ivf_compact(spark: SparkSession, path: str) -> dict:
         (int(b), int(per_batch.get(b, 0))) for b in all_batches
     ]
     ltmp = f"{path}/batches_compacting"
-    if fs.exists(hpath(ltmp)):
-        fs.delete(hpath(ltmp), True)
-    spark.createDataFrame(
-        new_ledger, "batch_id bigint, n_rows bigint"
-    ).coalesce(1).write.mode("error").parquet(ltmp)
-    lpre = f"{path}/batches_pre"
-    if not fs.rename(hpath(f"{path}/batches"), hpath(lpre)):
-        raise RuntimeError(f"ivf_compact: could not stage {path}/batches")
-    if not fs.rename(hpath(ltmp), hpath(f"{path}/batches")):
-        fs.rename(hpath(lpre), hpath(f"{path}/batches"))
-        raise RuntimeError(f"ivf_compact: could not swap in {ltmp}")
-    fs.delete(hpath(lpre), True)
+    with _dir_swap(spark, f"{path}/batches", ltmp, "ivf_compact"):
+        spark.createDataFrame(
+            new_ledger, "batch_id bigint, n_rows bigint"
+        ).coalesce(1).write.mode("error").parquet(ltmp)
     files_after = _cell_files()
     return {
         "rows": int(got),

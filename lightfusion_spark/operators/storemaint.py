@@ -41,6 +41,8 @@ read side still collapses — all test-pinned in
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -84,6 +86,45 @@ def sum_cells(cells: DataFrame, keys: tuple[str, ...] = ()) -> DataFrame:
     return cells.groupBy(*keys).agg(*sums)
 
 
+@contextmanager
+def _dir_swap(spark: SparkSession, live: str, staged: str, who: str):
+    """Replace directory ``live`` by ``staged``, which the ``with`` body
+    writes and validates; an exception in the body leaves ``live``
+    untouched.
+
+    On entry this REFUSES while ``{live}_pre`` exists — a previous swap
+    crashed between its two renames, and ``_pre`` may be the only copy
+    of the data — and deletes a stale ``staged`` (an aborted run's
+    leftover never blocks a retry).  On exit it renames ``live`` (if
+    any) to ``{live}_pre``, then ``staged`` to ``live`` (renaming
+    ``_pre`` back if that fails), then deletes ``_pre``.  Crash windows:
+    before the first rename ``live`` is untouched; between the renames
+    ``_pre`` holds the original (recover by renaming it back).
+    """
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    fs = hpath(live).getFileSystem(spark._jsc.hadoopConfiguration())
+    pre = f"{live}_pre"
+    if fs.exists(hpath(pre)):
+        raise RuntimeError(
+            f"{who}: {pre} exists — a previous run crashed mid-swap and "
+            "it may be the only copy of the data; rename it back over "
+            f"{live} (or remove it after verifying {live} reads) before "
+            "retrying"
+        )
+    if fs.exists(hpath(staged)):
+        fs.delete(hpath(staged), True)
+    yield
+    had_prior = fs.exists(hpath(live))
+    if had_prior and not fs.rename(hpath(live), hpath(pre)):
+        raise RuntimeError(f"{who}: could not stage {live}")
+    if not fs.rename(hpath(staged), hpath(live)):
+        if had_prior:
+            fs.rename(hpath(pre), hpath(live))
+        raise RuntimeError(f"{who}: could not swap in {staged}")
+    if had_prior:
+        fs.delete(hpath(pre), True)
+
+
 def atomic_replace(spark: SparkSession, df: DataFrame, path: str) -> None:
     """Crash-safe whole-relation replacement for maintained stores —
     the write-side half of the :func:`compact_cell_store` contract,
@@ -107,30 +148,9 @@ def atomic_replace(spark: SparkSession, df: DataFrame, path: str) -> None:
     the next call REFUSES until an operator resolves it; a stale
     ``_staging`` never blocks a retry.
     """
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    pre = f"{path}_pre"
-    if fs.exists(hpath(pre)):
-        raise RuntimeError(
-            f"atomic_replace: {pre} exists — a previous replacement "
-            "crashed mid-swap and it may be the only copy of the store; "
-            "rename it back over the store (or remove it after "
-            "verifying the store reads) before retrying"
-        )
     tmp = f"{path}_staging"
-    if fs.exists(hpath(tmp)):
-        fs.delete(hpath(tmp), True)
-    df.write.mode("error").parquet(tmp)
-    had_prior = fs.exists(hpath(path))
-    if had_prior and not fs.rename(hpath(path), hpath(pre)):
-        raise RuntimeError(f"atomic_replace: could not stage {path}")
-    if not fs.rename(hpath(tmp), hpath(path)):
-        if had_prior:
-            fs.rename(hpath(pre), hpath(path))
-        raise RuntimeError(f"atomic_replace: could not swap in {tmp}")
-    if had_prior:
-        fs.delete(hpath(pre), True)
+    with _dir_swap(spark, path, tmp, "atomic_replace"):
+        df.write.mode("error").parquet(tmp)
 
 
 def compact_cell_store(
@@ -149,7 +169,8 @@ def compact_cell_store(
       rewrite aborts with the store untouched;
     * ``_``-prefixed side relations (e.g. the binary-score store's
       ``_meta`` manifest) ride along: parquet reads never see them,
-      and the swap carries them from the old directory into the new;
+      and they are copied from the old directory into the validated
+      rewrite before the swap;
     * an aborted run's temp directory never blocks the retry (deleted
       and rewritten); a crash mid-swap leaves ``{path}_pre`` on disk
       — never data loss; the next run REFUSES until an operator
@@ -180,61 +201,46 @@ def compact_cell_store(
             f"compact_cell_store: target_files must be >= 1, got "
             f"{target_files}"
         )
-    pre = f"{path}_pre"
-    if fs.exists(hpath(pre)):
-        raise RuntimeError(
-            f"compact_cell_store: {pre} exists — a previous run crashed "
-            "mid-swap and it may be the only copy of the store; rename "
-            "it back over the store (or remove it after verifying the "
-            "store reads) before compacting"
-        )
-    src = spark.read.parquet(path)
-    if "batch_id" not in src.columns:
-        raise ValueError(
-            f"compact_cell_store: {path} has no batch_id column — not a "
-            "batch-appended cell store (this compactor only collapses "
-            "bit-identical replay rows, which only batch-addressed "
-            "stores guarantee)"
-        )
-    files_before = _files(path)
-    n_src = src.count()
-    # bit-identical replay residue ONLY: full-row distinct
-    kept = src.dropDuplicates()
-    n_kept = kept.count()
-    batches = {
-        r["batch_id"] for r in src.select("batch_id").distinct().collect()
-    }
     tmp = f"{path}_compacting"
-    if fs.exists(hpath(tmp)):
-        fs.delete(hpath(tmp), True)
-    kept.coalesce(int(target_files)).write.mode("error").parquet(tmp)
-    written = spark.read.parquet(tmp)
-    got = written.count()
-    got_batches = {
-        r["batch_id"]
-        for r in written.select("batch_id").distinct().collect()
-    }
-    if got != n_kept or got_batches != batches:
-        raise RuntimeError(
-            f"compact_cell_store: rewrite holds {got} rows over "
-            f"{len(got_batches)} batches but the source scan kept "
-            f"{n_kept} over {len(batches)} at {path} — aborting with "
-            f"the live store untouched; inspect {tmp}"
-        )
-    if not fs.rename(hpath(path), hpath(pre)):
-        raise RuntimeError(f"compact_cell_store: could not stage {path}")
-    if not fs.rename(hpath(tmp), hpath(path)):
-        fs.rename(hpath(pre), hpath(path))
-        raise RuntimeError(f"compact_cell_store: could not swap in {tmp}")
-    # carry _-prefixed side relations (manifests) into the new layout;
-    # same-named artifacts the write already produced (_SUCCESS) stay
-    for st in fs.listStatus(hpath(pre)):
-        name = st.getPath().getName()
-        if name.startswith("_") and not fs.exists(
-            hpath(f"{path}/{name}")
-        ):
-            fs.rename(st.getPath(), hpath(f"{path}/{name}"))
-    fs.delete(hpath(pre), True)
+    with _dir_swap(spark, path, tmp, "compact_cell_store"):
+        src = spark.read.parquet(path)
+        if "batch_id" not in src.columns:
+            raise ValueError(
+                f"compact_cell_store: {path} has no batch_id column — not a "
+                "batch-appended cell store (this compactor only collapses "
+                "bit-identical replay rows, which only batch-addressed "
+                "stores guarantee)"
+            )
+        files_before = _files(path)
+        n_src = src.count()
+        # bit-identical replay residue ONLY: full-row distinct
+        kept = src.dropDuplicates()
+        n_kept = kept.count()
+        batches = {
+            r["batch_id"] for r in src.select("batch_id").distinct().collect()
+        }
+        kept.coalesce(int(target_files)).write.mode("error").parquet(tmp)
+        written = spark.read.parquet(tmp)
+        got = written.count()
+        got_batches = {
+            r["batch_id"]
+            for r in written.select("batch_id").distinct().collect()
+        }
+        if got != n_kept or got_batches != batches:
+            raise RuntimeError(
+                f"compact_cell_store: rewrite holds {got} rows over "
+                f"{len(got_batches)} batches but the source scan kept "
+                f"{n_kept} over {len(batches)} at {path} — aborting with "
+                f"the live store untouched; inspect {tmp}"
+            )
+        # same-named artifacts the write already produced (_SUCCESS) stay
+        for st in fs.listStatus(hpath(path)):
+            name = st.getPath().getName()
+            if name.startswith("_") and not fs.exists(hpath(f"{tmp}/{name}")):
+                jvm.org.apache.hadoop.fs.FileUtil.copy(
+                    fs, st.getPath(), fs, hpath(f"{tmp}/{name}"), False,
+                    spark._jsc.hadoopConfiguration(),
+                )
     return {
         "rows": int(got),
         "rows_collapsed": int(n_src - n_kept),

@@ -87,17 +87,12 @@ def main() -> None:  # pragma: no cover - CLI convenience
     import json
     import sys
 
-    from pyspark.sql import SparkSession
+    from ..session import start_spark
 
     sys.path.insert(0, ".")
     import __spark_entry__ as entry_mod
 
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = start_spark(4)
     sf_dir = "/root/testdata/sf0.001"
     names = sys.argv[1:] or list(entry_mod.queries())
     qs = entry_mod.queries()

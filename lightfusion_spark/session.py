@@ -5,8 +5,11 @@ lightfusion config extension) + default features + the FunctionFactory into
 a DataFusion ``SessionContext`` and pre-registers ``argmax``
 (``src/lib.rs:97-115``).  Here:
 
-* ``configure_session()`` builds (or reuses) a ``SparkSession`` with
-  Arrow-vectorized Python UDF transfer, AQE, and UTC session time;
+* :func:`spark_conf` is the one ``SparkConf`` every session this repo
+  builds starts from (``local[cores]``, ``cores`` shuffle partitions,
+  Arrow-vectorized Python UDF transfer, AQE, UTC session time);
+  :func:`start_spark` builds a ``SparkSession`` from it;
+* ``configure_session()`` builds (or adopts) a ``SparkSession``;
 * applies the ``lightfusion.*`` config defaults and publishes the
   ``df_settings`` introspection view;
 * registers ``argmax`` (JVM-side SQL UDF);
@@ -22,6 +25,9 @@ own SQL engine, exposed untouched.
 
 from __future__ import annotations
 
+import os
+
+from pyspark import SparkConf
 from pyspark.sql import DataFrame, SparkSession
 
 from . import config as lf_config
@@ -36,6 +42,32 @@ BUILDER_DEFAULTS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.session.timeZone": "UTC",
 }
+
+
+def spark_conf(cores: int | str | None = None, **conf: str) -> SparkConf:
+    """The settings of every session this repo builds: ``local[cores]``,
+    ``cores`` shuffle partitions and :data:`BUILDER_DEFAULTS`, then
+    ``conf`` (full Spark keys, e.g. ``**{"spark.driver.memory": "16g"}``)
+    on top.  ``cores`` defaults to ``$SPARK_GRAFT_CPUS``, else
+    ``min(cpu_count, 32)``."""
+    if cores is None:
+        cores = os.environ.get("SPARK_GRAFT_CPUS") or min(os.cpu_count() or 8, 32)
+    settings = {
+        "spark.master": f"local[{cores}]",
+        "spark.app.name": "lightfusion-spark",
+        **BUILDER_DEFAULTS,
+        "spark.sql.shuffle.partitions": str(cores),
+        **conf,
+    }
+    return SparkConf(loadDefaults=False).setAll([(k, str(v)) for k, v in settings.items()])
+
+
+def start_spark(cores: int | str | None = None, **conf: str) -> SparkSession:
+    """A ``SparkSession`` built from ``spark_conf(cores, **conf)`` (or the
+    running one, as ``getOrCreate`` does), logging errors only."""
+    spark = SparkSession.builder.config(conf=spark_conf(cores, **conf)).getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
 
 
 class LightFusionSession:
@@ -91,24 +123,16 @@ class LightFusionSession:
 
 
 def configure_session(
-    spark: SparkSession | None = None,
-    master: str = "local[*]",
-    app_name: str = "lightfusion-spark",
-    shuffle_partitions: int | None = None,
+    spark: SparkSession | None = None, cores: int | None = None
 ) -> LightFusionSession:
     """Build/adopt a SparkSession and install the lightfusion surface.
 
     Pass an existing ``spark`` (e.g. the driver's) to adopt it: runtime
     confs, the config extension, ``argmax`` and ``df_settings`` are applied
-    to it in place.
+    to it in place.  Without one, the session is ``start_spark(cores)``.
     """
     if spark is None:
-        builder = SparkSession.builder.master(master).appName(app_name)
-        for k, v in BUILDER_DEFAULTS.items():
-            builder = builder.config(k, v)
-        if shuffle_partitions is not None:
-            builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        spark = builder.getOrCreate()
+        spark = start_spark(cores)
     # Runtime-settable confs are (re)applied even to adopted sessions.
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")

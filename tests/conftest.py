@@ -34,9 +34,7 @@ def engine():
     """One LightFusionSession for the whole test run (JVM startup ~15s)."""
     from lightfusion_spark import configure_session
 
-    eng = configure_session(
-        master="local[4]", app_name="lightfusion-tests", shuffle_partitions=4
-    )
+    eng = configure_session(cores=4)
     yield eng
     eng.spark.stop()
 

@@ -465,3 +465,31 @@ def test_ivf_compact_file_counts_come_from_the_fs_api(
     assert r["files_after"] == len(
         glob.glob(f"{path}/cells/centroid_id=*/*.parquet")
     )
+
+
+def test_ivf_compact_refuses_stale_pre(spark, sf_dir, tmp_path):
+    """A crash between the swap's two renames leaves ``cells_pre``, which
+    may be the only copy of the cells: the next compaction refuses and
+    keeps it, and the index searches exactly as before."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    path = str(tmp_path / "idx_pre")
+    annindex.build_ivf_index(
+        emb.where(F.col("vec_id") % 2 == 0), path, "vec_id", "embedding",
+        n_centroids=4, n_iters=2,
+    )
+    annindex.ivf_append_batch(emb.where(F.col("vec_id") % 2 == 1), path, 1)
+    q = emb.where(F.col("vec_id") < 8)
+
+    def search():
+        return _rows(
+            annindex.search_ivf_index(
+                spark, path, q, "vec_id", "embedding", k=5, nprobe=2
+            )
+        )
+
+    before = search()
+    (tmp_path / "idx_pre" / "cells_pre").mkdir()
+    with pytest.raises(RuntimeError, match="crashed mid-swap"):
+        annindex.ivf_compact(spark, path)
+    assert (tmp_path / "idx_pre" / "cells_pre").is_dir()
+    assert search() == before

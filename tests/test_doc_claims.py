@@ -48,3 +48,22 @@ def test_bench_queries_all_registered():
 
     missing = [n for n in bench.BENCH_QUERIES if n not in REGISTRY]
     assert not missing, f"bench names not in REGISTRY: {missing}"
+
+
+def test_one_session_builder():
+    """``lightfusion_spark/session.py`` (``spark_conf`` / ``start_spark``) is
+    the one place outside the benchmark-owned ``perfbench/`` that builds a
+    Spark session, so every entry point gets the same session shape."""
+    session_py = REPO / "lightfusion_spark" / "session.py"
+    files = [
+        REPO / "bench.py",
+        *(REPO / "tools").rglob("*.py"),
+        *(REPO / "lightfusion_spark").rglob("*.py"),
+    ]
+    offenders = [
+        str(p.relative_to(REPO))
+        for p in files
+        if p != session_py
+        and re.search(r"SparkSession\.builder|SparkConf\(", p.read_text())
+    ]
+    assert not offenders, f"build sessions through session.spark_conf: {offenders}"

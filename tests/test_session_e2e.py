@@ -296,3 +296,30 @@ def test_large_model_ships_via_broadcast(engine, fixture_model, monkeypatch):
     lits = ", ".join(repr(float(x)) for x in row)
     got = np.array(engine.sql(f"SELECT fbig([{lits}]) AS p").collect()[0]["p"])
     np.testing.assert_allclose(got, fixture_model.predict(row.reshape(1, -1))[0], rtol=1e-12)
+
+
+def test_spark_conf_is_the_one_session_shape(monkeypatch):
+    """Every session the repo builds starts from ``spark_conf``: ``cores``
+    sets both the local master and the shuffle partitions, the builder
+    defaults ride along, an override wins, and ``SPARK_GRAFT_CPUS`` (else
+    ``min(cpu_count, 32)``) is the default core count."""
+    import os
+
+    from lightfusion_spark.session import BUILDER_DEFAULTS, spark_conf
+
+    conf = spark_conf(3)
+    assert conf.get("spark.master") == "local[3]"
+    assert conf.get("spark.sql.shuffle.partitions") == "3"
+    for key, value in BUILDER_DEFAULTS.items():
+        assert conf.get(key) == value
+
+    tz = "spark.sql.session.timeZone"
+    assert spark_conf(3, **{tz: "Asia/Kolkata"}).get(tz) == "Asia/Kolkata"
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "5")
+    conf = spark_conf()
+    assert conf.get("spark.master") == "local[5]"
+    assert conf.get("spark.sql.shuffle.partitions") == "5"
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    cores = min(os.cpu_count() or 8, 32)
+    assert spark_conf().get("spark.master") == f"local[{cores}]"

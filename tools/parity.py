@@ -137,24 +137,20 @@ def main() -> int:
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as e
+    from lightfusion_spark.session import start_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .appName("parity")
-        .config("spark.sql.shuffle.partitions", args.cpus)
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", args.tz)
-        # the compare collects full result sets; pair-emitting queries at
-        # sf0.1 return millions of rows (pipe_simhash_pairs: ~6M), which
-        # default driver sizing drops with TaskResultLost
-        .config("spark.driver.memory", "16g")
-        .config("spark.driver.maxResultSize", "8g")
-        .getOrCreate()
+    spark = start_spark(
+        args.cpus,
+        **{
+            "spark.sql.session.timeZone": args.tz,
+            # the compare collects full result sets; pair-emitting queries
+            # at sf0.1 return millions of rows (pipe_simhash_pairs: ~6M),
+            # which default driver sizing drops with TaskResultLost
+            "spark.driver.memory": "16g",
+            "spark.driver.maxResultSize": "8g",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
     con = duck_connection(args.sf)
 
     qs = e.queries()

@@ -60,24 +60,20 @@ def main() -> None:
     args = ap.parse_args()
     ONLY[:] = args.only
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
     from lightfusion_spark.functions.argmax import argmax
     from lightfusion_spark.functions.inference import make_lightgbm_udf
     from lightfusion_spark.operators import asof as asof_mod
     from lightfusion_spark.operators import dedup, similarity, skew
+    from lightfusion_spark.session import start_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("lightfusion-scalecheck")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
+    spark = start_spark(
+        **{
+            "spark.driver.memory": "24g",
+            "spark.sql.legacy.parquet.nanosAsLong": "true",
+        }
     )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
 
     docs = spark.read.parquet(f"{args.sf}/documents.parquet")
     emb = spark.read.parquet(f"{args.sf}/embeddings.parquet")
@@ -292,7 +288,7 @@ def main() -> None:
     timed(
         f"bpe_tokenize_{10 * n_docs}_docs_total_tokens",
         lambda: tok_mod.tokenize_bpe(
-            docs10.repartition(int(cpus)), "doc_id", "text"
+            docs10.repartition(spark.sparkContext.defaultParallelism), "doc_id", "text"
         ).agg(F.sum("n_tokens")).collect()[0][0],
     )
 
