@@ -42,26 +42,30 @@ Semantics implemented (matching LightGBM's ``Tree::Predict``):
   raw scores go through softmax for ``multiclass``, sigmoid for ``binary``,
   identity otherwise.
 
-All trees are scored by one kernel, not a loop over trees.  On the first
-``predict_raw`` the forest is packed into one node table (internal nodes of
-every tree, then every leaf, with global child indices; a leaf's children
-point to itself, so a finished row stays put).  Each chunk of rows then
-advances an (n_rows × n_trees) node matrix one level per step, for the
-forest's maximum depth: a gather of each cell's decision input, one
-``<=`` against the node threshold and a gather of the child.  The
-missing-value and categorical rules never run inside that loop: per
-chunk, each (feature, missing rule) pair used by the forest becomes one
-input column with its missing values replaced by a value that routes
-them the default way, and each categorical node becomes a 0/1 column of
-its bitset decisions.  Chunks hold ``_CHUNK_CELLS`` (row × tree) cells,
-which keeps the working set small at any batch size.  Per-class sums
-add each class's trees in tree order, the order the SQL compiler
-(``corpus/mlqueries.py``) uses too, so the two agree bit for bit.
+All trees are scored by one kernel, not a loop over trees or levels: the
+QuickScorer traversal (Lucchese et al., SIGIR 2015).  Each tree's leaves
+are numbered left to right, and each internal node holds a bitmask of the
+leaves outside its left subtree; a row's exit leaf is the lowest bit that
+survives the AND of the masks of the nodes where it goes right.  The
+missing-value and categorical rules run before that, once per chunk: each
+(feature, missing rule) pair used by the forest becomes one decision-input
+column with its missing values replaced by a value that routes them the
+default way, and each categorical node becomes a 0/1 column of its bitset
+decisions.  A value's *rank* on a numerical column is how many of the
+column's distinct thresholds it is not ``<=`` to, and per block of trees
+a table holds, for every rank, the AND of the masks of the nodes the value
+goes right at; so a chunk costs, per column, one rank step, one row gather
+and one ``&=`` into its (row × tree) masks.  Categorical nodes AND their
+masks in directly.  The tables are built once per model, on the first
+``predict_raw``; see :class:`_PackedForest` for their layout and size.
+Per-class sums add each class's trees in tree order, the order the SQL
+compiler (``corpus/mlqueries.py``) uses too, so the two agree bit for bit.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 import numpy as np
 
@@ -72,9 +76,15 @@ _MISSING_TYPE_NAN = 2
 #: LightGBM's kZeroThreshold: under missing type Zero, |value| <= this is missing.
 _ZERO_THRESHOLD = 1e-35
 
-#: (row × tree) cells one traversal chunk holds: rows per chunk is
-#: ``max(1, _CHUNK_CELLS // n_trees)``.
-_CHUNK_CELLS = 131072
+#: Bytes of leaf masks in one block-table row: a block holds this many
+#: bytes' worth of trees (64 trees of uint32 masks).
+_BLOCK_BYTES = 256
+#: Mask words one chunk's (row × mask word) matrix holds: rows per chunk
+#: is ``max(1, _CHUNK_WORDS // mask words per row)``.
+_CHUNK_WORDS = 1 << 16
+#: Columns with at most this many thresholds rank a value by counting
+#: compares; more, by binary search.
+_COUNT_RANK_MAX = 4
 
 # Missing-value rules of LightGBM NumericalDecision, by rule id: 0 missing
 # type None (a NaN is compared as 0.0), 1/2 Zero default left/right (a NaN
@@ -185,28 +195,110 @@ def _check_trees(trees: list[Tree], num_features: int) -> None:
     reject(leaf_refs != 1, leaf_owner, "a leaf is not referenced exactly once")
 
 
-class _PackedForest:
-    """Every tree of a model in one node table, scored level by level.
+class _Column(NamedTuple):
+    """One numerical decision-input column's share of the forest: its
+    nodes' sorted distinct thresholds, and per block of trees a table of
+    cumulative-AND leaf masks with a rank -> table-row map."""
 
-    Node ids are global: the internal nodes of all trees (tree by tree),
-    then all leaves (tree by tree).  Per node: the decision-input column
-    it reads, its threshold, its two children (``children[2 * id]`` right,
-    ``children[2 * id + 1]`` left; a leaf's both point to itself) and its
-    leaf value (0 for internal nodes).
+    thresholds: np.ndarray  # (m,) float64, sorted, distinct
+    rows: np.ndarray  # (m + 1, n_blocks) uint16/32: rank -> table row, per block
+    table: np.ndarray  # (n_rows, block trees * words); row 0 is all ones
+    lo: int  # the mask words the blocks cover: [lo, hi)
+    hi: int
+
+
+def _low_bits(n: np.ndarray) -> np.ndarray:
+    """uint64 words with their ``n`` (0..64) lowest bits set."""
+    shifted = np.left_shift(np.uint64(1), np.minimum(n, 63).astype(np.uint64))
+    return np.where(n >= 64, ~np.uint64(0), shifted - np.uint64(1))
+
+
+class _PackedForest:
+    """Every tree of a model as QuickScorer tables (Lucchese et al., SIGIR
+    2015), scored column by column.
+
+    Each tree's leaves are numbered left to right and every internal node
+    holds a bitmask of the leaves outside its left subtree, so a row's exit
+    leaf is the lowest bit left after ANDing the masks of the nodes where it
+    goes right.  A mask is ``words`` words of ``bits``: one uint32 up to 32
+    leaves, one uint64 up to 64, more uint64 words past that.
+
+    The trees are cut into blocks of ``_BLOCK_BYTES // mask bytes`` trees
+    (64 at uint32; the last block may be partial).  Per numerical column,
+    each block that reads it has one table row per distinct threshold of
+    its nodes on the column, holding the AND of the masks of the nodes at
+    or below that threshold; row 0, all ones, serves values left of every
+    threshold.  A value's rank (how many of the column's thresholds it is
+    not ``<=`` to) reaches its row in every block through ``rows``.  Table
+    bytes: (1 + distinct (block, threshold) pairs) × ``_BLOCK_BYTES`` per
+    column, at most (internal nodes + columns) × ``_BLOCK_BYTES``.  Map
+    bytes: (distinct thresholds + 1) × blocks × 2 per column (4 past
+    65 535 table rows).  Categorical nodes, one column each, AND their
+    masks in directly instead.
     """
 
     def __init__(self, trees: list[Tree], per_iteration: int) -> None:
+        # pad to whole iterations with trees that are one 0.0 leaf
+        none = np.zeros(0, dtype=np.int64)
+        zero_tree = Tree(1, none, none.astype(np.float64), none, none, none, np.zeros(1))
+        trees = trees + [zero_tree] * (-len(trees) % per_iteration)
+        self.n_trees = len(trees)
         n_nodes = np.array([t.num_leaves - 1 for t in trees])
-        n_leaves = n_nodes + 1
-        total_nodes, total_leaves = int(n_nodes.sum()), int(n_leaves.sum())
+        total_nodes = int(n_nodes.sum())
+        owner = np.repeat(np.arange(self.n_trees), n_nodes)
         node_base = np.cumsum(n_nodes) - n_nodes
-        leaf_base = total_nodes + np.cumsum(n_leaves) - n_leaves
-        owner = np.repeat(np.arange(len(trees)), n_nodes)
+        left, right = _concat(trees, "left_child"), _concat(trees, "right_child")
+        kid_l = np.where(left >= 0, node_base[owner] + left, -1)
+        kid_r = np.where(right >= 0, node_base[owner] + right, -1)
 
-        def global_id(child: np.ndarray) -> np.ndarray:
-            return np.where(
-                child >= 0, node_base[owner] + child, leaf_base[owner] + ~child
-            )
+        # in-order leaf numbering: leaves under each node (bottom up), then
+        # the position of each node's leftmost leaf (top down)
+        levels, frontier = [], node_base[n_nodes > 0]
+        while frontier.size:
+            levels.append(frontier)
+            kids = np.concatenate([kid_l[frontier], kid_r[frontier]])
+            frontier = kids[kids >= 0]
+        under = np.zeros(total_nodes, dtype=np.int64)
+
+        def leaves_under(kid: np.ndarray) -> np.ndarray:
+            return np.where(kid >= 0, under[kid], 1)
+
+        for level in reversed(levels):
+            under[level] = leaves_under(kid_l[level]) + leaves_under(kid_r[level])
+        n_left = leaves_under(kid_l)
+        first = np.zeros(total_nodes, dtype=np.int64)
+        for level in levels:
+            for kid, at in ((kid_l[level], first[level]),
+                            (kid_r[level], first[level] + n_left[level])):
+                first[kid[kid >= 0]] = at[kid >= 0]
+
+        # mask geometry and the leaf values by (tree, position)
+        self.bits = 32 if n_nodes.max() < 32 else 64
+        self.words = -(-(int(n_nodes.max()) + 1) // self.bits)
+        self.dtype = np.dtype(np.uint32 if self.bits == 32 else np.uint64)
+        self.ones = ~self.dtype.type(0)
+        width = self.words * self.bits
+        leaf_base = np.cumsum(n_nodes + 1) - (n_nodes + 1)
+        value = _concat(trees, "leaf_value").astype(np.float64)
+        self.leaf_value = np.zeros(self.n_trees * width)
+        one_leaf = n_nodes == 0
+        self.leaf_value[np.flatnonzero(one_leaf) * width] = value[leaf_base[one_leaf]]
+        for kid, pos in ((left, first), (right, first + n_left)):
+            leaf = kid < 0
+            self.leaf_value[(owner * width + pos)[leaf]] = value[(leaf_base[owner] + ~kid)[leaf]]
+        # the lowest set bit is read from its float exponent: a power of two
+        # converts exactly, and its biased exponent is bias + bit
+        self.float_type = np.float32 if self.bits == 32 else np.float64
+        self.int_type = np.int32 if self.bits == 32 else np.int64
+        self.exp_shift = 23 if self.bits == 32 else 52
+        bias = 127 if self.bits == 32 else 1023
+        self.leaf_at = np.arange(self.n_trees) * width - bias
+
+        # each node's mask: all ones but its left subtree's leaves
+        word_start = np.arange(self.words) * self.bits
+        lo = np.clip(first[:, None] - word_start, 0, self.bits)
+        hi = np.clip((first + n_left)[:, None] - word_start, 0, self.bits)
+        masks = (~(_low_bits(hi) ^ _low_bits(lo))).astype(self.dtype)
 
         feature = _concat(trees, "split_feature")
         threshold = _concat(trees, "threshold").astype(np.float64)
@@ -228,19 +320,14 @@ class _PackedForest:
         self.in_feature = keys // len(_RULE_FILL)
         self.in_fill = _RULE_FILL[keys % len(_RULE_FILL)]
         self.in_zero_missing = _RULE_ZERO_IS_MISSING[keys % len(_RULE_FILL)]
-        column = np.empty(total_nodes, dtype=np.int64)
-        column[~is_cat] = num_column
-        column[is_cat] = len(keys) + np.arange(int(is_cat.sum()))
-        self.n_inputs = len(keys) + int(is_cat.sum())
-
         # categorical nodes: their feature and word range in one table of
         # every tree's bitset words (plus a trailing zero word, the target of
         # out-of-range lookups)
         cat_trees = [t for t in trees if t.cat_boundaries is not None]
         has_cat = np.array([t.cat_boundaries is not None for t in trees])
-        n_words = np.zeros(len(trees), dtype=np.int64)
+        n_words = np.zeros(self.n_trees, dtype=np.int64)
         n_words[has_cat] = [len(t.cat_threshold) for t in cat_trees]
-        n_bounds = np.zeros(len(trees), dtype=np.int64)
+        n_bounds = np.zeros(self.n_trees, dtype=np.int64)
         n_bounds[has_cat] = [len(t.cat_boundaries) for t in cat_trees]
         self.cat_words = np.concatenate(
             [t.cat_threshold for t in cat_trees] + [np.zeros(1)]
@@ -254,38 +341,47 @@ class _PackedForest:
         self.cat_start = (np.cumsum(n_words) - n_words)[cat_owner] + bounds[at]
         self.cat_n_words = bounds[at + 1] - bounds[at]
 
-        n_total = total_nodes + total_leaves
-        leaf_ids = np.arange(total_nodes, n_total)
-        self.column = np.concatenate([column, np.zeros(total_leaves, dtype=np.int64)])
-        # a categorical column holds 0.0 for left, 1.0 for right
-        self.threshold = np.concatenate(
-            [np.where(is_cat, 0.0, threshold), np.zeros(total_leaves)]
-        )
-        left = np.concatenate([global_id(_concat(trees, "left_child")), leaf_ids])
-        right = np.concatenate([global_id(_concat(trees, "right_child")), leaf_ids])
-        self.children = np.stack([right, left], axis=1).ravel()
-        self.value = np.concatenate(
-            [np.zeros(total_nodes), _concat(trees, "leaf_value").astype(np.float64)]
-        )
-        roots = np.where(n_nodes > 0, node_base, leaf_base)
-        # pad to whole iterations with trees that are one 0.0 leaf
-        pad = -len(trees) % per_iteration
-        if pad:
-            self.column = np.append(self.column, 0)
-            self.threshold = np.append(self.threshold, 0.0)
-            self.children = np.append(self.children, [n_total, n_total])
-            self.value = np.append(self.value, 0.0)
-            roots = np.append(roots, np.full(pad, n_total))
-        self.roots = roots
-        self.n_trees = len(roots)
-
-        # the deepest root-to-leaf path bounds the level loop
-        self.depth = 0
-        frontier = roots[roots < total_nodes]
-        while frontier.size:
-            self.depth += 1
-            kids = np.concatenate([left[frontier], right[frontier]])
-            frontier = kids[kids < total_nodes]
+        block_trees = min(self.n_trees, max(1, _BLOCK_BYTES // (self.words * self.dtype.itemsize)))
+        self.columns: list[_Column] = []
+        num_nodes = np.flatnonzero(~is_cat)[np.argsort(num_column, kind="stable")]
+        ends = np.cumsum(np.bincount(num_column, minlength=len(keys)))
+        for c in range(len(keys)):
+            nodes = num_nodes[ends[c - 1] if c else 0:ends[c]]
+            thresholds, rank = np.unique(threshold[nodes], return_inverse=True)
+            block, slot = np.divmod(owner[nodes], block_trees)
+            start = int(block.min())
+            block -= start
+            n_blocks = int(block.max()) + 1
+            # one row per (block, distinct threshold), in that order, after
+            # the all-ones row 0; built as (block, nth threshold in block)
+            cells, cell = np.unique(block * len(thresholds) + rank, return_inverse=True)
+            cell_block = cells // len(thresholds)
+            per_block = np.bincount(cell_block, minlength=n_blocks)
+            nth = np.arange(len(cells)) - (np.cumsum(per_block) - per_block)[cell_block]
+            grid = np.full((n_blocks, per_block.max(), block_trees, self.words), self.ones)
+            np.bitwise_and.at(grid, (block, nth[cell], slot), masks[nodes])
+            np.bitwise_and.accumulate(grid, axis=1, out=grid)
+            table = np.concatenate([np.full((1, block_trees, self.words), self.ones),
+                                    grid[cell_block, nth]])
+            # rank r reaches, per block, the row of its highest threshold
+            # below rank r, or row 0
+            rows = np.zeros((len(thresholds) + 1, n_blocks),
+                            dtype=np.uint16 if len(cells) < 2**16 else np.uint32)
+            rows[cells % len(thresholds) + 1, cell_block] = np.arange(1, len(cells) + 1)
+            np.maximum.accumulate(rows, axis=0, out=rows)
+            self.columns.append(_Column(
+                thresholds, rows, table.reshape(len(table), -1),
+                start * block_trees * self.words, (start + n_blocks) * block_trees * self.words,
+            ))
+        # categorical nodes apply their masks one by one: the masks, the
+        # first node of each tree that has any, and those trees' mask words
+        self.cat_masks = masks[is_cat]
+        self.cat_first = np.flatnonzero(np.diff(cat_owner, prepend=-1))
+        self.cat_mask_at = (cat_owner[self.cat_first, None] * self.words
+                            + np.arange(self.words)).ravel()
+        # a partial last block runs past the last tree, into scratch words
+        self.mask_words = -(-self.n_trees // block_trees) * block_trees * self.words
+        self.chunk_rows = max(1, _CHUNK_WORDS // self.mask_words)
 
     def _decision_inputs(self, x: np.ndarray) -> np.ndarray:
         """(n_rows, n_inputs): each numerical column with its missing values
@@ -311,13 +407,35 @@ class _PackedForest:
 
     def leaf_values(self, x: np.ndarray) -> np.ndarray:
         """(n_rows, n_trees): the leaf value every row reaches in every tree."""
-        inputs = self._decision_inputs(x).ravel()
-        row_base = (np.arange(len(x)) * self.n_inputs)[:, None]
-        node = np.broadcast_to(self.roots, (len(x), self.n_trees))
-        for _ in range(self.depth):
-            go_left = inputs[self.column[node] + row_base] <= self.threshold[node]
-            node = self.children[2 * node + go_left]
-        return self.value[node]
+        inputs = self._decision_inputs(x)
+        n = len(x)
+        mask = np.full((n, self.mask_words), self.ones)
+        for c, col in enumerate(self.columns):
+            v = inputs[:, c]
+            # rank: how many thresholds t the value is not <= (NaN: all)
+            if len(col.thresholds) <= _COUNT_RANK_MAX:
+                rank = np.full(n, len(col.thresholds))
+                for t in col.thresholds:
+                    rank -= v <= t
+            else:
+                rank = np.searchsorted(col.thresholds, v)
+            block_masks = col.table.take(col.rows.take(rank, axis=0), axis=0)
+            mask[:, col.lo:col.hi] &= block_masks.reshape(n, -1)
+        if self.cat_first.size:
+            right = inputs[:, len(self.in_feature):, None] == 1.0
+            hit = np.where(right, self.cat_masks, self.ones)
+            per_tree = np.bitwise_and.reduceat(hit, self.cat_first, axis=1)
+            mask[:, self.cat_mask_at] &= per_tree.reshape(n, -1)
+        word = mask[:, :self.n_trees * self.words]
+        at = self.leaf_at
+        if self.words > 1:  # the first word with a bit left
+            word = word.reshape(n, self.n_trees, self.words)
+            w = (word != 0).argmax(axis=2)
+            word = np.take_along_axis(word, w[..., None], 2)[..., 0]
+            at = at + w * self.bits
+        lowest = word & -word
+        exponent = lowest.astype(self.float_type).view(self.int_type) >> self.exp_shift
+        return self.leaf_value.take(at + exponent)
 
 
 @dataclass
@@ -365,7 +483,7 @@ class LightGBMModel:
         if self._forest is None:  # packed once per model, on first use
             self._forest = _PackedForest(self.trees, k)
         forest = self._forest
-        step = max(1, _CHUNK_CELLS // forest.n_trees)
+        step = forest.chunk_rows
         for start in range(0, len(features), step):
             leaf = forest.leaf_values(features[start:start + step])
             # a sequential cumsum over iterations adds each class's trees in

@@ -1,6 +1,6 @@
 """Property-based tests (hypothesis).
 
-The scorer's packed-forest traversal is checked against an independent
+The scorer's packed-forest kernel is checked against an independent
 scalar walker implementing the LightGBM decision rules directly — any
 vectorization/masking bug shows up as a divergence on some random
 forest x row combination (NaN, zeros, boundary values and out-of-range
@@ -15,7 +15,6 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from lightfusion_spark.frontdoor import rewrite_array_literals
-from lightfusion_spark.ml import lgbm_model
 from lightfusion_spark.ml.lgbm_model import LightGBMModel, Tree
 from lightfusion_spark.operators.dedup import _MINHASH_MOD
 from tests.test_scorer import one_tree_model
@@ -120,23 +119,24 @@ def test_vectorized_traversal_matches_scalar_walk(tr):
     assert got.tolist() == expected
 
 
-# Leaf-wise forests: each tree grows by splitting a drawn leaf, up to 31
-# leaves, with numerical nodes under every missing type x default
-# direction and categorical nodes with bitsets of one to three words.
-_THRESHOLDS = st.one_of(
-    st.sampled_from([-1.5, -0.0, 0.0, 1e-36, 0.5, 2.0, 33.0]),
-    st.floats(min_value=-10, max_value=10, allow_nan=False),
-)
+# Leaf-wise forests: each tree grows by splitting a random leaf, up to
+# 130 leaves (masks of uint32 up to 32 leaves, uint64 up to 64, several
+# uint64 words past that), with numerical nodes under every missing type x
+# default direction and categorical nodes with bitsets of one to three
+# words.  A tree is built from a drawn seed: hypothesis's buffer cannot
+# hold a 130-leaf tree drawn node by node.
+_THRESHOLDS = [-1.5, -0.0, 0.0, 1e-36, 0.5, 2.0, 33.0]
 
 
 @st.composite
 def leafwise_trees(draw, n_features):
-    n_leaves = draw(st.integers(1, 31))
+    n_leaves = draw(st.integers(1, 130))
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
     feature, threshold, dtype, left, right = [], [], [], [], []
     bounds, words = [0], []
     parent = [None]  # per leaf: (node, is_left) it hangs from
     for new_leaf in range(1, n_leaves):
-        leaf = draw(st.integers(0, new_leaf - 1))
+        leaf = int(rng.integers(new_leaf))
         node = len(feature)
         if parent[leaf] is not None:
             p, is_left = parent[leaf]
@@ -145,17 +145,19 @@ def leafwise_trees(draw, n_features):
         right.append(~new_leaf)
         parent[leaf] = (node, True)
         parent.append((node, False))
-        feature.append(draw(st.integers(0, n_features - 1)))
+        feature.append(int(rng.integers(n_features)))
         # missing type (bits 2-3) and default-left (bit 1) are drawn for
         # categorical nodes too, where the decision must ignore them
-        flags = draw(st.sampled_from([0, 1, 2])) << 2 | draw(st.booleans()) << 1
-        if draw(st.booleans()):
+        flags = int(rng.integers(3)) << 2 | int(rng.integers(2)) << 1
+        if rng.random() < 0.5:
             threshold.append(float(len(bounds) - 1))
-            words += draw(st.lists(st.integers(0, 2**32 - 1), min_size=1, max_size=3))
+            words += rng.integers(0, 2**32, int(rng.integers(1, 4))).tolist()
             bounds.append(len(words))
             dtype.append(flags | 1)
         else:
-            threshold.append(draw(_THRESHOLDS))
+            threshold.append(
+                float(rng.choice(_THRESHOLDS)) if rng.random() < 0.5 else rng.uniform(-10, 10)
+            )
             dtype.append(flags)
     has_cat = len(bounds) > 1
     return Tree(
@@ -165,9 +167,7 @@ def leafwise_trees(draw, n_features):
         decision_type=np.array(dtype, dtype=np.int64),
         left_child=np.array(left, dtype=np.int64),
         right_child=np.array(right, dtype=np.int64),
-        leaf_value=np.array(
-            draw(st.lists(st.floats(-5, 5), min_size=n_leaves, max_size=n_leaves))
-        ),
+        leaf_value=rng.uniform(-5, 5, n_leaves),
         cat_boundaries=np.array(bounds, dtype=np.int64) if has_cat else None,
         cat_threshold=np.array(words, dtype=np.int64) if has_cat else None,
     )
@@ -179,6 +179,8 @@ def forest_and_rows(draw):
     num_class = draw(st.sampled_from([1, 3]))
     n_iter = draw(st.integers(1, 3))
     trees = [draw(leafwise_trees(n_features)) for _ in range(num_class * n_iter)]
+    # 70 copies: more trees than one block (64 at most), and a partial last one
+    trees *= draw(st.sampled_from([1, 70]))
     model = LightGBMModel(
         num_class=num_class,
         num_tree_per_iteration=num_class,
@@ -214,10 +216,13 @@ def test_packed_forest_matches_scalar_walk(mr):
     k = model.n_outputs
     expected = np.zeros((len(pool), k))
     for r, row in enumerate(pool):
+        walks = {}  # the copies of a tree are one object
         for t, tree in enumerate(model.trees):
-            expected[r, t % k] += scalar_tree_walk(tree, row)
-    chunk_rows = lgbm_model._CHUNK_CELLS // len(model.trees)
-    for n_rows in (1, 64, chunk_rows + 3):
+            if id(tree) not in walks:
+                walks[id(tree)] = scalar_tree_walk(tree, row)
+            expected[r, t % k] += walks[id(tree)]
+    model.predict_raw(pool)  # packs the forest, which sets the chunk size
+    for n_rows in (1, 64, model._forest.chunk_rows + 3):
         got = model.predict_raw(np.resize(pool, (n_rows, pool.shape[1])))
         want = np.resize(expected, (n_rows, k))
         assert (got == want).all(), (n_rows, np.argwhere(got != want)[:3])

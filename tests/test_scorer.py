@@ -11,6 +11,7 @@ import numpy as np
 import pytest
 
 from lightfusion_spark.ml.fixture import build_model_text
+from lightfusion_spark.ml import lgbm_model
 from lightfusion_spark.ml.lgbm_model import LightGBMModel, Tree, parse_model_str
 
 SIMPLE_MODEL = """tree
@@ -381,3 +382,119 @@ def test_zero_missing_type_default_direction():
     assert m2.predict_raw(np.array([[0.0, 0.0]]))[0, 0] == 10.0
     # NaN under missing=Zero converts to 0.0 then takes the default branch
     assert m.predict_raw(np.array([[np.nan, 0.0]]))[0, 0] == 20.0
+
+
+def _left_spine(thresholds: list[float], decision_type: int) -> Tree:
+    """Nodes on feature 0, each one's left child the next: a row leaves at
+    the first node it goes right at, node i into leaf i (value i), and a
+    row left of every node reaches the last leaf."""
+    m = len(thresholds)
+    return Tree(
+        num_leaves=m + 1,
+        split_feature=np.zeros(m, dtype=np.int64),
+        threshold=np.array(thresholds),
+        decision_type=np.full(m, decision_type),
+        left_child=np.array(list(range(1, m)) + [~m]),
+        right_child=~np.arange(m),
+        leaf_value=np.arange(m + 1, dtype=np.float64),
+    )
+
+
+@pytest.mark.parametrize("zero", [0.0, -0.0])
+@pytest.mark.parametrize(
+    "thresholds",
+    [[1.0, 0.0, -2.0], [5.0, 3.0, 1.0, 0.0, -1.0, -2.0, -7.0]],
+    ids=["compare-count", "binary-search"],
+)
+def test_threshold_rank_edges(thresholds, zero):
+    """Both rank paths send a value equal to a threshold left, a NaN under
+    missing type NaN / default right (decision_type 8) right of every
+    threshold, -inf left of every one, and -0.0 / 0.0 left of a 0.0 /
+    -0.0 threshold.  With thresholds falling along the spine, a row's
+    score is the number of thresholds it is <= to."""
+    thresholds = [zero if t == 0.0 else t for t in thresholds]
+    m = one_tree_model(_left_spine(thresholds, 8), 1)
+    at_zero = thresholds.index(zero)
+    cases = {t: i + 1 for i, t in enumerate(thresholds)}  # equal goes left
+    cases.update({-zero: at_zero + 1, -np.inf: len(thresholds), np.inf: 0, np.nan: 0})
+    values = np.array(list(cases), dtype=np.float64)[:, None]
+    assert m.predict_raw(values)[:, 0].tolist() == list(cases.values())
+    (column,) = m._forest.columns
+    few = len(column.thresholds) <= lgbm_model._COUNT_RANK_MAX
+    assert few == (len(thresholds) == 3)
+
+
+def _random_forest(rng, n_trees: int, n_leaves: int, n_features: int, thresholds,
+                   decision_types=(0, 2, 8, 10)) -> LightGBMModel:
+    """A regression forest of leaf-wise trees: each grows by splitting a
+    random leaf, on a random feature, at ``thresholds(features)``, with a
+    decision type drawn from ``decision_types`` (by default missing type
+    None or NaN, either default direction)."""
+    trees = []
+    for _ in range(n_trees):
+        left, right = [], []
+        parent = [None]  # per leaf: (node, is_left) it hangs from
+        for new_leaf, leaf in enumerate(rng.integers(np.arange(1, n_leaves)), start=1):
+            node = len(left)
+            if parent[leaf] is not None:
+                p, is_left = parent[leaf]
+                (left if is_left else right)[p] = node
+            left.append(~leaf)
+            right.append(~new_leaf)
+            parent[leaf] = (node, True)
+            parent.append((node, False))
+        feature = rng.integers(n_features, size=n_leaves - 1)
+        trees.append(Tree(
+            num_leaves=n_leaves,
+            split_feature=feature,
+            threshold=thresholds(feature),
+            decision_type=rng.choice(decision_types, size=n_leaves - 1),
+            left_child=np.array(left),
+            right_child=np.array(right),
+            leaf_value=rng.normal(size=n_leaves),
+        ))
+    return LightGBMModel(num_class=1, num_tree_per_iteration=1,
+                         max_feature_idx=n_features - 1, objective="", trees=trees)
+
+
+def test_large_forest_tables_bounded():
+    """2 000 trees x 255 leaves x 100 features, with thresholds on 255 bin
+    edges per feature (LightGBM's default ``max_bin``): the block tables
+    hold at most (internal nodes + columns) x ``_BLOCK_BYTES`` bytes, tables
+    and rank maps together stay under 200 MB, and rows score bit for bit
+    as the scalar walk."""
+    from tests.test_property import scalar_tree_walk
+
+    rng = np.random.default_rng(11)
+    n_trees, n_leaves, n_features = 2000, 255, 100
+    edges = np.sort(rng.normal(size=(n_features, 255)), axis=1)
+    model = _random_forest(rng, n_trees, n_leaves, n_features,
+                           lambda f: edges[f, rng.integers(255, size=len(f))])
+    rows = rng.normal(size=(4, n_features))
+    rows[0, ::3] = np.nan
+    rows[1] = edges[:, 100]  # on a threshold of every feature
+    got = model.predict_raw(rows)[:, 0]
+    forest = model._forest
+    assert (forest.words, forest.bits) == (4, 64)
+    table_bytes = sum(c.table.nbytes for c in forest.columns)
+    map_bytes = sum(c.rows.nbytes for c in forest.columns)
+    assert table_bytes <= (n_trees * (n_leaves - 1) + len(forest.columns)) * lgbm_model._BLOCK_BYTES
+    assert table_bytes + map_bytes < 200e6, (table_bytes, map_bytes)
+    want = [sum(scalar_tree_walk(t, row) for t in model.trees) for row in rows]
+    assert got.tolist() == want
+
+
+def test_column_past_uint16_table_rows():
+    """A column whose table has more than 65 535 rows (300 trees x 255
+    leaves on one feature and missing rule, every threshold distinct)
+    indexes it through a uint32 rank map and still scores bit for bit."""
+    from tests.test_property import scalar_tree_walk
+
+    rng = np.random.default_rng(12)
+    model = _random_forest(rng, 300, 255, 1, lambda f: rng.normal(size=len(f)), (0, 2))
+    rows = np.array([[np.nan], [-np.inf], [0.0], [0.3], [-1.2], [float(model.trees[7].threshold[3])]])
+    got = model.predict_raw(rows)[:, 0]
+    (column,) = model._forest.columns
+    assert len(column.table) > 2**16 and column.rows.dtype == np.uint32
+    want = [sum(scalar_tree_walk(t, row) for t in model.trees) for row in rows]
+    assert got.tolist() == want
