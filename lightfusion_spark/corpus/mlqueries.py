@@ -22,7 +22,13 @@ from pyspark.sql import functions as F
 
 from ..functions.argmax import argmax, register_argmax
 from ..functions.inference import register_lightgbm_function
-from ..ml.lgbm_model import LightGBMModel, load_model
+from ..ml.lgbm_model import (
+    _MISSING_TYPE_NAN,
+    _MISSING_TYPE_ZERO,
+    _ZERO_THRESHOLD,
+    LightGBMModel,
+    load_model,
+)
 from ..fixtures import fixture_path
 from .registry import register
 from .util import table
@@ -38,6 +44,23 @@ TSV_PATH = fixture_path("data", "multiclass.test")
 # model -> SQL compilation (oracle side)
 # ---------------------------------------------------------------------------
 
+def _numerical_sql(x: str, threshold: float, decision_type: int) -> str:
+    """LightGBM ``NumericalDecision`` as a SQL condition that holds when
+    the value goes left: ``x <= threshold``, with missing values routed
+    by the node's missing type (``decision_type`` bits 2-3).  Under None a
+    NaN is compared as 0.0; under Zero a NaN or ``|x| <= 1e-35``, and under
+    NaN a NaN, takes the default direction (bit1 set: left)."""
+    missing_type = (decision_type >> 2) & 3
+    missing = f"isnan({x})"
+    default_left = bool(decision_type & 2)
+    if missing_type == _MISSING_TYPE_ZERO:
+        missing = f"({missing} OR abs({x}) <= {_ZERO_THRESHOLD!r})"
+    elif missing_type != _MISSING_TYPE_NAN:
+        default_left = 0.0 <= threshold
+    cmp = f"{x} <= {threshold!r}"
+    return f"({missing} OR {cmp})" if default_left else f"(NOT {missing} AND {cmp})"
+
+
 def _node_sql(tree, i: int, feat_ref) -> str:
     """Nested CASE expression for the subtree rooted at internal node i.
 
@@ -45,7 +68,8 @@ def _node_sql(tree, i: int, feat_ref) -> str:
     to an explicit ``IN`` list over ``TRUNC(feature)`` — the
     ``CategoricalDecision`` membership test for non-NaN inputs (negative
     and out-of-range values fall through to the ELSE/right branch, same
-    as the scorer; the corpus features are never NaN/NULL)."""
+    as the scorer; the corpus features are never NaN/NULL).  Numerical
+    nodes compile their missing-value routing (:func:`_numerical_sql`)."""
 
     def child_sql(c: int) -> str:
         if c < 0:  # negative child encodes leaf ~c
@@ -68,7 +92,7 @@ def _node_sql(tree, i: int, feat_ref) -> str:
         in_list = ", ".join(str(c) for c in cats)
         cond = f"CAST(TRUNC({feat_ref(f)}) AS BIGINT) IN ({in_list})"
     else:
-        cond = f"{feat_ref(f)} <= {repr(float(tree.threshold[i]))}"
+        cond = _numerical_sql(feat_ref(f), float(tree.threshold[i]), int(tree.decision_type[i]))
     return (
         f"(CASE WHEN {cond} THEN {child_sql(int(tree.left_child[i]))} "
         f"ELSE {child_sql(int(tree.right_child[i]))} END)"

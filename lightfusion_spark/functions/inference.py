@@ -15,9 +15,10 @@ Spark-first design decisions:
   column's offsets and flat values buffer and the ``List<Float64>`` output
   is built in one piece (``src/udf.rs:200-221``); no pandas object or
   per-row Python object is made in either direction.
-* **Per-executor model cache** — a module-level registry keyed by model
-  path and content digest; each executor process parses the shipped
-  model text once, on first use.
+* **Per-process model cache** — a module-level registry keyed by model
+  path and content digest; CREATE FUNCTION parses a model file once
+  however many functions are created over it, and each executor process
+  parses the shipped model text once, on first use.
 * **Micro-batching parity** — rows are scored in chunks of ``batch_size``
   with a partial tail chunk, exactly like the reference's batching loop
   (``src/udf.rs:181-192``, ``end = min(start + batch_size, n_rows)`` at
@@ -73,7 +74,8 @@ def _get_model(cache_key: tuple[str, str], model_text: str) -> LightGBMModel:
 
 
 def _assemble_features(arr: pa.Array, n_features: int) -> np.ndarray:
-    """Arrow ``list<float|double>`` batch -> one (n_rows, n_features) tensor.
+    """Arrow ``list<float|double>`` batch -> one (n_rows, n_features)
+    float32 or float64 tensor, as the list's element type.
 
     The reference's slice over the list array's flat values buffer
     (``src/udf.rs:213-217``): the rows' values are the contiguous range
@@ -102,7 +104,8 @@ def _assemble_features(arr: pa.Array, n_features: int) -> np.ndarray:
         )
     start, end = int(offsets[0]), int(offsets[-1])
     flat = arr.values.slice(start, end - start).to_numpy(zero_copy_only=False)
-    return flat.astype(np.float64, copy=False).reshape(len(arr), n_features)
+    # FLOAT[] stays float32: the scorer upcasts only the features it reads
+    return flat.reshape(len(arr), n_features)
 
 
 #: Models larger than this ride as a SparkContext broadcast (torrent-style
@@ -142,11 +145,12 @@ def make_lightgbm_udf(
         raise LightFusionConfigError("batch size must be > 0")
 
     # Validate the model *now* (CREATE FUNCTION time), like Booster::from_file
-    # failing at create in the reference (src/lib.rs:67-71).
+    # failing at create in the reference (src/lib.rs:67-71); an unchanged
+    # file is parsed once per process, a malformed one fails every time.
     with open(model_path, "r", encoding="utf-8") as fh:
         text = fh.read()
-    model = parse_model_str(text)
     cache_key = (model_path, hashlib.sha256(text.encode("utf-8")).hexdigest()[:16])
+    model = _get_model(cache_key, text)
     model_text: str | None = None
     model_broadcast = None
     if spark is not None and len(text) > BROADCAST_THRESHOLD_BYTES:

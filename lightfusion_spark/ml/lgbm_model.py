@@ -46,20 +46,22 @@ All trees are scored by one kernel, not a loop over trees or levels: the
 QuickScorer traversal (Lucchese et al., SIGIR 2015).  Each tree's leaves
 are numbered left to right, and each internal node holds a bitmask of the
 leaves outside its left subtree; a row's exit leaf is the lowest bit that
-survives the AND of the masks of the nodes where it goes right.  The
-missing-value and categorical rules run before that, once per chunk: each
-(feature, missing rule) pair used by the forest becomes one decision-input
-column with its missing values replaced by a value that routes them the
-default way, and each categorical node becomes a 0/1 column of its bitset
-decisions.  A value's *rank* on a numerical column is how many of the
-column's distinct thresholds it is not ``<=`` to, and per block of trees
-a table holds, for every rank, the AND of the masks of the nodes the value
-goes right at; so a chunk costs, per column, one rank step, one row gather
-and one ``&=`` into its (row × tree) masks.  Categorical nodes AND their
-masks in directly.  The tables are built once per model, on the first
-``predict_raw``; see :class:`_PackedForest` for their layout and size.
-Per-class sums add each class's trees in tree order, the order the SQL
-compiler (``corpus/mlqueries.py``) uses too, so the two agree bit for bit.
+survives the AND of the masks of the nodes where it goes right.  Each
+(feature, missing type) pair of the forest's numerical nodes is one
+decision-input column.  A value's *rank* on a column is how many of the
+column's m distinct thresholds it is not ``<=`` to (a NaN is ranked as
+0.0 under missing type None), or m + 1 for a value that is missing under
+type Zero or NaN; per block of trees a table holds, for every rank, the
+AND of the masks of the nodes the value goes right at, so a missing
+value's row ANDs the default-right nodes' masks.  ``predict_raw`` ranks
+every column and takes every categorical node's bitset decision once per
+call, upcasting only the features read; then a chunk of rows costs, per
+column, one row gather and one ``&=`` into its (row × tree) masks, and
+categorical nodes AND their masks in directly.  The tables are built once
+per model, on the first ``predict_raw``; see :class:`_PackedForest` for
+their layout and size.  Per-class sums add each class's trees in tree
+order, the order the SQL compiler (``corpus/mlqueries.py``) uses too, so
+the two agree bit for bit.
 """
 
 from __future__ import annotations
@@ -71,6 +73,7 @@ import numpy as np
 
 _CATEGORICAL_MASK = 1
 _DEFAULT_LEFT_MASK = 2
+_MISSING_TYPE_NONE = 0
 _MISSING_TYPE_ZERO = 1
 _MISSING_TYPE_NAN = 2
 #: LightGBM's kZeroThreshold: under missing type Zero, |value| <= this is missing.
@@ -85,15 +88,6 @@ _CHUNK_WORDS = 1 << 16
 #: Columns with at most this many thresholds rank a value by counting
 #: compares; more, by binary search.
 _COUNT_RANK_MAX = 4
-
-# Missing-value rules of LightGBM NumericalDecision, by rule id: 0 missing
-# type None (a NaN is compared as 0.0), 1/2 Zero default left/right (a NaN
-# or |v| <= kZeroThreshold takes the default branch), 3/4 NaN default
-# left/right (a NaN takes it).  Replacing a missing value by -inf (default
-# left: -inf <= any threshold) or NaN (default right: NaN <= x is false)
-# turns every rule into the plain ``value <= threshold`` test.
-_RULE_FILL = np.array([0.0, -np.inf, np.nan, -np.inf, np.nan])
-_RULE_ZERO_IS_MISSING = np.array([False, True, True, False, False])
 
 
 @dataclass
@@ -201,7 +195,9 @@ class _Column(NamedTuple):
     cumulative-AND leaf masks with a rank -> table-row map."""
 
     thresholds: np.ndarray  # (m,) float64, sorted, distinct
-    rows: np.ndarray  # (m + 1, n_blocks) uint16/32: rank -> table row, per block
+    #: rank -> table row, per block: (m + 1, n_blocks) uint16/32 under
+    #: missing type None, (m + 2, n_blocks) with the missing rank m + 1
+    rows: np.ndarray
     table: np.ndarray  # (n_rows, block trees * words); row 0 is all ones
     lo: int  # the mask words the blocks cover: [lo, hi)
     hi: int
@@ -224,17 +220,22 @@ class _PackedForest:
     leaves, one uint64 up to 64, more uint64 words past that.
 
     The trees are cut into blocks of ``_BLOCK_BYTES // mask bytes`` trees
-    (64 at uint32; the last block may be partial).  Per numerical column,
-    each block that reads it has one table row per distinct threshold of
-    its nodes on the column, holding the AND of the masks of the nodes at
-    or below that threshold; row 0, all ones, serves values left of every
-    threshold.  A value's rank (how many of the column's thresholds it is
-    not ``<=`` to) reaches its row in every block through ``rows``.  Table
-    bytes: (1 + distinct (block, threshold) pairs) × ``_BLOCK_BYTES`` per
-    column, at most (internal nodes + columns) × ``_BLOCK_BYTES``.  Map
-    bytes: (distinct thresholds + 1) × blocks × 2 per column (4 past
-    65 535 table rows).  Categorical nodes, one column each, AND their
-    masks in directly instead.
+    (64 at uint32; the last block may be partial).  A numerical column is
+    one feature under one missing type.  Per column, each block that reads
+    it has one table row per distinct threshold of its nodes on the
+    column, holding the AND of the masks of the nodes at or below that
+    threshold; row 0, all ones, serves values left of every threshold.  A
+    value's rank (how many of the column's m thresholds it is not ``<=``
+    to) reaches its row in every block through ``rows``.  Under missing
+    type Zero or NaN a missing value has rank m + 1, whose row ANDs the
+    masks of the block's default-right nodes: row 0 when it has none, its
+    last cumulative row when all its nodes are default-right, else a row
+    of its own.  Table bytes: (1 + distinct (block, threshold) pairs +
+    blocks with both default directions) × ``_BLOCK_BYTES`` per column, at
+    most (internal nodes + columns + column blocks) × ``_BLOCK_BYTES``.
+    Map bytes: (distinct thresholds + 1, + 1 more under Zero or NaN) ×
+    blocks × 2 per column (4 past 65 536 table rows).  Categorical nodes,
+    one column each, AND their masks in directly instead.
     """
 
     def __init__(self, trees: list[Tree], per_iteration: int) -> None:
@@ -305,21 +306,17 @@ class _PackedForest:
         dtype = _concat(trees, "decision_type")
         is_cat = (dtype & _CATEGORICAL_MASK) != 0
         missing = (dtype >> 2) & 3
+        missing[missing == 3] = _MISSING_TYPE_NONE  # as LightGBM reads it
         default_right = (dtype & _DEFAULT_LEFT_MASK) == 0
-        rule = np.select(
-            [missing == _MISSING_TYPE_ZERO, missing == _MISSING_TYPE_NAN],
-            [1 + default_right, 3 + default_right],
-            0,
-        )
 
-        # decision inputs: one column per (feature, rule) of a numerical
-        # node, then one 0/1 (left/right) column per categorical node
+        # decision inputs: one column per (feature, missing type) of a
+        # numerical node, then one left/right decision per categorical node
         keys, num_column = np.unique(
-            feature[~is_cat] * len(_RULE_FILL) + rule[~is_cat], return_inverse=True
+            feature[~is_cat] * 3 + missing[~is_cat], return_inverse=True
         )
-        self.in_feature = keys // len(_RULE_FILL)
-        self.in_fill = _RULE_FILL[keys % len(_RULE_FILL)]
-        self.in_zero_missing = _RULE_ZERO_IS_MISSING[keys % len(_RULE_FILL)]
+        self.in_feature = keys // 3
+        self.nan_missing = (keys % 3 == _MISSING_TYPE_NAN)[:, None]
+        self.zero_missing = (keys % 3 == _MISSING_TYPE_ZERO)[:, None]
         # categorical nodes: their feature and word range in one table of
         # every tree's bitset words (plus a trailing zero word, the target of
         # out-of-range lookups)
@@ -343,36 +340,52 @@ class _PackedForest:
 
         block_trees = min(self.n_trees, max(1, _BLOCK_BYTES // (self.words * self.dtype.itemsize)))
         self.columns: list[_Column] = []
+        missing_rank = np.zeros(len(keys), dtype=np.intp)
         num_nodes = np.flatnonzero(~is_cat)[np.argsort(num_column, kind="stable")]
         ends = np.cumsum(np.bincount(num_column, minlength=len(keys)))
-        for c in range(len(keys)):
+        for c, key in enumerate(keys):
             nodes = num_nodes[ends[c - 1] if c else 0:ends[c]]
             thresholds, rank = np.unique(threshold[nodes], return_inverse=True)
+            m = len(thresholds)
             block, slot = np.divmod(owner[nodes], block_trees)
             start = int(block.min())
             block -= start
             n_blocks = int(block.max()) + 1
             # one row per (block, distinct threshold), in that order, after
             # the all-ones row 0; built as (block, nth threshold in block)
-            cells, cell = np.unique(block * len(thresholds) + rank, return_inverse=True)
-            cell_block = cells // len(thresholds)
+            cells, cell = np.unique(block * m + rank, return_inverse=True)
+            cell_block = cells // m
             per_block = np.bincount(cell_block, minlength=n_blocks)
             nth = np.arange(len(cells)) - (np.cumsum(per_block) - per_block)[cell_block]
             grid = np.full((n_blocks, per_block.max(), block_trees, self.words), self.ones)
             np.bitwise_and.at(grid, (block, nth[cell], slot), masks[nodes])
             np.bitwise_and.accumulate(grid, axis=1, out=grid)
-            table = np.concatenate([np.full((1, block_trees, self.words), self.ones),
-                                    grid[cell_block, nth]])
+            tables = [np.full((1, block_trees, self.words), self.ones), grid[cell_block, nth]]
             # rank r reaches, per block, the row of its highest threshold
             # below rank r, or row 0
-            rows = np.zeros((len(thresholds) + 1, n_blocks),
-                            dtype=np.uint16 if len(cells) < 2**16 else np.uint32)
-            rows[cells % len(thresholds) + 1, cell_block] = np.arange(1, len(cells) + 1)
+            rows = np.zeros((m + 1, n_blocks), dtype=np.int64)
+            rows[cells % m + 1, cell_block] = np.arange(1, len(cells) + 1)
             np.maximum.accumulate(rows, axis=0, out=rows)
+            if key % 3 != _MISSING_TYPE_NONE:
+                # the missing rank m + 1 goes right at the default-right nodes
+                missing_rank[c] = m + 1
+                right = default_right[nodes]
+                n_right = np.bincount(block[right], minlength=n_blocks)
+                mixed = (n_right > 0) & (n_right < np.bincount(block, minlength=n_blocks))
+                miss = np.where(n_right > 0, rows[m], 0)
+                miss[mixed] = len(cells) + 1 + np.arange(mixed.sum())
+                grid = np.full((n_blocks, block_trees, self.words), self.ones)
+                np.bitwise_and.at(grid, (block[right], slot[right]), masks[nodes[right]])
+                tables.append(grid[mixed])
+                rows = np.vstack([rows, miss])
+            table = np.concatenate(tables)
             self.columns.append(_Column(
-                thresholds, rows, table.reshape(len(table), -1),
+                thresholds,
+                rows.astype(np.uint16 if len(table) <= 2**16 else np.uint32),
+                table.reshape(len(table), -1),
                 start * block_trees * self.words, (start + n_blocks) * block_trees * self.words,
             ))
+        self.missing_rank = missing_rank[:, None]
         # categorical nodes apply their masks one by one: the masks, the
         # first node of each tree that has any, and those trees' mask words
         self.cat_masks = masks[is_cat]
@@ -383,47 +396,50 @@ class _PackedForest:
         self.mask_words = -(-self.n_trees // block_trees) * block_trees * self.words
         self.chunk_rows = max(1, _CHUNK_WORDS // self.mask_words)
 
-    def _decision_inputs(self, x: np.ndarray) -> np.ndarray:
-        """(n_rows, n_inputs): each numerical column with its missing values
-        replaced by the value that routes them, then each categorical
-        node's decision."""
-        cols = x[:, self.in_feature]
-        missing = np.isnan(cols)
-        if self.in_zero_missing.any():
-            missing |= self.in_zero_missing & (np.abs(cols) <= _ZERO_THRESHOLD)
-        np.copyto(cols, np.broadcast_to(self.in_fill, cols.shape), where=missing)
-        if not self.cat_feature.size:
-            return cols
+    def decision_inputs(self, x: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """Every row's rank on every numerical column, (n_columns, n_rows),
+        and whether it goes right at every categorical node, (n_rows,
+        n_categorical).  Only the features read are upcast to float64."""
+        v = np.array(x[:, self.in_feature].T, dtype=np.float64, order="C")
+        # a NaN is compared as 0.0 under missing type None; under NaN it is
+        # missing, and under Zero it is missing as 0.0 is
+        missing = np.isnan(v)
+        v[missing] = 0.0
+        missing &= self.nan_missing
+        if self.zero_missing.any():
+            missing |= self.zero_missing & (np.abs(v) <= _ZERO_THRESHOLD)
+        # rank: how many thresholds t the value is not <= to, or m + 1 for
+        # a missing value
+        ranks = np.empty(v.shape, dtype=np.intp)
+        for rank, value, col in zip(ranks, v, self.columns):
+            if len(col.thresholds) <= _COUNT_RANK_MAX:
+                rank[:] = len(col.thresholds)
+                for t in col.thresholds:
+                    rank -= value <= t
+            else:
+                rank[:] = col.thresholds.searchsorted(value)
+        np.copyto(ranks, self.missing_rank, where=missing)
         # LightGBM CategoricalDecision: trunc(value) in the node's uint32
         # bitset goes left; NaN (as -1), negatives and categories past the
         # bitset's words go right
-        vals = x[:, self.cat_feature]
+        vals = x[:, self.cat_feature].astype(np.float64)
         int_fval = np.trunc(np.where(np.isnan(vals), -1.0, vals)).astype(np.int64)
         word = int_fval >> 5
         in_range = (int_fval >= 0) & (word < self.cat_n_words)
         bits = self.cat_words[np.where(in_range, self.cat_start + word, -1)]
         go_left = in_range & (((bits >> (int_fval & 31)) & 1) == 1)
-        return np.concatenate([cols, (~go_left).astype(np.float64)], axis=1)
+        return ranks, ~go_left
 
-    def leaf_values(self, x: np.ndarray) -> np.ndarray:
-        """(n_rows, n_trees): the leaf value every row reaches in every tree."""
-        inputs = self._decision_inputs(x)
-        n = len(x)
+    def leaf_values(self, ranks: np.ndarray, right: np.ndarray) -> np.ndarray:
+        """(n_trees, n_rows): the leaf value every row reaches in every
+        tree, from a chunk of :meth:`decision_inputs`."""
+        n = ranks.shape[1]
         mask = np.full((n, self.mask_words), self.ones)
-        for c, col in enumerate(self.columns):
-            v = inputs[:, c]
-            # rank: how many thresholds t the value is not <= (NaN: all)
-            if len(col.thresholds) <= _COUNT_RANK_MAX:
-                rank = np.full(n, len(col.thresholds))
-                for t in col.thresholds:
-                    rank -= v <= t
-            else:
-                rank = np.searchsorted(col.thresholds, v)
+        for rank, col in zip(ranks, self.columns):
             block_masks = col.table.take(col.rows.take(rank, axis=0), axis=0)
             mask[:, col.lo:col.hi] &= block_masks.reshape(n, -1)
         if self.cat_first.size:
-            right = inputs[:, len(self.in_feature):, None] == 1.0
-            hit = np.where(right, self.cat_masks, self.ones)
+            hit = np.where(right[..., None], self.cat_masks, self.ones)
             per_tree = np.bitwise_and.reduceat(hit, self.cat_first, axis=1)
             mask[:, self.cat_mask_at] &= per_tree.reshape(n, -1)
         word = mask[:, :self.n_trees * self.words]
@@ -435,7 +451,7 @@ class _PackedForest:
             at = at + w * self.bits
         lowest = word & -word
         exponent = lowest.astype(self.float_type).view(self.int_type) >> self.exp_shift
-        return self.leaf_value.take(at + exponent)
+        return self.leaf_value.take((at + exponent).T)
 
 
 @dataclass
@@ -467,8 +483,11 @@ class LightGBMModel:
 
     # -- prediction ---------------------------------------------------------
     def predict_raw(self, features: np.ndarray) -> np.ndarray:
-        """Sum tree outputs per class.  Returns (n_rows, n_outputs)."""
-        features = np.asarray(features, dtype=np.float64)
+        """Sum tree outputs per class.  Returns (n_rows, n_outputs).
+
+        ``features`` may be float32: float32 -> float64 is exact, and only
+        the features the trees read are converted."""
+        features = np.asarray(features)
         if features.ndim == 1:
             features = features.reshape(1, -1)
         if features.shape[1] < self.num_features:
@@ -483,14 +502,17 @@ class LightGBMModel:
         if self._forest is None:  # packed once per model, on first use
             self._forest = _PackedForest(self.trees, k)
         forest = self._forest
+        ranks, right = forest.decision_inputs(features)
         step = forest.chunk_rows
         for start in range(0, len(features), step):
-            leaf = forest.leaf_values(features[start:start + step])
-            # a sequential cumsum over iterations adds each class's trees in
-            # tree order; sum() would pair them and change the last bit
+            leaf = forest.leaf_values(ranks[:, start:start + step], right[start:start + step])
+            # numpy reduces a leading axis one (class, row) slab after the
+            # next, so each class's trees add in tree order; a lone column
+            # it would sum pairwise, which changes the last bit
+            leaf = leaf.reshape(-1, k * leaf.shape[1])
             raw[start:start + step, :k] += (
-                leaf.reshape(len(leaf), -1, k).cumsum(axis=1)[:, -1]
-            )
+                np.add.reduce(leaf, axis=0) if leaf.shape[1] > 1 else leaf.cumsum(axis=0)[-1]
+            ).reshape(k, -1).T
         return raw
 
     def predict(self, features: np.ndarray) -> np.ndarray:

@@ -15,6 +15,7 @@ from pyspark.sql.types import ArrayType, DoubleType
 from lightfusion_spark.fixtures import fixture_path
 from lightfusion_spark.functions.inference import make_lightgbm_udf
 from lightfusion_spark.ml import load_model
+from lightfusion_spark.ml.lgbm_model import parse_model_str
 
 MODELS = ["multiclass", "quality_cls", "quality_cat", "embed_cls"]
 OUTPUT_TYPE = to_arrow_type(ArrayType(DoubleType()))
@@ -115,3 +116,48 @@ def test_pandas_series_batch_matches_arrow_batch():
     (from_arrow,) = _score(udf, _list_array(x, pa.float32()))
     (from_pandas,) = _score(udf, pd.Series(list(x)))
     assert from_pandas.equals(from_arrow)
+
+
+@pytest.mark.parametrize("name", MODELS)
+def test_float_and_double_inputs_score_the_same(name):
+    """FLOAT[] rows reach the scorer as float32, which upcasts only the
+    features it reads: the same values as DOUBLE[] score bit for bit."""
+    model = load_model(fixture_path("models", f"{name}.lgbm"))
+    rng = np.random.default_rng(6)
+    x = (_features(300, model.num_features, seed=6) * 30).astype(np.float32)
+    for value, share in ((np.nan, 0.1), (0.0, 0.05), (-0.0, 0.05), (1e-36, 0.05)):
+        x[rng.random(x.shape) < share] = value
+    outs = [
+        _score(_setup(name, batch_size=64, input_type=t)[1], _list_array(x, ELEMENT[t]))[0]
+        for t in ("float", "double")
+    ]
+    assert outs[0].equals(outs[1])
+
+
+def test_create_function_parses_an_unchanged_model_once(tmp_path, monkeypatch):
+    """Functions created over one model file share one parse; a rewritten
+    file is parsed again, and a malformed one fails at every creation."""
+    from lightfusion_spark.functions import inference
+
+    parses = []
+
+    def counting_parse(text):
+        parses.append(text)
+        return parse_model_str(text)
+
+    monkeypatch.setattr(inference, "parse_model_str", counting_parse)
+    monkeypatch.setattr(inference, "_MODEL_CACHE", {})
+    path = tmp_path / "model.lgbm"
+    text = open(fixture_path("models", "multiclass.lgbm"), encoding="utf-8").read()
+    path.write_text(text)
+    make_lightgbm_udf(str(path), batch_size=8)
+    make_lightgbm_udf(str(path), batch_size=64, input_type="float")
+    assert len(parses) == 1
+    path.write_text(text + "\n")
+    make_lightgbm_udf(str(path))
+    assert len(parses) == 2
+    path.write_text("tree\nversion=v4\n")
+    for _ in range(2):
+        with pytest.raises(ValueError, match="max_feature_idx"):
+            make_lightgbm_udf(str(path))
+    assert len(parses) == 4

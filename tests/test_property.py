@@ -271,18 +271,27 @@ def random_model_and_rows(draw):
         )
     ]
     idx = 0
-    finite = st.floats(min_value=-4, max_value=4, allow_nan=False)
+    finite = st.floats(min_value=-4, max_value=4, allow_nan=False).map(lambda v: round(v, 3))
+    # LightGBM's missing values and the values around zero they hinge on
+    near_zero = st.sampled_from([0.0, -0.0, 1e-36, -1e-36, 1e-35, -1e-34])
+    threshold = st.one_of(finite, near_zero)
+    value = st.one_of(finite, near_zero, st.just(float("nan")))
+    # numerical, missing type None / Zero / NaN, either default direction
+    decision_type = st.sampled_from([0, 2, 4, 6, 8, 10])
+    tmpl = TREE_TMPL.replace("decision_type=2 2", "decision_type={d0} {d1}")
     for _ in range(n_iter * num_class):
         parts.append(
-            TREE_TMPL.format(
+            tmpl.format(
                 idx=idx,
                 f0=draw(st.integers(0, n_features - 1)),
                 f1=draw(st.integers(0, n_features - 1)),
-                t0=round(draw(finite), 3),
-                t1=round(draw(finite), 3),
-                l0=round(draw(finite), 3),
-                l1=round(draw(finite), 3),
-                l2=round(draw(finite), 3),
+                t0=draw(threshold),
+                t1=draw(threshold),
+                d0=draw(decision_type),
+                d1=draw(decision_type),
+                l0=draw(finite),
+                l1=draw(finite),
+                l2=draw(finite),
             )
         )
         idx += 1
@@ -290,7 +299,7 @@ def random_model_and_rows(draw):
     model = parse_model_str("\n".join(parts))
     n_rows = draw(st.integers(1, 5))
     rows = np.array(
-        [[round(draw(finite), 3) for _ in range(n_features)] for _ in range(n_rows)],
+        [[draw(value) for _ in range(n_features)] for _ in range(n_rows)],
         dtype=np.float64,
     )
     return model, rows
@@ -300,7 +309,8 @@ def random_model_and_rows(draw):
 @settings(max_examples=25, deadline=None)
 def test_model_to_sql_compiler_matches_scorer(mr):
     """The oracle generator (model compiled to SQL CASE trees) must agree
-    with the NumPy scorer on random models — executed through DuckDB."""
+    with the NumPy scorer on random models, missing-value routing included
+    — executed through DuckDB."""
     import duckdb
 
     from lightfusion_spark.corpus.mlqueries import model_class_scores_sql
@@ -310,16 +320,15 @@ def test_model_to_sql_compiler_matches_scorer(mr):
     score_exprs = model_class_scores_sql(model, feat_ref)
     con = duckdb.connect()
     expected = model.predict_raw(rows)
+    # bind features and results as DOUBLE: bare numeric literals parse as
+    # DECIMAL in DuckDB (real oracles always mix with DOUBLE columns), and
+    # a bound parameter keeps NaN and -0.0
+    binds = ", ".join(f"CAST(? AS DOUBLE) AS f{i}" for i in range(rows.shape[1]))
+    sql = "SELECT " + ", ".join(
+        f"CAST({s} AS DOUBLE) AS s{c}" for c, s in enumerate(score_exprs)
+    ) + f" FROM (SELECT {binds})"
     for r_idx, row in enumerate(rows):
-        # bind features and results as DOUBLE: bare numeric literals parse
-        # as DECIMAL in DuckDB (real oracles always mix with DOUBLE columns)
-        binds = ", ".join(
-            f"CAST({repr(float(v))} AS DOUBLE) AS f{i}" for i, v in enumerate(row)
-        )
-        sql = "SELECT " + ", ".join(
-            f"CAST({s} AS DOUBLE) AS s{c}" for c, s in enumerate(score_exprs)
-        ) + f" FROM (SELECT {binds})"
-        got = con.execute(sql).fetchone()
+        got = con.execute(sql, row.tolist()).fetchone()
         assert list(got) == expected[r_idx].tolist()
 
 

@@ -460,9 +460,9 @@ def _random_forest(rng, n_trees: int, n_leaves: int, n_features: int, thresholds
 def test_large_forest_tables_bounded():
     """2 000 trees x 255 leaves x 100 features, with thresholds on 255 bin
     edges per feature (LightGBM's default ``max_bin``): the block tables
-    hold at most (internal nodes + columns) x ``_BLOCK_BYTES`` bytes, tables
-    and rank maps together stay under 200 MB, and rows score bit for bit
-    as the scalar walk."""
+    hold at most (internal nodes + columns + column blocks, the missing
+    rows) x ``_BLOCK_BYTES`` bytes, tables and rank maps together stay
+    under 200 MB, and rows score bit for bit as the scalar walk."""
     from tests.test_property import scalar_tree_walk
 
     rng = np.random.default_rng(11)
@@ -478,7 +478,8 @@ def test_large_forest_tables_bounded():
     assert (forest.words, forest.bits) == (4, 64)
     table_bytes = sum(c.table.nbytes for c in forest.columns)
     map_bytes = sum(c.rows.nbytes for c in forest.columns)
-    assert table_bytes <= (n_trees * (n_leaves - 1) + len(forest.columns)) * lgbm_model._BLOCK_BYTES
+    column_rows = sum(1 + c.rows.shape[1] for c in forest.columns)
+    assert table_bytes <= (n_trees * (n_leaves - 1) + column_rows) * lgbm_model._BLOCK_BYTES
     assert table_bytes + map_bytes < 200e6, (table_bytes, map_bytes)
     want = [sum(scalar_tree_walk(t, row) for t in model.trees) for row in rows]
     assert got.tolist() == want
@@ -498,3 +499,82 @@ def test_column_past_uint16_table_rows():
     assert len(column.table) > 2**16 and column.rows.dtype == np.uint32
     want = [sum(scalar_tree_walk(t, row) for t in model.trees) for row in rows]
     assert got.tolist() == want
+
+
+def _tree_order_sum(trees: list[Tree], row: np.ndarray) -> float:
+    """The scalar walk's outputs, added in tree order."""
+    from tests.test_property import scalar_tree_walk
+
+    total = 0.0
+    for tree in trees:
+        total += scalar_tree_walk(tree, row)
+    return total
+
+
+def test_one_column_per_feature_and_missing_type():
+    """Numerical nodes share a column per (feature, missing type), whatever
+    their default direction: 28 on the seed-7 forest of the ``score_deep``
+    benchmark workload."""
+    from perfbench.inputs import forest_text, make_forest
+
+    model = parse_model_str(forest_text(make_forest(7)))
+    model.predict_raw(np.zeros((1, model.num_features)))
+    pairs = {
+        (int(f), int(d) >> 2 & 3)
+        for t in model.trees
+        for f, d in zip(t.split_feature, t.decision_type)
+        if not d & 1
+    }
+    assert len(model._forest.columns) == len(pairs) == 28
+
+
+_EDGE_THRESHOLDS = [-2.0, -1e-35, -0.0, 0.0, 1e-36, 1e-35, 0.5, 3.0]
+
+
+def test_missing_rank_rows_across_blocks():
+    """Feature 0 split under every missing type and default direction over
+    three blocks of trees: block 0 mixes default directions (the missing
+    rank gets a row of its own), block 1 has only default-left Zero / NaN
+    nodes (row 0) and the partial block 2 only default-right ones (the
+    block's last cumulative row).  NaN, signed zeros, values at and near
+    kZeroThreshold, infinities and on-threshold values score bit for bit
+    as the scalar walk, a row at a time and across a chunk boundary."""
+    rng = np.random.default_rng(5)
+
+    def thresholds(f):
+        return rng.choice(_EDGE_THRESHOLDS, size=len(f))
+
+    trees = []
+    for n_trees, types in ((64, (0, 2, 4, 6, 8, 10)), (64, (0, 2, 6, 10)), (22, (0, 4, 8))):
+        trees += _random_forest(rng, n_trees, 8, 1, thresholds, types).trees
+    model = LightGBMModel(num_class=1, num_tree_per_iteration=1, max_feature_idx=0,
+                          objective="", trees=trees)
+    values = [np.nan, 0.0, -0.0, 1e-35, -1e-35, 1e-36, np.inf, -np.inf, 0.25, -5.0]
+    rows = np.array(values + _EDGE_THRESHOLDS)[:, None]
+    want = [_tree_order_sum(trees, row) for row in rows]
+    assert [model.predict_raw(row)[0, 0] for row in rows] == want
+    forest = model._forest
+    assert forest.mask_words // forest.words == 3 * 64
+    _, zero, nan = forest.columns  # feature 0 under None, Zero, NaN
+    for column in (zero, nan):
+        missing, last = column.rows[-1], column.rows[-2]
+        assert missing[1] == 0 and missing[2] == last[2] and missing[0] > last.max()
+    n = forest.chunk_rows + 5
+    got = model.predict_raw(np.resize(rows, (n, 1)))[:, 0]
+    assert got.tolist() == np.resize(want, n).tolist()
+
+
+def test_float32_input_scores_as_float64():
+    """float32 features score bit for bit as the same values in float64:
+    the scorer upcasts, exactly, only the features it reads."""
+    from lightfusion_spark.ml.fixture import build_quality_cat_model_text
+
+    rng = np.random.default_rng(3)
+    models = [parse_model_str(MIXED_CAT_MODEL), parse_model_str(build_quality_cat_model_text()),
+              _random_forest(rng, 70, 40, 3, lambda f: rng.normal(size=len(f)),
+                             (0, 2, 4, 6, 8, 10))]
+    for model in models:
+        x = (rng.normal(size=(200, model.num_features)) * 10).astype(np.float32)
+        for value in (np.nan, 0.0, -0.0, 1e-36, -1e-36):
+            x[rng.random(x.shape) < 0.05] = value
+        assert np.array_equal(model.predict_raw(x), model.predict_raw(x.astype(np.float64)))
