@@ -386,58 +386,6 @@ def _seq_cells_paired(
     )
 
 
-def _paired_seq_replicates(
-    cells: DataFrame, n_boot: int, seed: int
-) -> DataFrame:
-    """Shared explode + per-(replicate, order) aggregation over
-    :func:`_seq_cells_paired` rows: ONE md5/ppm weight per (pair,
-    replicate) — the pairing property means both sides share it — and
-    ONE exchange carrying both sides' weighted sums.  Returns the
-    pinned ``(b, n, matched_a, cand_total_a, matched_b, cand_total_b,
-    ref_total)`` frame ((n_boot+1) * max_n rows) that each side's
-    finisher projects from."""
-    from .fanout import pin, spread
-
-    reps = spread(cells).select(
-        "*",
-        F.explode(F.sequence(F.lit(-1), F.lit(int(n_boot) - 1))).alias("b"),
-    )
-    # one parsed expression instead of the _md5_long + nested-WHEN
-    # Column chain (~50 py4j calls per construction) — same arithmetic
-    w = _boot_weight_expr("_grp", seed)
-    weighted = reps.select(
-        F.col("b"),
-        F.col("n"),
-        (F.col("matched_a") * w).cast("long").alias("matched_a"),
-        (F.col("cand_total_a") * w).cast("long").alias("cand_total_a"),
-        (F.col("matched_b") * w).cast("long").alias("matched_b"),
-        (F.col("cand_total_b") * w).cast("long").alias("cand_total_b"),
-        (F.col("ref_total") * w).cast("long").alias("ref_total"),
-    )
-    return pin(
-        weighted.groupBy("b", "n").agg(
-            F.sum("matched_a").cast("long").alias("matched_a"),
-            F.sum("cand_total_a").cast("long").alias("cand_total_a"),
-            F.sum("matched_b").cast("long").alias("matched_b"),
-            F.sum("cand_total_b").cast("long").alias("cand_total_b"),
-            F.sum("ref_total").cast("long").alias("ref_total"),
-        )
-    )
-
-
-def _side_cells(agg: DataFrame, side: str) -> DataFrame:
-    """Project one system's ``(b, n, matched, cand_total, ref_total)``
-    view from the shared paired aggregate — the shape the one-shot
-    finishers consume VERBATIM."""
-    return agg.select(
-        "b",
-        "n",
-        F.col(f"matched_{side}").alias("matched"),
-        F.col(f"cand_total_{side}").alias("cand_total"),
-        F.col("ref_total"),
-    )
-
-
 def corpus_bleu_from_cells(
     cells: DataFrame, max_n: int = 4, group_cols: tuple = ()
 ) -> DataFrame:
@@ -596,6 +544,207 @@ def _boot_weight_expr(grp_sql: str, seed: int, b_sql: str = "b") -> "F.Column":
     )
 
 
+def _boot_replicates(
+    df: DataFrame, n_boot: int, seed: int, grp_sql: str, *cols
+) -> "tuple[DataFrame, F.Column]":
+    """The replicate explode every paired bootstrap shares: ``cols``
+    of ``df`` (every column when none are named) once per replicate
+    ``b = -1 .. n_boot-1``, where ``b = -1`` is the weight-1
+    full-sample pseudo-replicate that carries the headline scores
+    through the same pipeline as the resampled worlds.  Returns
+    ``(reps, w)``: ``w`` is the :func:`_boot_weight_expr` weight of
+    pair ``grp_sql`` in replicate ``b``, left as an expression that
+    callers fold into their own weighted projection or aggregation."""
+    if n_boot < 2:
+        raise ValueError(f"n_boot must be >= 2, got {n_boot}")
+    reps = df.select(
+        *(cols or ("*",)),
+        F.explode(F.sequence(F.lit(-1), F.lit(int(n_boot) - 1))).alias("b"),
+    )
+    return reps, _boot_weight_expr(grp_sql, seed)
+
+
+def _paired_bootstrap_report(
+    rows: DataFrame,
+    n_boot: int,
+    prefix: str,
+    scores: "tuple[F.Column, F.Column] | None" = None,
+    counts: DataFrame | None = None,
+    full_counts: tuple[str, ...] = (),
+    keys: list[str] | None = None,
+    group_col: str | None = None,
+    lower_better: bool = False,
+    empty_score: float | None = None,
+) -> DataFrame:
+    """The one summary every paired bootstrap ends in.  ``rows`` holds
+    one row per ([keys,] b) — slice and replicate — with both sides'
+    scores (columns ``_sa`` / ``_sb``, or the ``scores`` expressions
+    over ``rows``, inlined into the summary's one projection so a
+    caller's score arithmetic adds no plan node) plus ``full_counts``
+    columns whose ``b = -1`` value is a full-sample count.  ONE
+    aggregation per slice reads the headline ``{prefix}_a6`` /
+    ``{prefix}_b6`` and the full counts off the ``b = -1`` row and
+    summarizes the replicate deltas ``round(a - b, 6)`` — a second
+    consumer of ``rows`` would re-run the caller's whole metric
+    pipeline (the b-filters push below its aggregation, so exchange
+    reuse never fires; measured r17).
+
+    The family contract: a replicate survives when ``b >= 0`` and
+    BOTH sides scored (a NULL side drops it from ``_nb``);
+    ``delta_lo6`` / ``delta_hi6`` are the nearest-rank bounds at ranks
+    ceil(.025/.975 * n_boot) over the sorted surviving deltas, priced
+    against the REQUESTED replicate count, so they go NULL when too
+    few replicates survive; the win count comes first
+    (``n_delta_pos`` — or ``n_delta_neg`` for a ``lower_better``
+    error metric, where A wins on a negative delta) and
+    ``p_a_better6`` is wins / survivors.  With zero surviving deltas
+    the counts read 0 and the interval/probability columns are NULL.
+
+    ``counts`` supplies leading count columns instead of
+    ``full_counts``: one row cross-joined onto every slice, or — with
+    ``group_col`` — one row per ``_grp`` slice that DRIVES a left join,
+    so a slice whose rows were all excluded still emits (zero delta
+    counts, NULL values; the round-15 fully-excluded-group shape) with
+    ``_grp`` decoded back to ``group_col``.  ``empty_score`` fills the
+    headline scores when there is no ``b = -1`` row (an empty corpus).
+    """
+    keys = keys or []
+    sa, sb = scores or (F.col("_sa"), F.col("_sb"))
+    pb = rows.select(
+        *keys,
+        "b",
+        *full_counts,
+        sa.alias("_sa"),
+        sb.alias("_sb"),
+        F.round(sa - sb, 6).alias("_d"),
+    )
+    rep = (
+        (F.col("b") >= 0) & F.col("_sa").isNotNull() & F.col("_sb").isNotNull()
+    )
+    isfull = F.col("b") == -1
+    pos, neg = "n_delta_pos", "n_delta_neg"
+    win, loss = (neg, pos) if lower_better else (pos, neg)
+    sign = {pos: F.col("_d") > 0, neg: F.col("_d") < 0}
+
+    def headline(c):
+        v = F.max(F.when(isfull, F.col(c)))
+        return v if empty_score is None else F.coalesce(v, F.lit(empty_score))
+
+    summary = pb.groupBy(*keys).agg(
+        F.count(F.when(rep, 1)).alias("_nb"),
+        F.sort_array(F.collect_list(F.when(rep, F.col("_d")))).alias("_ds"),
+        *(F.count(F.when(rep & sign[c], 1)).alias(c) for c in (win, loss)),
+        *(
+            F.coalesce(F.max(F.when(isfull, F.col(c))), F.lit(0))
+            .cast("long")
+            .alias(c)
+            for c in full_counts
+        ),
+        headline("_sa").alias(f"{prefix}_a6"),
+        headline("_sb").alias(f"{prefix}_b6"),
+    )
+    lead = [F.col(k) for k in keys]
+    if group_col is not None:
+        out = counts.join(summary, keys, "left")
+        lead = [_grp_val(F.col("_grp")).alias(group_col)]
+    elif counts is not None:
+        out = summary.crossJoin(F.broadcast(counts))
+    else:
+        out = summary
+    if counts is not None:
+        lead += [c for c in counts.columns if c not in keys]
+    lo_rank = max(1, -(-int(n_boot) * 25 // 1000))  # ceil(0.025 * B)
+    hi_rank = -(-int(n_boot) * 975 // 1000)  # ceil(0.975 * B)
+    a6, b6 = f"{prefix}_a6", f"{prefix}_b6"
+    return out.select(
+        *lead,
+        *full_counts,
+        F.lit(int(n_boot)).cast("int").alias("n_boot"),
+        a6,
+        b6,
+        F.round(F.col(a6) - F.col(b6), 6).alias("delta6"),
+        # F.get (0-based, NULL out of bounds) not element_at: too few
+        # survivors must report NULL bounds, not an ANSI
+        # INVALID_ARRAY_INDEX
+        F.get("_ds", lo_rank - 1).alias("delta_lo6"),
+        F.get("_ds", hi_rank - 1).alias("delta_hi6"),
+        # coalesce: a left-joined slice with no replicate rows
+        *(
+            F.coalesce(F.col(c), F.lit(0)).cast("long").alias(c)
+            for c in (win, loss)
+        ),
+        F.when(
+            F.col("_nb") > 0,
+            F.round(
+                F.col(win).cast("double") / F.col("_nb").cast("double"), 6
+            ),
+        ).alias("p_a_better6"),
+    )
+
+
+def _seq_paired_bootstrap(
+    df: DataFrame,
+    id_col: str,
+    cand_a_col: str,
+    cand_b_col: str,
+    ref_col: str,
+    max_n: int,
+    n_boot: int,
+    seed: int,
+    chars: bool,
+    finish,
+    prefix: str,
+) -> DataFrame:
+    """The BLEU/chrF paired bootstrap body.  Both systems' cells come
+    out of ONE shared Arrow fold (:func:`_seq_cells_paired` — the
+    reference is tokenized and Counter-ed once, not once per side;
+    ``chars`` picks chrF's projection), one explode carries one
+    md5/ppm weight per (pair, replicate) for both sides (pairing means
+    the weights are shared), and ONE per-(replicate, order)
+    aggregation — pinned, (n_boot+1) * max_n rows — feeds each side's
+    ``finish`` (the one-shot ``*_from_cells`` finisher under a groupBy
+    on ``b``, emitting ``{prefix}6``) VERBATIM.  The ``b = -1``
+    weight-1 sums ARE the one-shot corpus cells, so its score is the
+    one-shot metric bit for bit; an empty corpus reports the
+    finisher's zero-cells 0.0."""
+    from .fanout import pin, spread
+
+    cells = _seq_cells_paired(
+        df, id_col, cand_a_col, cand_b_col, ref_col, max_n, chars=chars
+    )
+    reps, w = _boot_replicates(spread(cells), n_boot, seed, "_grp")
+    sums = (
+        "matched_a", "cand_total_a", "matched_b", "cand_total_b", "ref_total"
+    )
+    weighted = reps.select(
+        "b", "n", *((F.col(c) * w).cast("long").alias(c) for c in sums)
+    )
+    agg = pin(
+        weighted.groupBy("b", "n").agg(
+            *(F.sum(c).cast("long").alias(c) for c in sums)
+        )
+    )
+
+    def side(s):
+        cells_s = agg.select(
+            "b",
+            "n",
+            F.col(f"matched_{s}").alias("matched"),
+            F.col(f"cand_total_{s}").alias("cand_total"),
+            F.col("ref_total"),
+        )
+        return finish(cells_s).select("b", F.col(f"{prefix}6").alias(f"_s{s}"))
+
+    n_pairs = df.groupBy().agg(F.count(F.lit(1)).cast("long").alias("n_pairs"))
+    return _paired_bootstrap_report(
+        side("a").join(side("b"), "b"),
+        n_boot,
+        prefix,
+        counts=n_pairs,
+        empty_score=0.0,
+    )
+
+
 def bleu_paired_bootstrap(
     df: DataFrame,
     id_col: str,
@@ -628,100 +777,35 @@ def bleu_paired_bootstrap(
     full-corpus scores and their difference, the nearest-rank
     2.5%/97.5% bounds over the per-replicate deltas (rank
     ``ceil(alpha * n_boot)``, the stated small-B convention), the
-    replicate win/loss counts, and the win fraction.
+    replicate win/loss counts, and the win fraction
+    (:func:`_paired_bootstrap_report`, the family's one summary).
 
-    100 TB shape: per-pair BLEU cells are :func:`bleu_cells` keyed on
-    the pair id (the group-counter fold — row-local counting, a slim
-    integer shuffle), replicates explode those cells by ``n_boot``
-    (O(pairs * max_n * n_boot) integer rows, no text), and each
-    replicate finishes through :func:`corpus_bleu_from_cells`
-    VERBATIM under a groupBy — the per-replicate score is the
-    one-shot metric's expression tree, not a reimplementation.  The
-    final quantile step sorts ``n_boot`` deltas inside one row
-    (``sort_array`` over a collected 32-element array), never a
-    corpus-sized sort.
-
-    The full-corpus scores ride the SAME per-pair cells as a ``b = -1``
-    weight-1 pseudo-replicate (cells are additive, so weight-1 sums ARE
-    the one-shot corpus cells and the shared finisher yields
-    :func:`corpus_bleu` bit for bit — the binary-bootstrap harness
-    pattern).  Both systems' cells come out of ONE shared Arrow fold
-    (:func:`_seq_cells_paired` — the reference is tokenized and
-    Counter-ed once, not once per side), one explode carries one
-    md5/ppm weight per (pair, replicate) for both sides (pairing means
-    the weights are shared), and one per-(replicate, order) aggregation
-    feeds each side's :func:`corpus_bleu_from_cells` VERBATIM off a
-    pinned (n_boot+1) * max_n-row frame.
+    100 TB shape: per-pair BLEU cells are keyed on the pair id (the
+    group-counter fold — row-local counting, a slim integer shuffle),
+    replicates explode those cells by ``n_boot`` (O(pairs * max_n *
+    n_boot) integer rows, no text), and each replicate finishes
+    through :func:`corpus_bleu_from_cells` VERBATIM under a groupBy —
+    the per-replicate score is the one-shot metric's expression tree,
+    not a reimplementation.  The final quantile step sorts ``n_boot``
+    deltas inside one row (``sort_array`` over a collected 32-element
+    array), never a corpus-sized sort.  The pipeline is
+    :func:`_seq_paired_bootstrap`, shared with
+    :func:`chrf_paired_bootstrap`.
     """
-    if n_boot < 2:
-        raise ValueError(f"n_boot must be >= 2, got {n_boot}")
-
-    cells = _seq_cells_paired(
-        df, id_col, cand_a_col, cand_b_col, ref_col, max_n, chars=False
-    )
-    agg = _paired_seq_replicates(cells, n_boot, seed)
-
-    def replicate_scores(side):
-        scored = corpus_bleu_from_cells(
-            _side_cells(agg, side), max_n=max_n, group_cols=("b",)
-        )
-        return scored.select(F.col("b"), F.col("bleu6").alias(f"bleu_{side}"))
-
-    per_b = replicate_scores("a").join(replicate_scores("b"), "b")
-    pb = per_b.select(
-        "b",
-        "bleu_a",
-        "bleu_b",
-        F.round(F.col("bleu_a") - F.col("bleu_b"), 6).alias("_d"),
-    )
-    lo_rank = max(1, -(-int(n_boot) * 25 // 1000))  # ceil(0.025 * B)
-    hi_rank = -(-int(n_boot) * 975 // 1000)  # ceil(0.975 * B)
-    rep = F.col("b") >= 0
-    # replicate summary AND full-corpus scores in one aggregation: the
-    # b = -1 score IS corpus_bleu (weight-1 sums through the shared
-    # finisher), coalesced to the finisher's 0.0 zero-cells value on an
-    # empty corpus (bleu6 is never NULL otherwise)
-    summary = pb.groupBy().agg(
-        F.count(F.when(rep, 1)).cast("long").alias("_nb"),
-        F.sort_array(F.collect_list(F.when(rep, F.col("_d")))).alias("_ds"),
-        F.sum(F.when(rep, F.when(F.col("_d") > 0, 1).otherwise(0)))
-        .cast("long")
-        .alias("n_delta_pos"),
-        F.sum(F.when(rep, F.when(F.col("_d") < 0, 1).otherwise(0)))
-        .cast("long")
-        .alias("n_delta_neg"),
-        F.coalesce(
-            F.max(F.when(F.col("b") == -1, F.col("bleu_a"))), F.lit(0.0)
-        ).alias("bleu_a6"),
-        F.coalesce(
-            F.max(F.when(F.col("b") == -1, F.col("bleu_b"))), F.lit(0.0)
-        ).alias("bleu_b6"),
-    )
-    n_pairs = df.groupBy().agg(F.count(F.lit(1)).cast("long").alias("n_pairs"))
-    return (
-        summary.crossJoin(F.broadcast(n_pairs))
-        .select(
-            "n_pairs",
-            F.lit(int(n_boot)).cast("int").alias("n_boot"),
-            "bleu_a6",
-            "bleu_b6",
-            F.round(F.col("bleu_a6") - F.col("bleu_b6"), 6).alias("delta6"),
-            # F.get (0-based, NULL out of bounds) not element_at: an
-            # empty corpus yields _ds = [] and must report NULL bounds,
-            # not an ANSI INVALID_ARRAY_INDEX
-            F.get("_ds", lo_rank - 1).alias("delta_lo6"),
-            F.get("_ds", hi_rank - 1).alias("delta_hi6"),
-            "n_delta_pos",
-            "n_delta_neg",
-            F.when(
-                F.col("_nb") > 0,
-                F.round(
-                    F.col("n_delta_pos").cast("double")
-                    / F.col("_nb").cast("double"),
-                    6,
-                ),
-            ).alias("p_a_better6"),
-        )
+    return _seq_paired_bootstrap(
+        df,
+        id_col,
+        cand_a_col,
+        cand_b_col,
+        ref_col,
+        max_n,
+        n_boot,
+        seed,
+        chars=False,
+        finish=lambda c: corpus_bleu_from_cells(
+            c, max_n=max_n, group_cols=("b",)
+        ),
+        prefix="bleu",
     )
 
 
@@ -746,7 +830,8 @@ def wer_paired_bootstrap(
     from the whole experiment and counted (``n_pairs_dropped``) — a
     paired test must grade both systems on identical pair sets.
     WER is an error, so A beats B when delta = wer_a - wer_b < 0;
-    ``p_a_better6`` counts the NEGATIVE-delta replicates.
+    ``p_a_better6`` counts the NEGATIVE-delta replicates.  A replicate
+    whose weights leave no reference words has no WER and drops out.
 
     Returns ONE row: ``(n_pairs, n_pairs_dropped, n_boot, wer_a6,
     wer_b6, delta6, delta_lo6, delta_hi6, n_delta_neg, n_delta_pos,
@@ -760,8 +845,6 @@ def wer_paired_bootstrap(
     the same explode — exact long sums, so every output value is
     unchanged bit for bit.
     """
-    if n_boot < 2:
-        raise ValueError(f"n_boot must be >= 2, got {n_boot}")
     from .fanout import fan_out
 
     # both sides in one row-local projection (the wer_pairs expression
@@ -799,94 +882,39 @@ def wer_paired_bootstrap(
         ),
     )
     kept = F.col("_ok_a") & F.col("_ok_b")
-    # b = -1 is the weight-1 full-sample pseudo-replicate; dropped rows
-    # ride the same explode (weights masked by `kept`) so ONE groupBy
-    # aggregation serves replicates, full sums, and the exclusion count
-    reps = cells.select(
+    # dropped rows ride the same explode (weights masked by `kept`) so
+    # ONE groupBy aggregation serves replicates, full sums, and the
+    # exclusion count
+    reps, w = _boot_replicates(
+        cells,
+        n_boot,
+        seed,
+        "CAST(_id AS STRING)",
         "_id",
         kept.alias("_k"),
         "_ea",
         "_eb",
         "_rl",
-        F.explode(F.sequence(F.lit(-1), F.lit(int(n_boot) - 1))).alias("b"),
     )
-    w = _boot_weight_expr("CAST(_id AS STRING)", seed)
+    k = F.col("_k")
     per_b = reps.groupBy("b").agg(
-        F.sum(F.when(F.col("_k"), F.col("_ea") * w)).cast("long").alias("_wea"),
-        F.sum(F.when(F.col("_k"), F.col("_eb") * w)).cast("long").alias("_web"),
-        F.sum(F.when(F.col("_k"), F.col("_rl") * w)).cast("long").alias("_wrl"),
-        F.sum(F.when(F.col("_k"), 1).otherwise(0)).cast("long").alias("_nk"),
-        F.sum(F.when(F.col("_k"), 0).otherwise(1)).cast("long").alias("_nd"),
+        F.sum(F.when(k, F.col("_ea") * w)).cast("long").alias("_wea"),
+        F.sum(F.when(k, F.col("_eb") * w)).cast("long").alias("_web"),
+        F.sum(F.when(k, F.col("_rl") * w)).cast("long").alias("_wrl"),
+        F.sum(F.when(k, 1).otherwise(0)).cast("long").alias("n_pairs"),
+        F.sum(F.when(k, 0).otherwise(1)).cast("long").alias("n_pairs_dropped"),
     )
     wer6 = lambda e: F.when(  # noqa: E731 — tiny local expression
         F.col("_wrl") > 0,
         F.round(F.col(e).cast("double") / F.col("_wrl").cast("double"), 6),
     )
-    pb = per_b.select(
-        "b",
-        "_wea",
-        "_web",
-        "_wrl",
-        "_nk",
-        "_nd",
-        F.round(wer6("_wea") - wer6("_web"), 6).alias("_d"),
-    )
-    lo_rank = max(1, -(-int(n_boot) * 25 // 1000))
-    hi_rank = -(-int(n_boot) * 975 // 1000)
-    # _nk > 0 keeps replicate existence identical to the kept-only
-    # explode this replaces: with zero in-alphabet pairs there are no
-    # replicate entries at all (summary counts 0/NULL, not 32 NULL
-    # deltas).  Replicate summary AND the full-corpus sums (the b = -1
-    # row) come out of ONE ungrouped aggregation — a second consumer of
-    # per_b would re-run the dual-side DP pass (the b-filters push
-    # below the aggregation, so exchange reuse never fires).
-    rep = (F.col("b") >= 0) & (F.col("_nk") > 0)
-    isfull = F.col("b") == -1
-    summary = pb.groupBy().agg(
-        F.count(F.when(rep, 1)).cast("long").alias("_nb"),
-        F.sort_array(F.collect_list(F.when(rep, F.col("_d")))).alias("_ds"),
-        F.sum(F.when(rep, F.when(F.col("_d") < 0, 1).otherwise(0)))
-        .cast("long")
-        .alias("n_delta_neg"),
-        F.sum(F.when(rep, F.when(F.col("_d") > 0, 1).otherwise(0)))
-        .cast("long")
-        .alias("n_delta_pos"),
-        F.coalesce(F.max(F.when(isfull, F.col("_nk"))), F.lit(0))
-        .cast("long")
-        .alias("n_pairs"),
-        F.max(F.when(isfull, F.col("_nd")))
-        .cast("long")
-        .alias("n_pairs_dropped"),
-        F.max(F.when(isfull, F.col("_wea"))).cast("long").alias("_fea"),
-        F.max(F.when(isfull, F.col("_web"))).cast("long").alias("_feb"),
-        F.max(F.when(isfull, F.col("_wrl"))).cast("long").alias("_frl"),
-    )
-    fw6 = lambda e: F.when(  # noqa: E731
-        F.col("_frl") > 0,
-        F.round(F.col(e).cast("double") / F.col("_frl").cast("double"), 6),
-    )
-    return (
-        summary
-        .select(
-            "n_pairs",
-            "n_pairs_dropped",
-            F.lit(int(n_boot)).cast("int").alias("n_boot"),
-            fw6("_fea").alias("wer_a6"),
-            fw6("_feb").alias("wer_b6"),
-            F.round(fw6("_fea") - fw6("_feb"), 6).alias("delta6"),
-            F.get("_ds", lo_rank - 1).alias("delta_lo6"),
-            F.get("_ds", hi_rank - 1).alias("delta_hi6"),
-            "n_delta_neg",
-            "n_delta_pos",
-            F.when(
-                F.col("_nb") > 0,
-                F.round(
-                    F.col("n_delta_neg").cast("double")
-                    / F.col("_nb").cast("double"),
-                    6,
-                ),
-            ).alias("p_a_better6"),
-        )
+    return _paired_bootstrap_report(
+        per_b,
+        n_boot,
+        "wer",
+        scores=(wer6("_wea"), wer6("_web")),
+        full_counts=("n_pairs", "n_pairs_dropped"),
+        lower_better=True,
     )
 
 
@@ -904,10 +932,10 @@ def chrf_paired_bootstrap(
     """Paired bootstrap significance for corpus chrF — the
     :func:`bleu_paired_bootstrap` harness instantiated on the second
     sequence metric (same deterministic Poisson(1) md5/ppm weights,
-    same pairing argument, same nearest-rank interval):
-    :func:`chrf_cells` keyed on the pair id give per-pair additive
-    cells, replicates are an O(pairs * max_n * n_boot) integer-cell
-    explode, and each replicate finishes through
+    same pairing argument, same nearest-rank interval, the same
+    :func:`_seq_paired_bootstrap` body over character grams): per-pair
+    additive cells, replicates are an O(pairs * max_n * n_boot)
+    integer-cell explode, and each replicate finishes through
     :func:`chrf_from_cells` VERBATIM under a groupBy.
 
     Returns ONE row: ``(n_pairs, n_boot, chrf_a6, chrf_b6, delta6,
@@ -917,79 +945,20 @@ def chrf_paired_bootstrap(
     forms are the one-shot/per-system rows; this composes their
     machinery with the bootstrap's).
     """
-    if n_boot < 2:
-        raise ValueError(f"n_boot must be >= 2, got {n_boot}")
-
-    # b = -1 is the weight-1 full-corpus pseudo-replicate (the
-    # bleu_paired_bootstrap pattern); both systems' cells come out of
-    # ONE shared char-gram Arrow fold (_seq_cells_paired — the
-    # reference is stripped and Counter-ed once), one explode carries
-    # one shared md5/ppm weight per (pair, replicate), and each side's
-    # chrf_from_cells finisher projects VERBATIM off the pinned
-    # per-(replicate, order) aggregate.
-    cells = _seq_cells_paired(
-        df, id_col, cand_a_col, cand_b_col, ref_col, max_n, chars=True
-    )
-    agg = _paired_seq_replicates(cells, n_boot, seed)
-
-    def replicate_scores(side):
-        scored = chrf_from_cells(
-            _side_cells(agg, side), max_n=max_n, beta=beta, group_cols=("b",)
-        )
-        return scored.select(F.col("b"), F.col("chrf6").alias(f"chrf_{side}"))
-
-    per_b = replicate_scores("a").join(replicate_scores("b"), "b")
-    pb = per_b.select(
-        "b",
-        "chrf_a",
-        "chrf_b",
-        F.round(F.col("chrf_a") - F.col("chrf_b"), 6).alias("_d"),
-    )
-    lo_rank = max(1, -(-int(n_boot) * 25 // 1000))
-    hi_rank = -(-int(n_boot) * 975 // 1000)
-    rep = F.col("b") >= 0
-    # one aggregation serves replicate summary AND full scores (the
-    # b = -1 row IS corpus chrF; coalesce covers the empty corpus,
-    # where the finisher's zero-cells value is 0.0 — chrf6 is never
-    # NULL otherwise)
-    summary = pb.groupBy().agg(
-        F.count(F.when(rep, 1)).cast("long").alias("_nb"),
-        F.sort_array(F.collect_list(F.when(rep, F.col("_d")))).alias("_ds"),
-        F.sum(F.when(rep, F.when(F.col("_d") > 0, 1).otherwise(0)))
-        .cast("long")
-        .alias("n_delta_pos"),
-        F.sum(F.when(rep, F.when(F.col("_d") < 0, 1).otherwise(0)))
-        .cast("long")
-        .alias("n_delta_neg"),
-        F.coalesce(
-            F.max(F.when(F.col("b") == -1, F.col("chrf_a"))), F.lit(0.0)
-        ).alias("chrf_a6"),
-        F.coalesce(
-            F.max(F.when(F.col("b") == -1, F.col("chrf_b"))), F.lit(0.0)
-        ).alias("chrf_b6"),
-    )
-    n_pairs = df.groupBy().agg(F.count(F.lit(1)).cast("long").alias("n_pairs"))
-    return (
-        summary.crossJoin(F.broadcast(n_pairs))
-        .select(
-            "n_pairs",
-            F.lit(int(n_boot)).cast("int").alias("n_boot"),
-            "chrf_a6",
-            "chrf_b6",
-            F.round(F.col("chrf_a6") - F.col("chrf_b6"), 6).alias("delta6"),
-            F.get("_ds", lo_rank - 1).alias("delta_lo6"),
-            F.get("_ds", hi_rank - 1).alias("delta_hi6"),
-            "n_delta_pos",
-            "n_delta_neg",
-            F.when(
-                F.col("_nb") > 0,
-                F.round(
-                    F.col("n_delta_pos").cast("double")
-                    / F.col("_nb").cast("double"),
-                    6,
-                ),
-            ).alias("p_a_better6"),
-        )
+    return _seq_paired_bootstrap(
+        df,
+        id_col,
+        cand_a_col,
+        cand_b_col,
+        ref_col,
+        max_n,
+        n_boot,
+        seed,
+        chars=True,
+        finish=lambda c: chrf_from_cells(
+            c, max_n=max_n, beta=beta, group_cols=("b",)
+        ),
+        prefix="chrf",
     )
 
 
@@ -1017,26 +986,18 @@ def rouge_paired_bootstrap(
     ``2m/(c+r)`` (the :func:`_rouge_finish` expression).  Verified
     pytest-by-design against a shared-nothing driver reference.
     """
-    if n_boot < 2:
-        raise ValueError(f"n_boot must be >= 2, got {n_boot}")
     from .fanout import spread
 
-    # b = -1 is the weight-1 full-corpus pseudo-replicate (the
-    # bleu_paired_bootstrap pattern); both systems' cells come out of
-    # ONE shared fold pair (_rouge_cells_paired — the reference is
-    # tokenized / Hyyrö-masked once, not once per side), the explode
-    # carries one shared md5/ppm weight per (pair, replicate), one
-    # per-(metric, replicate) aggregation sums both sides, and the
-    # per-replicate side join disappears — both sides' F1 read off the
-    # same row.  spread() pins the explode wide (fanout.spread).
+    # both systems' cells come out of ONE shared fold pair
+    # (_rouge_cells_paired — the reference is tokenized / Hyyrö-masked
+    # once, not once per side), the explode carries one shared md5/ppm
+    # weight per (pair, replicate), and one per-(metric, replicate)
+    # aggregation sums both sides, so both sides' F1 read off the same
+    # row.  spread() pins the explode wide (fanout.spread).
     cells = _rouge_cells_paired(
         df, id_col, cand_a_col, cand_b_col, ref_col, max_n=max_n
     )
-    reps = spread(cells).select(
-        "*",
-        F.explode(F.sequence(F.lit(-1), F.lit(int(n_boot) - 1))).alias("b"),
-    )
-    w = _boot_weight_expr("_grp", seed)
+    reps, w = _boot_replicates(spread(cells), n_boot, seed, "_grp")
     agg = reps.groupBy("metric", "b").agg(
         F.sum(F.col("matched_a") * w).cast("long").alias("matched_a"),
         F.sum(F.col("cand_total_a") * w).cast("long").alias("cand_total_a"),
@@ -1058,55 +1019,11 @@ def rouge_paired_bootstrap(
             ),
         )
 
-    per_b = agg.select("metric", "b", f1("a").alias("f1_a"), f1("b").alias("f1_b"))
-    pb = per_b.select(
-        "metric",
-        "b",
-        "f1_a",
-        "f1_b",
-        F.round(F.col("f1_a") - F.col("f1_b"), 6).alias("_d"),
-    )
-    lo_rank = max(1, -(-int(n_boot) * 25 // 1000))
-    hi_rank = -(-int(n_boot) * 975 // 1000)
-    rep = F.col("b") >= 0
-    # one per-metric aggregation serves replicate summary AND the full
-    # scores (the b = -1 row; its f1 may be NULL on zero totals, which
-    # the old separate full branch preserved — no coalesce)
-    summary = pb.groupBy("metric").agg(
-        F.count(F.when(rep, 1)).cast("long").alias("_nb"),
-        F.sort_array(F.collect_list(F.when(rep, F.col("_d")))).alias("_ds"),
-        F.sum(F.when(rep, F.when(F.col("_d") > 0, 1).otherwise(0)))
-        .cast("long")
-        .alias("n_delta_pos"),
-        F.sum(F.when(rep, F.when(F.col("_d") < 0, 1).otherwise(0)))
-        .cast("long")
-        .alias("n_delta_neg"),
-        F.max(F.when(F.col("b") == -1, F.col("f1_a"))).alias("f1_a6"),
-        F.max(F.when(F.col("b") == -1, F.col("f1_b"))).alias("f1_b6"),
-    )
+    # the b = -1 f1 may be NULL on zero totals (no empty_score)
+    pb = agg.select("metric", "b", f1("a").alias("_sa"), f1("b").alias("_sb"))
     n_pairs = df.groupBy().agg(F.count(F.lit(1)).cast("long").alias("n_pairs"))
-    return (
-        summary.crossJoin(F.broadcast(n_pairs))
-        .select(
-            "metric",
-            "n_pairs",
-            F.lit(int(n_boot)).cast("int").alias("n_boot"),
-            "f1_a6",
-            "f1_b6",
-            F.round(F.col("f1_a6") - F.col("f1_b6"), 6).alias("delta6"),
-            F.get("_ds", lo_rank - 1).alias("delta_lo6"),
-            F.get("_ds", hi_rank - 1).alias("delta_hi6"),
-            "n_delta_pos",
-            "n_delta_neg",
-            F.when(
-                F.col("_nb") > 0,
-                F.round(
-                    F.col("n_delta_pos").cast("double")
-                    / F.col("_nb").cast("double"),
-                    6,
-                ),
-            ).alias("p_a_better6"),
-        )
+    return _paired_bootstrap_report(
+        pb, n_boot, "f1", counts=n_pairs, keys=["metric"]
     )
 
 
@@ -3819,9 +3736,6 @@ def _paired_binary_replicates(
     pure function of (id, b) — independent of the slicing — so every
     slice of a grouped run is BIT-IDENTICAL to the ungrouped run over
     that slice alone (test-asserted)."""
-    if n_boot < 2:
-        raise ValueError(f"n_boot must be >= 2, got {n_boot}")
-
     keys = ["_grp"] if group_col is not None else []
     grp_sel = (
         [_grp_key(F.col(group_col)).alias("_grp")]
@@ -3856,23 +3770,24 @@ def _paired_binary_replicates(
     counts = (
         base.groupBy(*keys).agg(*count_aggs) if keys else base.agg(*count_aggs)
     )
-    # b = -1 is the FULL-SAMPLE pseudo-replicate (weight 1 for every
-    # item): the headline metrics ride the SAME single explode/
-    # aggregation/window pipeline as the resampled worlds — same
+    # the headline metrics ride the SAME single explode/aggregation/
+    # window pipeline as the resampled worlds (b = -1) — same
     # rounding, same tie structure, one corpus pass — instead of two
     # extra eager report scans (round-15 review findings 3 and 5).
     # spread() pins the n_boot explode wide (fanout.spread).
     from .fanout import spread
 
-    reps = spread(base.where(F.col("_ok"))).select(
+    reps, w = _boot_replicates(
+        spread(base.where(F.col("_ok"))),
+        n_boot,
+        seed,
+        "CAST(_id AS STRING)",
         *keys,
         "_id",
         "_sa",
         "_sb",
         "_y",
-        F.explode(F.sequence(F.lit(-1), F.lit(int(n_boot) - 1))).alias("b"),
     )
-    w = _boot_weight_expr("CAST(_id AS STRING)", seed)
     sided = reps.select(
         *keys,
         "b",
@@ -3903,114 +3818,16 @@ def _paired_binary_replicates(
     return keys, counts, per_score
 
 
-def _paired_bootstrap_report(
-    rep_metric: DataFrame,
-    counts: DataFrame,
-    n_boot: int,
-    prefix: str,
-    keys: list[str] | None = None,
-    group_col: str | None = None,
-) -> DataFrame:
-    """The shared back half: ``rep_metric`` is ``([_grp,] b, _side,
-    _m)`` with a NULL ``_m`` dropping that replicate's delta (the
-    documented degenerate-world contract); emits the standard summary
-    row (one per slice when ``keys``) with the headline columns named
-    ``{prefix}_a6`` / ``{prefix}_b6``.  Interval ranks are fixed at
-    ceil(.025/.975 * n_boot) — family consistency; see
-    :func:`auc_paired_bootstrap`'s docstring for the
-    dropped-replicate semantics.  Grouped: the COUNTS relation drives
-    the join (the round-15 fully-excluded-group shape), so a slice
-    whose rows are all excluded still emits its row — delta counts 0,
-    every value column NULL."""
-    keys = keys or []
-    # one (keys, b)-level side fold over ALL replicates INCLUDING the
-    # b = -1 full-sample row, then ONE aggregation per slice serves
-    # replicate summary and full metrics alike — separate deltas/fulls
-    # consumers re-ran the whole metric pipeline twice (the b-filters
-    # push below the aggregation, so exchange reuse never fires;
-    # measured r17)
-    per_rep = rep_metric.groupBy(*keys, "b").agg(
-        F.max(F.when(F.col("_side") == "a", F.col("_m"))).alias("_aa"),
-        F.max(F.when(F.col("_side") == "b", F.col("_m"))).alias("_ab"),
-    )
-    pb = per_rep.select(
-        *keys,
-        "b",
-        "_aa",
-        "_ab",
-        F.round(F.col("_aa") - F.col("_ab"), 6).alias("_d"),
-    )
-    lo_rank = max(1, -(-int(n_boot) * 25 // 1000))
-    hi_rank = -(-int(n_boot) * 975 // 1000)
-    # a replicate survives when BOTH sides scored (the documented
-    # dropped-replicate contract); coalesce: with ZERO surviving
-    # deltas (a degenerate one-class corpus drops every replicate) the
-    # sums are NULL — the counts must read 0 while the interval
-    # columns go NULL (r15 advice)
-    rep = (
-        (F.col("b") >= 0)
-        & F.col("_aa").isNotNull()
-        & F.col("_ab").isNotNull()
-    )
-    isfull = F.col("b") == -1
-    delta_aggs = [
-        F.count(F.when(rep, 1)).cast("long").alias("_nb"),
-        F.sort_array(F.collect_list(F.when(rep, F.col("_d")))).alias("_ds"),
-        F.coalesce(
-            F.sum(F.when(rep, F.when(F.col("_d") > 0, 1).otherwise(0))),
-            F.lit(0),
-        )
-        .cast("long")
-        .alias("n_delta_pos"),
-        F.coalesce(
-            F.sum(F.when(rep, F.when(F.col("_d") < 0, 1).otherwise(0))),
-            F.lit(0),
-        )
-        .cast("long")
-        .alias("n_delta_neg"),
-        # full metrics from the weight-1 pseudo-replicate: the PAIRED
-        # valid set, same rounding and tie structure as every
-        # resampled world, zero extra corpus scans
-        F.max(F.when(isfull, F.col("_aa"))).alias(f"{prefix}_a6"),
-        F.max(F.when(isfull, F.col("_ab"))).alias(f"{prefix}_b6"),
-    ]
-    summary = (
-        pb.groupBy(*keys).agg(*delta_aggs) if keys else pb.agg(*delta_aggs)
-    )
-    if keys:
-        # counts drives: a fully-excluded slice has no summary rows
-        # but must still emit (NULL values, zero delta counts)
-        out = counts.join(summary, keys, "left")
-        grp_out = [_grp_val(F.col("_grp")).alias(group_col)]
-        pos = F.coalesce(F.col("n_delta_pos"), F.lit(0)).cast("long")
-        neg = F.coalesce(F.col("n_delta_neg"), F.lit(0)).cast("long")
-    else:
-        out = summary.crossJoin(F.broadcast(counts))
-        grp_out = []
-        pos = F.col("n_delta_pos")
-        neg = F.col("n_delta_neg")
-    return out.select(
-        *grp_out,
-        "n_samples",
-        "n_excluded",
-        F.lit(int(n_boot)).cast("int").alias("n_boot"),
-        f"{prefix}_a6",
-        f"{prefix}_b6",
-        F.round(F.col(f"{prefix}_a6") - F.col(f"{prefix}_b6"), 6).alias(
-            "delta6"
-        ),
-        F.get("_ds", lo_rank - 1).alias("delta_lo6"),
-        F.get("_ds", hi_rank - 1).alias("delta_hi6"),
-        pos.alias("n_delta_pos"),
-        neg.alias("n_delta_neg"),
-        F.when(
-            F.col("_nb") > 0,
-            F.round(
-                F.col("n_delta_pos").cast("double")
-                / F.col("_nb").cast("double"),
-                6,
-            ),
-        ).alias("p_a_better6"),
+def _pair_sides(rep_metric: DataFrame, keys: list[str]) -> DataFrame:
+    """Fold the binary bootstraps' ``([_grp,] b, _side, _m)`` rows to
+    the ``([_grp,] b, _sa, _sb)`` shape :func:`_paired_bootstrap_report`
+    summarizes — one (keys, b)-level aggregation over ALL replicates
+    INCLUDING the ``b = -1`` full-sample row.  A NULL ``_m`` (a
+    one-class weighting) leaves that side NULL, dropping the
+    replicate."""
+    return rep_metric.groupBy(*keys, "b").agg(
+        F.max(F.when(F.col("_side") == "a", F.col("_m"))).alias("_sa"),
+        F.max(F.when(F.col("_side") == "b", F.col("_m"))).alias("_sb"),
     )
 
 
@@ -4130,7 +3947,12 @@ def auc_paired_bootstrap(
         ).alias("_m"),
     )
     return _paired_bootstrap_report(
-        rep_auc, counts, n_boot, "auc", keys, group_col
+        _pair_sides(rep_auc, keys),
+        n_boot,
+        "auc",
+        counts=counts,
+        keys=keys,
+        group_col=group_col,
     )
 
 
@@ -4247,7 +4069,12 @@ def pr_paired_bootstrap(
         ).alias("_m"),
     )
     return _paired_bootstrap_report(
-        rep_ap, counts, n_boot, "ap", keys, group_col
+        _pair_sides(rep_ap, keys),
+        n_boot,
+        "ap",
+        counts=counts,
+        keys=keys,
+        group_col=group_col,
     )
 
 
@@ -5007,9 +4834,6 @@ def qa_paired_bootstrap(
     the resample explodes O(questions * n_boot) SCALAR grade rows —
     two integers and one decimal each, never text.
     """
-    if n_boot < 2:
-        raise ValueError(f"n_boot must be >= 2, got {n_boot}")
-
     from .fanout import spread
 
     # both sides graded in ONE shared pass (rows projection, dedupe,
@@ -5017,16 +4841,10 @@ def qa_paired_bootstrap(
     # shape ran the full qa_em_f1 pipeline per side and joined on the
     # question id
     j = _qa_em_f1_paired(df, qid_col, pred_a_col, pred_b_col, gold_col)
-    # b = -1 is the weight-1 full-corpus pseudo-replicate (the
-    # bleu_paired_bootstrap pattern): the two qa_report passes this
-    # replaces re-ran the whole qa_em_f1 pipeline per side; the full
-    # EM/F1 means are the same exact integer/DECIMAL sums at weight 1.
+    # the full EM/F1 means are the b = -1 pseudo-replicate's exact
+    # integer/DECIMAL sums at weight 1, so no second grading pass.
     # spread() pins the n_boot explode wide (fanout.spread).
-    reps = spread(j).select(
-        "*",
-        F.explode(F.sequence(F.lit(-1), F.lit(int(n_boot) - 1))).alias("b"),
-    )
-    w = _boot_weight_expr("CAST(_qid AS STRING)", seed)
+    reps, w = _boot_replicates(spread(j), n_boot, seed, "CAST(_qid AS STRING)")
     weighted = reps.select(
         F.col("b"),
         w.alias("_w"),
@@ -5052,14 +4870,11 @@ def qa_paired_bootstrap(
         )
 
     # explode BOTH metrics for every replicate INCLUDING the b = -1
-    # full-sample row, then one per-metric aggregation serves replicate
-    # summary and full scores alike — a second consumer of
-    # per_b_scores would re-run both qa_em_f1 passes (the b-filters
-    # push below the aggregation, so exchange reuse never fires).  At
-    # weight 1, _n is the paired question count and the rate()
-    # expressions ARE qa_report's em_rate6/f1_mean6 finisher over the
-    # same exact sums.
-    all_scores = per_b_scores.select(
+    # full-sample row, so one per-metric summary serves replicates and
+    # full scores alike.  At weight 1, _n is the paired question count
+    # and the rate() expressions ARE qa_report's em_rate6/f1_mean6
+    # finisher over the same exact sums.
+    pb = per_b_scores.select(
         F.col("b"),
         F.col("_n"),
         F.explode(
@@ -5077,56 +4892,14 @@ def qa_paired_bootstrap(
             )
         ).alias("_m"),
     ).select(
-        "b",
-        "_n",
         F.col("_m.metric").alias("metric"),
+        "b",
         F.col("_m._sa").alias("_sa"),
         F.col("_m._sb").alias("_sb"),
+        F.col("_n").alias("n_questions"),
     )
-    pb = all_scores.select(
-        "b",
-        "_n",
-        "metric",
-        "_sa",
-        "_sb",
-        F.round(F.col("_sa") - F.col("_sb"), 6).alias("_d"),
-    )
-    lo_rank = max(1, -(-int(n_boot) * 25 // 1000))
-    hi_rank = -(-int(n_boot) * 975 // 1000)
-    rep = F.col("b") >= 0
-    isfull = F.col("b") == -1
-    summary = pb.groupBy("metric").agg(
-        F.count(F.when(rep, 1)).cast("long").alias("_nb"),
-        F.sort_array(F.collect_list(F.when(rep, F.col("_d")))).alias("_ds"),
-        F.sum(F.when(rep, F.when(F.col("_d") > 0, 1).otherwise(0)))
-        .cast("long")
-        .alias("n_delta_pos"),
-        F.sum(F.when(rep, F.when(F.col("_d") < 0, 1).otherwise(0)))
-        .cast("long")
-        .alias("n_delta_neg"),
-        F.max(F.when(isfull, F.col("_n"))).cast("long").alias("n_questions"),
-        F.max(F.when(isfull, F.col("_sa"))).alias("score_a6"),
-        F.max(F.when(isfull, F.col("_sb"))).alias("score_b6"),
-    )
-    return summary.select(
-        "metric",
-        "n_questions",
-        F.lit(int(n_boot)).cast("int").alias("n_boot"),
-        "score_a6",
-        "score_b6",
-        F.round(F.col("score_a6") - F.col("score_b6"), 6).alias("delta6"),
-        F.get("_ds", lo_rank - 1).alias("delta_lo6"),
-        F.get("_ds", hi_rank - 1).alias("delta_hi6"),
-        "n_delta_pos",
-        "n_delta_neg",
-        F.when(
-            F.col("_nb") > 0,
-            F.round(
-                F.col("n_delta_pos").cast("double")
-                / F.col("_nb").cast("double"),
-                6,
-            ),
-        ).alias("p_a_better6"),
+    return _paired_bootstrap_report(
+        pb, n_boot, "score", full_counts=("n_questions",), keys=["metric"]
     )
 
 

@@ -244,9 +244,6 @@ def ranking_paired_bootstrap(
     scalars with one md5 per cell — no result lists, no gold, no text
     in the resampling exchange.
     """
-    if n_boot < 2:
-        raise ValueError(f"n_boot must be >= 2, got {n_boot}")
-
     q = query_col
     # Paired per-query nDCG in ONE pipeline (r18, guide §1.4): the two
     # ranking_report_per_query calls this replaces each re-derived the
@@ -321,107 +318,50 @@ def ranking_paired_bootstrap(
     # AND the graded/ungraded counts all ride ONE aggregation of one
     # explode — ``b = -1`` is the weight-1 full-sample pseudo-replicate
     # and ungraded rows travel with weights masked by ``_g`` (the
-    # wer_paired_bootstrap pattern).  The three separate consumers this
-    # replaces re-ran the per-query join+window pipelines 3x; now ONE
-    # consumer (the conditional aggregation below) reads per_b, so the
-    # per-query pipeline executes once.  All sums are the same exact
-    # DECIMAL/long cells at the same weights — every output value is
-    # unchanged bit for bit.
+    # wer_paired_bootstrap pattern), so the per-query join+window
+    # pipelines execute once.  All sums are exact DECIMAL/long cells.
+    from .evalmetrics import _boot_replicates, _paired_bootstrap_report
     from .fanout import spread
 
     graded_flag = F.col("_na").isNotNull() & F.col("_nb").isNotNull()
     # spread() before the n_boot explode: AQE coalesces the small
     # per-query frame to one partition by bytes, which would run the
     # 33x-amplified md5/weight CPU on one core (see fanout.spread)
-    reps = spread(per).select(
+    reps, w = _boot_replicates(
+        spread(per),
+        n_boot,
+        seed,
+        "CAST(_q AS STRING)",
         "_q",
         "_na",
         "_nb",
         graded_flag.alias("_g"),
-        F.explode(F.sequence(F.lit(-1), F.lit(int(n_boot) - 1))).alias("b"),
     )
-    from .evalmetrics import _boot_weight_expr
-
-    w = _boot_weight_expr("CAST(_q AS STRING)", seed)
     per_b = reps.groupBy("b").agg(
         F.sum(F.when(F.col("_g"), F.col("_na").cast("decimal(18,6)") * w))
         .alias("_wa"),
         F.sum(F.when(F.col("_g"), F.col("_nb").cast("decimal(18,6)") * w))
         .alias("_wb"),
         F.sum(F.when(F.col("_g"), w)).cast("long").alias("_ws"),
-        F.sum(F.when(F.col("_g"), 1).otherwise(0)).cast("long").alias("_ng"),
-        F.sum(F.when(F.col("_g"), 0).otherwise(1)).cast("long").alias("_nu"),
+        F.sum(F.when(F.col("_g"), 1).otherwise(0))
+        .cast("long")
+        .alias("n_queries"),
+        F.sum(F.when(F.col("_g"), 0).otherwise(1))
+        .cast("long")
+        .alias("n_queries_ungraded"),
     )
+    # a replicate (or the b = -1 full corpus) with no graded weight has
+    # no mean nDCG: NULL sides, so it drops out of the summary
     score = lambda c: F.when(  # noqa: E731
         F.col("_ws") > 0,
         F.round(F.col(c).cast("double") / F.col("_ws").cast("double"), 6),
     )
-    pb = per_b.select(
-        "b",
-        "_ws",
-        "_ng",
-        "_nu",
-        "_wa",
-        "_wb",
-        F.round(score("_wa") - score("_wb"), 6).alias("_d"),
-    )
-    lo_rank = max(1, -(-int(n_boot) * 25 // 1000))
-    hi_rank = -(-int(n_boot) * 975 // 1000)
-    # _ng > 0 keeps replicate existence identical to the graded-only
-    # explode this replaces (zero graded queries -> 0 replicate
-    # entries, not n_boot NULL deltas).  Replicate summary AND the
-    # full-corpus means/counts (the b = -1 row) come out of ONE
-    # ungrouped aggregation — a second consumer of per_b would re-run
-    # the per-query join+window pipelines (the b-filters push below the
-    # aggregation, so exchange reuse never fires; measured).  On an
-    # empty query universe the aggregation still emits its one row,
-    # with the same NULL counts/sums the separate aggregations
-    # produced.
-    rep = (F.col("b") >= 0) & (F.col("_ng") > 0)
-    isfull = F.col("b") == -1
-    summary = pb.groupBy().agg(
-        F.count(F.when(rep, 1)).cast("long").alias("_nb_reps"),
-        F.sort_array(F.collect_list(F.when(rep, F.col("_d")))).alias("_ds"),
-        F.sum(F.when(rep, F.when(F.col("_d") > 0, 1).otherwise(0)))
-        .cast("long")
-        .alias("n_delta_pos"),
-        F.sum(F.when(rep, F.when(F.col("_d") < 0, 1).otherwise(0)))
-        .cast("long")
-        .alias("n_delta_neg"),
-        F.max(F.when(isfull, F.col("_ng"))).cast("long").alias("n_queries"),
-        F.max(F.when(isfull, F.col("_nu")))
-        .cast("long")
-        .alias("n_queries_ungraded"),
-        F.max(F.when(isfull, F.col("_wa"))).alias("_fa"),
-        F.max(F.when(isfull, F.col("_wb"))).alias("_fb"),
-        F.max(F.when(isfull, F.col("_ng"))).cast("long").alias("_fn"),
-    )
-    fscore = lambda c: F.when(  # noqa: E731
-        F.col("_fn") > 0,
-        F.round(F.col(c).cast("double") / F.col("_fn").cast("double"), 6),
-    )
-    return (
-        summary
-        .select(
-            "n_queries",
-            "n_queries_ungraded",
-            F.lit(int(n_boot)).cast("int").alias("n_boot"),
-            fscore("_fa").alias("ndcg_a6"),
-            fscore("_fb").alias("ndcg_b6"),
-            F.round(fscore("_fa") - fscore("_fb"), 6).alias("delta6"),
-            F.get("_ds", lo_rank - 1).alias("delta_lo6"),
-            F.get("_ds", hi_rank - 1).alias("delta_hi6"),
-            "n_delta_pos",
-            "n_delta_neg",
-            F.when(
-                F.col("_nb_reps") > 0,
-                F.round(
-                    F.col("n_delta_pos").cast("double")
-                    / F.col("_nb_reps").cast("double"),
-                    6,
-                ),
-            ).alias("p_a_better6"),
-        )
+    return _paired_bootstrap_report(
+        per_b,
+        n_boot,
+        "ndcg",
+        scores=(score("_wa"), score("_wb")),
+        full_counts=("n_queries", "n_queries_ungraded"),
     )
 
 

@@ -63,6 +63,16 @@ SUBSET = [
     "pipe_normalize_unicode",
     "pipe_cluster_embeddings",
     "pipe_file_stats",
+    # the eight paired bootstraps: the one replicate explode and summary
+    # in evalmetrics, replayed against each face's DuckDB experiment
+    "pipe_eval_bleu_bootstrap",
+    "pipe_eval_chrf_bootstrap",
+    "pipe_eval_wer_bootstrap",
+    "pipe_eval_rouge_bootstrap",
+    "pipe_eval_ranking_bootstrap",
+    "pipe_eval_qa_bootstrap",
+    "pipe_eval_auc_bootstrap",
+    "pipe_eval_pr_bootstrap",
 ]
 
 

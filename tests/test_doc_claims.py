@@ -67,3 +67,14 @@ def test_one_session_builder():
         and re.search(r"SparkSession\.builder|SparkConf\(", p.read_text())
     ]
     assert not offenders, f"build sessions through session.spark_conf: {offenders}"
+
+
+def test_one_paired_bootstrap_summary():
+    """The eight paired bootstraps share one replicate explode
+    (``evalmetrics._boot_replicates``) and one interval/win-count summary
+    (``evalmetrics._paired_bootstrap_report``): the explode and the
+    nearest-rank upper bound are each written once in the package."""
+    sources = [p.read_text() for p in (REPO / "lightfusion_spark").rglob("*.py")]
+    for needle in ("975 // 1000", "F.sequence(F.lit(-1)"):
+        n = sum(src.count(needle) for src in sources)
+        assert n == 1, f"{needle!r} appears {n} times under lightfusion_spark/"

@@ -1582,6 +1582,155 @@ def test_wer_bootstrap_matches_independent_reference(spark):
     assert got["delta6"] < 0 and got["wer_a6"] < got["wer_b6"]
 
 
+def _empty_bootstrap(spark, metric):
+    """Run one of the eight paired bootstraps over empty input."""
+    from lightfusion_spark.operators import evalmetrics as em
+    from lightfusion_spark.operators import ranking as rk
+
+    def frame(schema):
+        return spark.createDataFrame([], schema)
+
+    seq = "id long, ca string, cb string, ref string"
+    binary = "id long, sa double, sb double, label int"
+    runs = {
+        "bleu": lambda: em.bleu_paired_bootstrap(
+            frame(seq), "id", "ca", "cb", "ref"
+        ),
+        "chrf": lambda: em.chrf_paired_bootstrap(
+            frame(seq), "id", "ca", "cb", "ref"
+        ),
+        "wer": lambda: em.wer_paired_bootstrap(
+            frame(seq), "id", "ca", "cb", "ref"
+        ),
+        "rouge": lambda: em.rouge_paired_bootstrap(
+            frame(seq), "id", "ca", "cb", "ref"
+        ),
+        "qa": lambda: em.qa_paired_bootstrap(
+            frame("qid long, pa string, pb string, gold string"),
+            "qid",
+            "pa",
+            "pb",
+            "gold",
+        ),
+        "auc": lambda: em.auc_paired_bootstrap(
+            frame(binary), "id", "sa", "sb", "label"
+        ),
+        "pr": lambda: em.pr_paired_bootstrap(
+            frame(binary), "id", "sa", "sb", "label"
+        ),
+        "ndcg": lambda: rk.ranking_paired_bootstrap(
+            frame("q long, item string, rank long"),
+            frame("q long, item string, rank long"),
+            frame("q long, item string"),
+            "q",
+            "item",
+            "rank",
+        ),
+    }
+    return [r.asDict() for r in runs[metric]().collect()]
+
+
+#: Empty-input rows of the paired-bootstrap family: ROUGE and QA have no
+#: metric rows to emit; the others emit one row with zero counts, zero
+#: delta counts and NULL interval/probability (BLEU and chrF keep their
+#: one-shot finisher's 0.0 score on an empty corpus).
+_EMPTY_BOOTSTRAP_ROWS = {
+    "bleu": {"n_pairs": 0, "bleu_a6": 0.0, "bleu_b6": 0.0, "delta6": 0.0},
+    "chrf": {"n_pairs": 0, "chrf_a6": 0.0, "chrf_b6": 0.0, "delta6": 0.0},
+    "wer": {
+        "n_pairs": 0,
+        "n_pairs_dropped": 0,
+        "wer_a6": None,
+        "wer_b6": None,
+        "delta6": None,
+    },
+    "rouge": None,
+    "qa": None,
+    "auc": {
+        "n_samples": 0,
+        "n_excluded": 0,
+        "auc_a6": None,
+        "auc_b6": None,
+        "delta6": None,
+    },
+    "pr": {
+        "n_samples": 0,
+        "n_excluded": 0,
+        "ap_a6": None,
+        "ap_b6": None,
+        "delta6": None,
+    },
+    "ndcg": {
+        "n_queries": 0,
+        "n_queries_ungraded": 0,
+        "ndcg_a6": None,
+        "ndcg_b6": None,
+        "delta6": None,
+    },
+}
+
+
+@pytest.mark.parametrize("metric", sorted(_EMPTY_BOOTSTRAP_ROWS))
+def test_paired_bootstrap_empty_input_contract(spark, metric):
+    """One degenerate-replicate contract for all eight bootstraps: with
+    zero surviving deltas the delta counts read 0 (never NULL) and the
+    interval and win probability are NULL; full-sample counts read 0."""
+    rows = _empty_bootstrap(spark, metric)
+    want = _EMPTY_BOOTSTRAP_ROWS[metric]
+    if want is None:
+        assert rows == []
+        return
+    assert len(rows) == 1
+    want = {
+        **want,
+        "n_boot": 32,
+        "delta_lo6": None,
+        "delta_hi6": None,
+        "n_delta_pos": 0,
+        "n_delta_neg": 0,
+        "p_a_better6": None,
+    }
+    assert rows[0] == want
+
+
+def test_wer_bootstrap_drops_replicates_without_reference_words(spark):
+    """One pair, A exact and B one substitution off: every replicate
+    that draws the pair at weight >= 1 has A winning, and every
+    replicate that draws it at weight 0 has no reference words, so no
+    WER — it drops out of the win fraction instead of diluting it."""
+    import hashlib
+
+    from lightfusion_spark.operators import evalmetrics as em
+    from lightfusion_spark.operators.evalmetrics import POISSON1_CDF_PPM
+
+    df = spark.createDataFrame(
+        [(1, "a b c", "a x c", "a b c")],
+        "id long, ca string, cb string, ref string",
+    )
+    got = em.wer_paired_bootstrap(df, "id", "ca", "cb", "ref").collect()[0]
+
+    def drawn(b, seed=7):
+        h6 = (
+            int(hashlib.md5(f"{seed}:1:{b}".encode()).hexdigest()[:14], 16)
+            % 1_000_000
+        )
+        return h6 >= POISSON1_CDF_PPM[0]
+
+    survivors = sum(drawn(b) for b in range(32))
+    assert 0 < survivors < 32, "degenerate fixture: no zero-weight replicate"
+    assert got["n_pairs"] == 1 and got["n_pairs_dropped"] == 0
+    assert (got["wer_a6"], got["wer_b6"], got["delta6"]) == (
+        0.0,
+        0.333333,
+        -0.333333,
+    )
+    assert got["n_delta_neg"] == survivors and got["n_delta_pos"] == 0
+    assert got["p_a_better6"] == 1.0
+    # the nearest-rank bounds are priced against the requested 32
+    # replicates: rank 32 does not exist among the survivors
+    assert got["delta_lo6"] == -0.333333 and got["delta_hi6"] is None
+
+
 def test_chrf_bootstrap_matches_independent_reference(spark):
     """chrF paired bootstrap vs a shared-nothing reference: a
     replicate's weighted cells equal the cells of the pair list with
