@@ -1767,17 +1767,17 @@ FROM cells
     "summarization member of the eval family: three metric rows with "
     "integer cells + micro P/R/F (the repo's corpus-level convention, "
     "stated vs the per-sentence-averaged variant).  ROUGE-N rows "
-    "reuse bleu_cells VERBATIM (the clipped multiset intersection, "
-    "read recall-wise); ROUGE-L's per-pair LCS rides Hyyro's "
-    "bit-parallel recurrence over Python bigints in the adjudicated "
-    "Arrow-fold pattern — and the ORACLE replays the SAME recurrence "
+    "use BLEU's clipped multiset intersection (read recall-wise) "
+    "and ROUGE-L's per-pair LCS rides Hyyro's bit-parallel "
+    "recurrence over Python bigints, both in evalmetrics' one "
+    "adjudicated Arrow fold (_clip_fold) — and the ORACLE replays the SAME recurrence "
     "over HUGEINT masks in a recursive CTE, so the two engines "
     "cross-check two independent implementations of one algorithm "
     "(the classic DP is the third, in tests).  Pairs stress real LCS "
     "structure: doc_id%3 picks drop-every-7th (subsequence), full "
     "REVERSAL (LCS collapses to repeated-token runs), or a half-swap "
     "block move (LCS ~ half) of the first 40 tokens.  Exchanges: "
-    "O(partitions) partial rows from each of the two folds, nothing "
+    "O(partitions) partial rows from the one fold, nothing "
     "corpus-sized",
 )
 def pipe_eval_rouge(spark, sf_dir):
@@ -1918,7 +1918,7 @@ FROM cells
     "trio labeled (drop7 / reverse / blockswap), so the slices "
     "separate the metrics VISIBLY: reverse keeps rouge1 high while "
     "rougeL collapses, blockswap keeps rouge1 perfect while rougeL "
-    "halves.  Both folds key their counters on the group (exchange "
+    "halves.  The one fold keys its counters on the group (exchange "
     "O(systems*metrics*partitions) rows) and the finisher is "
     "_rouge_finish VERBATIM — each group's rows equal the one-shot "
     "operator over that slice bit for bit, test-asserted",

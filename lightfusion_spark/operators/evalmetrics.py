@@ -23,12 +23,15 @@ Arrow-batched ``mapInPandas`` multiset-min-counts each pair
 row-locally and folds every partition to 4 partial rows, and the
 metric's ONLY exchange is the 4-row merge.  The corpus-scale
 gram-shuffle designs this replaced are recorded, with measurements,
-in :func:`bleu_cells` and docs/SCALE.md.  No windows, no driver
+in :func:`_clip_cells` and docs/SCALE.md.  BLEU, chrF and ROUGE cells
+(one-shot, per-system and paired) all come from that one fold,
+:func:`_clip_fold`.  No windows, no driver
 loops, no joins.
 """
 
 from __future__ import annotations
 
+import functools
 import math
 
 from pyspark.sql import DataFrame, Window
@@ -43,33 +46,178 @@ def _tok(col):
     return F.filter(F.split(F.lower(col), r"\s+"), lambda x: x != F.lit(""))
 
 
-def _gram_cells(toks, max_n: int):
-    """Array of (n, gram) structs: every n-gram of ``toks`` for
-    n=1..max_n, grams joined with a single space.  Guarded per n so a
-    short token list contributes an empty slice, never a descending
-    ``sequence`` artifact."""
-    empty = F.array().cast("array<struct<n:int,gram:string>>")
+def _lcs_masks(ref) -> dict:
+    """Hyyrö's match masks of ``ref``: bit ``i`` of ``masks[t]`` is set
+    where ``ref[i] == t``."""
+    masks: dict = {}
+    for i, t in enumerate(ref):
+        masks[t] = masks.get(t, 0) | (1 << i)
+    return masks
 
-    # a 2-parameter lambda would make pyspark's transform() pass
-    # (element, index) and silently clobber a default-arg n — build the
-    # single-parameter lambda through a factory instead
-    def slicer(n: int):
-        return lambda i: F.struct(
-            F.lit(n).alias("n"),
-            F.concat_ws(" ", F.slice(toks, i, n)).alias("gram"),
-        )
 
-    parts = []
-    for n in range(1, max_n + 1):
-        parts.append(
-            F.when(
-                F.size(toks) >= n,
-                F.transform(
-                    F.sequence(F.lit(1), F.size(toks) - n + 1), slicer(n)
-                ),
-            ).otherwise(empty)
+def _lcs_len(cand, masks: dict, m: int) -> int:
+    """LCS length of ``cand`` against the ``m``-long reference whose
+    :func:`_lcs_masks` are ``masks``: Hyyrö 2004's bit-parallel scan
+    (``u = V & PM[c]; V = (V + u) | (V - u)``, LCS = m - popcount(V))
+    over Python bigints, O(|cand| * ceil(m / 64)) word ops and no
+    length cap."""
+    if m == 0 or not cand:
+        return 0
+    ones = (1 << m) - 1
+    v = ones
+    for tok in cand:
+        u = v & masks.get(tok, 0)
+        v = ((v + u) | (v - u)) & ones
+    return m - v.bit_count()
+
+
+def _clip_fold(batches, orders, lcs, grouped, labels, names):
+    """The one reference-clipped cell fold behind every BLEU, chrF and
+    ROUGE cell (``mapInPandas`` body; :func:`_clip_cells` binds it with
+    ``functools.partial``, so Spark pickles it by reference and the
+    worker imports this package).
+
+    Each batch holds ``[_grp,]`` then one or two candidate columns
+    (sides), then the reference: token arrays, or strings, whose grams
+    are character grams (chrF).  Per row the reference's grams are
+    counted once per order in ``orders`` and, with ``lcs``, its Hyyrö
+    mask table is built once; then every side is clipped (multiset min
+    against the reference's counts) and scanned.  Counters accumulate per ``_grp``
+    value (a group or a pair id; NULL is its own key) or one constant
+    key when not ``grouped``; a NULL text is empty.  One output row per
+    (key, cell) — cells are the orders, then the LCS — with ``names``:
+    ``[_grp,]`` the cell's entry of ``labels`` (omitted when None), then
+    ``matched``/``cand_total`` per side and the shared ``ref_total``."""
+    from collections import Counter
+
+    import pandas as pd
+
+    def grams(s, n):  # n-tuples of tokens or characters
+        return Counter(zip(*[s[i:] for i in range(n)]))
+
+    n_cells = len(orders) + lcs
+    stats: dict = {}
+    for pdf in batches:
+        cols = [pdf[c] for c in pdf.columns]
+        keys = cols.pop(0) if grouped else [0] * len(pdf)
+        for key, *texts in zip(keys, *cols):
+            *cands, ref = ([] if t is None else list(t) for t in texts)
+            acc = stats.get(key)
+            if acc is None:
+                acc = stats[key] = [[0] * (2 * len(cands) + 1) for _ in range(n_cells)]
+            for cell, n in zip(acc, orders):
+                rg = grams(ref, n)
+                cell[-1] += max(0, len(ref) - n + 1)
+                for s, c in enumerate(cands):
+                    cell[2 * s] += sum(
+                        min(k, rg[g]) for g, k in grams(c, n).items() if g in rg
+                    )
+                    cell[2 * s + 1] += max(0, len(c) - n + 1)
+            if lcs:
+                cell, m = acc[-1], len(ref)
+                masks = _lcs_masks(ref)
+                cell[-1] += m
+                for s, c in enumerate(cands):
+                    cell[2 * s] += _lcs_len(c, masks, m)
+                    cell[2 * s + 1] += len(c)
+    yield pd.DataFrame(
+        [
+            ([key] if grouped else []) + ([] if labels is None else [label]) + cell
+            for key, acc in stats.items()
+            for label, cell in zip(labels or [None] * n_cells, acc)
+        ],
+        columns=names,
+    )
+
+
+def _clip_cells(
+    df: DataFrame,
+    cand_cols,
+    ref_col: str,
+    orders=(),
+    key: str | None = "n",
+    chars: bool = False,
+    lcs: bool = False,
+    group_col: str | None = None,
+    keep_grp: bool = False,
+) -> DataFrame:
+    """Per-cell sums of :func:`_clip_fold` over ``df``: the cells of
+    BLEU (``orders`` 1..max_n, ``key`` ``n``), chrF (the same with
+    ``chars``), ROUGE-L (``lcs`` alone, no ``key`` column) and ROUGE
+    (orders plus ``lcs``, ``key`` ``metric`` labelled ``rouge<n>`` /
+    ``rougeL``), for one candidate column or two (``cand_cols``; two
+    sides emit ``matched_a, cand_total_a, matched_b, cand_total_b``
+    before ``ref_total``).  With ``group_col`` the cells are keyed on
+    its string value, renamed back to ``group_col`` unless
+    ``keep_grp`` (the paired bootstraps key replicate weights on
+    ``_grp``).  Every cell is an integer sum, additive across disjoint
+    pair sets because clipping and the LCS happen within a pair.
+
+    Ungrouped, an empty corpus has no cell rows, except that with
+    ``lcs`` a literal all-zero LCS partial is unioned below the
+    aggregation: a zero row changes no sum, and on an empty corpus it
+    is the one row left (``lcs_cells``' one row, ``_rouge_cells``'
+    all-zero ``rougeL`` row)."""
+    from .fanout import fan_out
+
+    # Clipping is WITHIN a pair, so no gram ever needs to leave its row:
+    # tokenization stays JVM (engine-identical lower/split semantics —
+    # the oracle's contract) and the counting crosses once through an
+    # Arrow-batched mapInPandas that folds each partition to one row per
+    # (key, cell).  The only exchange is that merge.  This replaced two
+    # corpus-scale designs pinned by measurement (500k synthetic pairs):
+    # (id, n, gram) shuffle + join 114.2 s, the side-tagged single-shuffle
+    # rewrite 43.6 s, this row-local counting 2.7 s — and 1.9 s isolated
+    # over sf0.1's 50k real documents.  fan_out (r17) spreads a
+    # single-split scan so the fold does not run in ONE Python worker;
+    # the sums are partition-order-insensitive.
+    grouped = group_col is not None
+    keep = [*cand_cols, ref_col] + ([group_col] if grouped else [])
+    src = fan_out(df.select(*dict.fromkeys(keep)))
+    if chars:
+        proj = lambda c: F.regexp_replace(F.lower(c), r"\s+", "")  # noqa: E731
+    else:
+        proj = _tok
+    base = src.select(
+        *([F.col(group_col).cast("string").alias("_grp")] if grouped else []),
+        *(proj(F.col(c)).alias(a) for c, a in zip(cand_cols, ("ca", "cb"))),
+        proj(F.col(ref_col)).alias("rf"),
+    )
+    orders = tuple(orders)
+    labels = None
+    if key == "n":
+        labels = orders
+    elif key == "metric":
+        labels = tuple(f"rouge{n}" for n in orders) + ("rougeL",)
+    suffixes = ("",) if len(cand_cols) == 1 else ("_a", "_b")
+    sums = [f"{c}{s}" for s in suffixes for c in ("matched", "cand_total")]
+    sums.append("ref_total")
+    keys = (["_grp"] if grouped else []) + ([key] if key else [])
+    types = {"_grp": "string", "n": "int", "metric": "string"}
+    schema = ", ".join(
+        [f"{k} {types[k]}" for k in keys] + [f"{c} long" for c in sums]
+    )
+    fold = functools.partial(
+        _clip_fold,
+        orders=orders,
+        lcs=lcs,
+        grouped=grouped,
+        labels=labels,
+        names=keys + sums,
+    )
+    partials = base.mapInPandas(fold, schema=schema)
+    if lcs and not grouped:
+        zero = df.sparkSession.range(1).select(
+            *([F.lit(labels[-1]).alias(key)] if key else []),
+            *(F.lit(0).cast("long").alias(c) for c in sums),
         )
-    return F.concat(*parts)
+        partials = partials.unionByName(zero)
+    cells = partials.groupBy(*keys).agg(
+        *(F.sum(c).cast("long").alias(c) for c in sums)
+    )
+    if grouped and not keep_grp:
+        cells = cells.withColumnRenamed("_grp", group_col)
+    return cells
 
 
 def corpus_bleu(
@@ -163,226 +311,8 @@ def bleu_cells(
     """
     if max_n < 1:
         raise ValueError(f"corpus_bleu: max_n must be >= 1, got {max_n}")
-    # Clipping is WITHIN a pair, so no n-gram ever needs to leave its
-    # row: tokenization stays JVM (engine-identical lower/split
-    # semantics — the oracle's contract), and the multiset-min
-    # counting crosses once through an Arrow-batched mapInPandas that
-    # folds each partition to max_n partial rows.  The only exchange
-    # in the whole metric is the final max_n-row merge.  This replaced
-    # two corpus-scale designs pinned by measurement (500k synthetic
-    # pairs): (id, n, gram) shuffle + join 114.2 s, the side-tagged
-    # single-shuffle rewrite 43.6 s, this row-local counting 2.7 s —
-    # and 1.9 s isolated over sf0.1's 50k real documents.
-    # Degenerate-parallelism guard (r17): fan the raw pair rows out
-    # before tokenize+fold — on a single-split scan the whole Arrow fold
-    # otherwise runs in ONE Python worker.  Cells are additive integer
-    # counters, so partitioning cannot change the sums.
-    from .fanout import fan_out
-
-    keep = list(
-        dict.fromkeys(
-            [cand_col, ref_col]
-            + ([group_col] if group_col is not None else [])
-        )
-    )
-    src = fan_out(df.select(*keep))
-    cols = [
-        _tok(F.col(cand_col)).alias("ct"),
-        _tok(F.col(ref_col)).alias("rt"),
-    ]
-    if group_col is not None:
-        cols.insert(0, F.col(group_col).cast("string").alias("_grp"))
-    base = src.select(*cols)
-
-    def fold(batches):
-        from collections import Counter
-
-        import pandas as pd
-
-        # one counter triple per group key (the lone key None-sentinel
-        # "" marker is never used: ungrouped folds key on a constant)
-        stats: dict = {}
-
-        def bump(key, c, r):
-            triple = stats.get(key)
-            if triple is None:
-                triple = stats[key] = (
-                    [0] * (max_n + 1),
-                    [0] * (max_n + 1),
-                    [0] * (max_n + 1),
-                )
-            matched, cand_tot, ref_tot = triple
-            for n in range(1, max_n + 1):
-                cg = Counter(
-                    tuple(c[i : i + n]) for i in range(len(c) - n + 1)
-                )
-                rg = Counter(
-                    tuple(r[i : i + n]) for i in range(len(r) - n + 1)
-                )
-                cand_tot[n] += sum(cg.values())
-                ref_tot[n] += sum(rg.values())
-                matched[n] += sum(
-                    min(k_c, rg[g]) for g, k_c in cg.items() if g in rg
-                )
-
-        grouped = group_col is not None
-        for pdf in batches:
-            grps = pdf["_grp"] if grouped else [0] * len(pdf)
-            for g, ct, rt in zip(grps, pdf["ct"], pdf["rt"]):
-                c = list(ct) if ct is not None else []
-                r = list(rt) if rt is not None else []
-                bump(g if (not grouped or g is None) else str(g), c, r)
-        orders = list(range(1, max_n + 1))
-        out = {
-            "n": [],
-            "matched": [],
-            "cand_total": [],
-            "ref_total": [],
-        }
-        if grouped:
-            out = {"_grp": [], **out}
-        for key, (matched, cand_tot, ref_tot) in stats.items():
-            if grouped:
-                out["_grp"].extend([key] * max_n)
-            out["n"].extend(orders)
-            out["matched"].extend(matched[1:])
-            out["cand_total"].extend(cand_tot[1:])
-            out["ref_total"].extend(ref_tot[1:])
-        yield pd.DataFrame(out)
-
-    schema = "n int, matched long, cand_total long, ref_total long"
-    keys = ["n"]
-    if group_col is not None:
-        schema = "_grp string, " + schema
-        keys = ["_grp", "n"]
-    partials = base.mapInPandas(fold, schema=schema)
-    cells = partials.groupBy(*keys).agg(
-        F.sum("matched").cast("long").alias("matched"),
-        F.sum("cand_total").cast("long").alias("cand_total"),
-        F.sum("ref_total").cast("long").alias("ref_total"),
-    )
-    if group_col is not None:
-        cells = cells.withColumnRenamed("_grp", group_col)
-    return cells
-
-
-def _seq_cells_paired(
-    df: DataFrame,
-    id_col: str,
-    cand_a_col: str,
-    cand_b_col: str,
-    ref_col: str,
-    max_n: int,
-    chars: bool,
-) -> DataFrame:
-    """BOTH systems' per-pair metric cells in ONE Arrow fold — the
-    shared-pass backbone of :func:`bleu_paired_bootstrap` and
-    :func:`chrf_paired_bootstrap`, which previously ran
-    ``bleu_cells``/``chrf_cells`` once per side: two corpus folds,
-    each tokenizing and Counter-ing the SAME reference.  One row per
-    (pair, order): ``(_grp, n, matched_a, cand_total_a, matched_b,
-    cand_total_b, ref_total)`` — the reference grams are counted once
-    and clipped against each side with the per-side folds' exact
-    counting logic (same tuple/substring grams, same multiset min).
-
-    ``chars`` selects the chrF projection (lowercase, whitespace
-    stripped, character substr grams) over the BLEU one (shared
-    ``_tok`` whitespace tokens, tuple grams)."""
-    from .fanout import fan_out
-
-    keep = list(dict.fromkeys([id_col, cand_a_col, cand_b_col, ref_col]))
-    src = fan_out(df.select(*keep))
-    if chars:
-        proj = lambda c: F.regexp_replace(F.lower(c), r"\s+", "")  # noqa: E731
-    else:
-        proj = _tok
-    base = src.select(
-        F.col(id_col).cast("string").alias("_grp"),
-        proj(F.col(cand_a_col)).alias("ca"),
-        proj(F.col(cand_b_col)).alias("cb"),
-        proj(F.col(ref_col)).alias("rf"),
-    )
-
-    def fold(batches):
-        from collections import Counter
-
-        import pandas as pd
-
-        stats: dict = {}
-
-        def grams(s, n):
-            if chars:
-                return Counter(s[i : i + n] for i in range(len(s) - n + 1))
-            return Counter(
-                tuple(s[i : i + n]) for i in range(len(s) - n + 1)
-            )
-
-        def bump(key, a, b, r):
-            cells = stats.get(key)
-            if cells is None:
-                cells = stats[key] = [
-                    [0] * (max_n + 1) for _ in range(5)
-                ]  # ma, ca, mb, cb, rt
-            ma, ca, mb, cb, rt = cells
-            for n in range(1, max_n + 1):
-                rg = grams(r, n)
-                ag = grams(a, n)
-                bg = grams(b, n)
-                rt[n] += sum(rg.values())
-                ca[n] += sum(ag.values())
-                cb[n] += sum(bg.values())
-                ma[n] += sum(
-                    min(k_c, rg[g]) for g, k_c in ag.items() if g in rg
-                )
-                mb[n] += sum(
-                    min(k_c, rg[g]) for g, k_c in bg.items() if g in rg
-                )
-
-        empty = "" if chars else []
-        for pdf in batches:
-            for g, a, b, r in zip(
-                pdf["_grp"], pdf["ca"], pdf["cb"], pdf["rf"]
-            ):
-                a = a if a is not None else empty
-                b = b if b is not None else empty
-                r = r if r is not None else empty
-                if not chars:
-                    a, b, r = list(a), list(b), list(r)
-                bump(g, a, b, r)
-        orders = list(range(1, max_n + 1))
-        out = {
-            "_grp": [],
-            "n": [],
-            "matched_a": [],
-            "cand_total_a": [],
-            "matched_b": [],
-            "cand_total_b": [],
-            "ref_total": [],
-        }
-        for key, (ma, ca, mb, cb, rt) in stats.items():
-            out["_grp"].extend([key] * max_n)
-            out["n"].extend(orders)
-            out["matched_a"].extend(ma[1:])
-            out["cand_total_a"].extend(ca[1:])
-            out["matched_b"].extend(mb[1:])
-            out["cand_total_b"].extend(cb[1:])
-            out["ref_total"].extend(rt[1:])
-        yield pd.DataFrame(out)
-
-    schema = (
-        "_grp string, n int, matched_a long, cand_total_a long,"
-        " matched_b long, cand_total_b long, ref_total long"
-    )
-    return (
-        base.mapInPandas(fold, schema=schema)
-        .groupBy("_grp", "n")
-        .agg(
-            F.sum("matched_a").cast("long").alias("matched_a"),
-            F.sum("cand_total_a").cast("long").alias("cand_total_a"),
-            F.sum("matched_b").cast("long").alias("matched_b"),
-            F.sum("cand_total_b").cast("long").alias("cand_total_b"),
-            F.sum("ref_total").cast("long").alias("ref_total"),
-        )
+    return _clip_cells(
+        df, [cand_col], ref_col, range(1, max_n + 1), group_col=group_col
     )
 
 
@@ -695,10 +625,10 @@ def _seq_paired_bootstrap(
     finish,
     prefix: str,
 ) -> DataFrame:
-    """The BLEU/chrF paired bootstrap body.  Both systems' cells come
-    out of ONE shared Arrow fold (:func:`_seq_cells_paired` — the
-    reference is tokenized and Counter-ed once, not once per side;
-    ``chars`` picks chrF's projection), one explode carries one
+    """The BLEU/chrF paired bootstrap body.  Both systems' per-pair
+    cells come out of ONE two-sided :func:`_clip_cells` fold keyed on
+    the pair id (the reference is tokenized and Counter-ed once, not
+    once per side; ``chars`` picks chrF's projection), one explode carries one
     md5/ppm weight per (pair, replicate) for both sides (pairing means
     the weights are shared), and ONE per-(replicate, order)
     aggregation — pinned, (n_boot+1) * max_n rows — feeds each side's
@@ -709,8 +639,14 @@ def _seq_paired_bootstrap(
     finisher's zero-cells 0.0."""
     from .fanout import pin, spread
 
-    cells = _seq_cells_paired(
-        df, id_col, cand_a_col, cand_b_col, ref_col, max_n, chars=chars
+    cells = _clip_cells(
+        df,
+        [cand_a_col, cand_b_col],
+        ref_col,
+        range(1, max_n + 1),
+        chars=chars,
+        group_col=id_col,
+        keep_grp=True,
     )
     reps, w = _boot_replicates(spread(cells), n_boot, seed, "_grp")
     sums = (
@@ -981,21 +917,29 @@ def rouge_paired_bootstrap(
 
     Returns ``(metric, n_pairs, n_boot, f1_a6, f1_b6, delta6,
     delta_lo6, delta_hi6, n_delta_pos, n_delta_neg, p_a_better6)``.
-    Cells are :func:`_rouge_cells` keyed on the pair id; each
+    Cells are :func:`_rouge_cells`' for both sides, keyed on the pair
+    id; each
     replicate finishes through the exact-integer F1 identity
     ``2m/(c+r)`` (the :func:`_rouge_finish` expression).  Verified
     pytest-by-design against a shared-nothing driver reference.
     """
     from .fanout import spread
 
-    # both systems' cells come out of ONE shared fold pair
-    # (_rouge_cells_paired — the reference is tokenized / Hyyrö-masked
-    # once, not once per side), the explode carries one shared md5/ppm
+    # both systems' cells come out of ONE two-sided _clip_cells fold
+    # (the reference is tokenized / Hyyrö-masked once, not once per
+    # side), the explode carries one shared md5/ppm
     # weight per (pair, replicate), and one per-(metric, replicate)
     # aggregation sums both sides, so both sides' F1 read off the same
     # row.  spread() pins the explode wide (fanout.spread).
-    cells = _rouge_cells_paired(
-        df, id_col, cand_a_col, cand_b_col, ref_col, max_n=max_n
+    cells = _clip_cells(
+        df,
+        [cand_a_col, cand_b_col],
+        ref_col,
+        range(1, max_n + 1),
+        key="metric",
+        lcs=True,
+        group_col=id_col,
+        keep_grp=True,
     )
     reps, w = _boot_replicates(spread(cells), n_boot, seed, "_grp")
     agg = reps.groupBy("metric", "b").agg(
@@ -1659,88 +1603,24 @@ def lcs_cells(
     LCS is computed WITHIN a pair (the bleu_cells additivity argument
     verbatim).
 
-    The per-pair LCS rides Hyyrö's bit-parallel algorithm (Hyyrö 2004:
-    ``u = V & PM[c]; V = (V + u) | (V - u)``, LCS = m - popcount(V))
-    over arbitrary-precision Python ints inside the same Arrow-batched
-    ``mapInPandas`` fold as :func:`bleu_cells` — O(|cand| * ceil(|ref|
-    / 64)) word ops per pair instead of the O(|cand| * |ref|) DP
-    table, no length cap needed (bigints grow with the reference).
-    The classic DP this replaces is kept as the independent reference
-    in tests; the DuckDB oracle replays the SAME bit recurrence in a
-    recursive CTE over HUGEINT masks — two engines, two
-    implementations, one recurrence.
+    The per-pair LCS is :func:`_lcs_len`, Hyyrö's bit-parallel scan,
+    run inside the one Arrow fold every BLEU/chrF/ROUGE cell comes from
+    (:func:`_clip_cells`, here with the LCS cell alone) — O(|cand| *
+    ceil(|ref| / 64)) word ops per pair instead of the O(|cand| *
+    |ref|) DP table.  The classic DP is kept as the independent
+    reference in tests; the DuckDB oracle replays the SAME bit
+    recurrence in a recursive CTE over HUGEINT masks — two engines,
+    two implementations, one recurrence.
 
     100 TB shape: tokenization stays JVM; each partition folds to ONE
-    3-long row (one per group with ``group_col`` — the bleu_cells
-    group-keyed-counter pattern, exchange O(groups * partitions)
-    rows), and the metric's only exchange is that merge.  No shuffle
-    grows with the corpus.
+    3-long row (one per group with ``group_col``, exchange O(groups *
+    partitions) rows), and the metric's only exchange is that merge.
+    Ungrouped, the result is always exactly one row (zeros on an empty
+    corpus).
     """
-    cols = [
-        _tok(F.col(cand_col)).alias("ct"),
-        _tok(F.col(ref_col)).alias("rt"),
-    ]
-    grouped = group_col is not None
-    if grouped:
-        cols.insert(0, F.col(group_col).cast("string").alias("_grp"))
-    base = df.select(*cols)
-
-    def fold(batches):
-        import pandas as pd
-
-        stats: dict = {}
-        for pdf in batches:
-            grps = pdf["_grp"] if grouped else [0] * len(pdf)
-            for g, ct, rt in zip(grps, pdf["ct"], pdf["rt"]):
-                key = g if (not grouped or g is None) else str(g)
-                triple = stats.get(key)
-                if triple is None:
-                    triple = stats[key] = [0, 0, 0]
-                c = list(ct) if ct is not None else []
-                r = list(rt) if rt is not None else []
-                triple[1] += len(c)
-                triple[2] += len(r)
-                m = len(r)
-                if m == 0 or not c:
-                    continue
-                pm: dict = {}
-                for i, t in enumerate(r):
-                    pm[t] = pm.get(t, 0) | (1 << i)
-                ones = (1 << m) - 1
-                v = ones
-                for tok in c:
-                    u = v & pm.get(tok, 0)
-                    v = ((v + u) | (v - u)) & ones
-                triple[0] += m - bin(v).count("1")
-        out = {"matched": [], "cand_total": [], "ref_total": []}
-        if grouped:
-            out = {"_grp": [], **out}
-        for key, (lcs_sum, cand_sum, ref_sum) in stats.items():
-            if grouped:
-                out["_grp"].append(key)
-            out["matched"].append(lcs_sum)
-            out["cand_total"].append(cand_sum)
-            out["ref_total"].append(ref_sum)
-        yield pd.DataFrame(out)
-
-    schema = "matched long, cand_total long, ref_total long"
-    keys: list[str] = []
-    if grouped:
-        schema = "_grp string, " + schema
-        keys = ["_grp"]
-    partials = base.mapInPandas(fold, schema=schema)
-    cells = (partials.groupBy(*keys) if keys else partials.groupBy()).agg(
-        F.coalesce(F.sum("matched"), F.lit(0)).cast("long").alias("matched"),
-        F.coalesce(F.sum("cand_total"), F.lit(0))
-        .cast("long")
-        .alias("cand_total"),
-        F.coalesce(F.sum("ref_total"), F.lit(0))
-        .cast("long")
-        .alias("ref_total"),
+    return _clip_cells(
+        df, [cand_col], ref_col, key=None, lcs=True, group_col=group_col
     )
-    if grouped:
-        cells = cells.withColumnRenamed("_grp", group_col)
-    return cells
 
 
 def _rouge_finish(cells: DataFrame, keys: tuple[str, ...] = ()) -> DataFrame:
@@ -1785,231 +1665,13 @@ def corpus_rouge(
     additive) — not the per-sentence-averaged variant some packages
     default to.  The n-gram rows reuse :func:`bleu_cells` VERBATIM
     (ROUGE-N's clipped multiset intersection is BLEU's, read
-    recall-wise); the LCS row comes from :func:`lcs_cells`.  Two
-    row-local Arrow folds over the pairs, exchanges O(partitions)
-    rows; tokenization is the shared lower/whitespace contract.
+    recall-wise, and the LCS row is :func:`lcs_cells`' Hyyrö scan).
+    All rows come from ONE row-local Arrow fold over the pairs
+    (:func:`_rouge_cells`), exchanges O(partitions) rows; tokenization
+    is the shared lower/whitespace contract.
     """
     return _rouge_finish(
         _rouge_cells(df, id_col, cand_col, ref_col, max_n=max_n)
-    )
-
-
-def _lcs_cells_paired(
-    df: DataFrame,
-    id_col: str,
-    cand_a_col: str,
-    cand_b_col: str,
-    ref_col: str,
-) -> DataFrame:
-    """Both systems' per-pair ROUGE-L cells in ONE Arrow fold — the
-    :func:`_seq_cells_paired` companion for :func:`lcs_cells`: the
-    reference is tokenized and its Hyyrö bit-mask table built once per
-    pair, then the bit-parallel scan runs once per side (the same
-    recurrence as the one-sided fold, verbatim).  One row per pair:
-    ``(_grp, matched_a, cand_total_a, matched_b, cand_total_b,
-    ref_total)``."""
-    from .fanout import fan_out
-
-    keep = list(dict.fromkeys([id_col, cand_a_col, cand_b_col, ref_col]))
-    src = fan_out(df.select(*keep))
-    base = src.select(
-        F.col(id_col).cast("string").alias("_grp"),
-        _tok(F.col(cand_a_col)).alias("ca"),
-        _tok(F.col(cand_b_col)).alias("cb"),
-        _tok(F.col(ref_col)).alias("rt"),
-    )
-
-    def fold(batches):
-        import pandas as pd
-
-        stats: dict = {}
-
-        def lcs(c, pm, m, ones):
-            if m == 0 or not c:
-                return 0
-            v = ones
-            for tok in c:
-                u = v & pm.get(tok, 0)
-                v = ((v + u) | (v - u)) & ones
-            return m - bin(v).count("1")
-
-        for pdf in batches:
-            for g, ca, cb, rt in zip(
-                pdf["_grp"], pdf["ca"], pdf["cb"], pdf["rt"]
-            ):
-                cells = stats.get(g)
-                if cells is None:
-                    cells = stats[g] = [0, 0, 0, 0, 0]
-                a = list(ca) if ca is not None else []
-                b = list(cb) if cb is not None else []
-                r = list(rt) if rt is not None else []
-                m = len(r)
-                cells[1] += len(a)
-                cells[3] += len(b)
-                cells[4] += m
-                pm: dict = {}
-                for i, t in enumerate(r):
-                    pm[t] = pm.get(t, 0) | (1 << i)
-                ones = (1 << m) - 1
-                cells[0] += lcs(a, pm, m, ones)
-                cells[2] += lcs(b, pm, m, ones)
-        out = {
-            "_grp": [],
-            "matched_a": [],
-            "cand_total_a": [],
-            "matched_b": [],
-            "cand_total_b": [],
-            "ref_total": [],
-        }
-        for key, (ma, ca_t, mb, cb_t, rt_t) in stats.items():
-            out["_grp"].append(key)
-            out["matched_a"].append(ma)
-            out["cand_total_a"].append(ca_t)
-            out["matched_b"].append(mb)
-            out["cand_total_b"].append(cb_t)
-            out["ref_total"].append(rt_t)
-        yield pd.DataFrame(out)
-
-    schema = (
-        "_grp string, matched_a long, cand_total_a long,"
-        " matched_b long, cand_total_b long, ref_total long"
-    )
-    return (
-        base.mapInPandas(fold, schema=schema)
-        .groupBy("_grp")
-        .agg(
-            F.sum("matched_a").cast("long").alias("matched_a"),
-            F.sum("cand_total_a").cast("long").alias("cand_total_a"),
-            F.sum("matched_b").cast("long").alias("matched_b"),
-            F.sum("cand_total_b").cast("long").alias("cand_total_b"),
-            F.sum("ref_total").cast("long").alias("ref_total"),
-        )
-    )
-
-
-def _rouge_cells_paired(
-    df: DataFrame,
-    id_col: str,
-    cand_a_col: str,
-    cand_b_col: str,
-    ref_col: str,
-    max_n: int = 2,
-) -> DataFrame:
-    """Both systems' metric-keyed per-pair ROUGE cells in ONE Arrow
-    fold — the paired fusion of :func:`_seq_cells_paired`
-    (``rouge<n>``) and :func:`_lcs_cells_paired` (``rougeL``), for
-    :func:`rouge_paired_bootstrap`.  The pre-r18 shape unioned the two
-    paired folds, tokenizing the corpus twice and building the
-    reference's Hyyrö mask table separately from its gram Counters;
-    one pass now emits both metric families' cells (guide §1.4).
-    Cells bit-identical to the union (test-pinned): same gram
-    counting, same bit recurrence, per-(pair, metric) rows."""
-    from .fanout import fan_out
-
-    keep = list(dict.fromkeys([id_col, cand_a_col, cand_b_col, ref_col]))
-    src = fan_out(df.select(*keep))
-    base = src.select(
-        F.col(id_col).cast("string").alias("_grp"),
-        _tok(F.col(cand_a_col)).alias("ca"),
-        _tok(F.col(cand_b_col)).alias("cb"),
-        _tok(F.col(ref_col)).alias("rf"),
-    )
-    metrics = [f"rouge{n}" for n in range(1, max_n + 1)] + ["rougeL"]
-
-    def fold(batches):
-        from collections import Counter
-
-        import pandas as pd
-
-        stats: dict = {}
-
-        def grams(s, n):
-            return Counter(
-                tuple(s[i : i + n]) for i in range(len(s) - n + 1)
-            )
-
-        def lcs(c, pm, m, ones):
-            if m == 0 or not c:
-                return 0
-            v = ones
-            for tok in c:
-                u = v & pm.get(tok, 0)
-                v = ((v + u) | (v - u)) & ones
-            return m - bin(v).count("1")
-
-        def bump(key, a, b, r):
-            cells = stats.get(key)
-            if cells is None:
-                cells = stats[key] = (
-                    [[0] * (max_n + 1) for _ in range(5)],  # ma, ca, mb, cb, rt
-                    [0, 0, 0, 0, 0],  # rougeL: ma, ca, mb, cb, rt
-                )
-            (ma, ca, mb, cb, rt), lc = cells
-            for n in range(1, max_n + 1):
-                rg = grams(r, n)
-                ag = grams(a, n)
-                bg = grams(b, n)
-                rt[n] += sum(rg.values())
-                ca[n] += sum(ag.values())
-                cb[n] += sum(bg.values())
-                ma[n] += sum(
-                    min(k_c, rg[g]) for g, k_c in ag.items() if g in rg
-                )
-                mb[n] += sum(
-                    min(k_c, rg[g]) for g, k_c in bg.items() if g in rg
-                )
-            m = len(r)
-            lc[1] += len(a)
-            lc[3] += len(b)
-            lc[4] += m
-            pm: dict = {}
-            for i, t in enumerate(r):
-                pm[t] = pm.get(t, 0) | (1 << i)
-            ones = (1 << m) - 1
-            lc[0] += lcs(a, pm, m, ones)
-            lc[2] += lcs(b, pm, m, ones)
-
-        for pdf in batches:
-            for g, a, b, r in zip(
-                pdf["_grp"], pdf["ca"], pdf["cb"], pdf["rf"]
-            ):
-                a = list(a) if a is not None else []
-                b = list(b) if b is not None else []
-                r = list(r) if r is not None else []
-                bump(g, a, b, r)
-        out = {
-            "_grp": [],
-            "metric": [],
-            "matched_a": [],
-            "cand_total_a": [],
-            "matched_b": [],
-            "cand_total_b": [],
-            "ref_total": [],
-        }
-        for key, ((ma, ca, mb, cb, rt), lc) in stats.items():
-            out["_grp"].extend([key] * (max_n + 1))
-            out["metric"].extend(metrics)
-            out["matched_a"].extend(ma[1:] + [lc[0]])
-            out["cand_total_a"].extend(ca[1:] + [lc[1]])
-            out["matched_b"].extend(mb[1:] + [lc[2]])
-            out["cand_total_b"].extend(cb[1:] + [lc[3]])
-            out["ref_total"].extend(rt[1:] + [lc[4]])
-        yield pd.DataFrame(out)
-
-    schema = (
-        "_grp string, metric string, matched_a long, cand_total_a long,"
-        " matched_b long, cand_total_b long, ref_total long"
-    )
-    return (
-        base.mapInPandas(fold, schema=schema)
-        .groupBy("_grp", "metric")
-        .agg(
-            F.sum("matched_a").cast("long").alias("matched_a"),
-            F.sum("cand_total_a").cast("long").alias("cand_total_a"),
-            F.sum("matched_b").cast("long").alias("matched_b"),
-            F.sum("cand_total_b").cast("long").alias("cand_total_b"),
-            F.sum("ref_total").cast("long").alias("ref_total"),
-        )
     )
 
 
@@ -2025,134 +1687,20 @@ def _rouge_cells(
     ``([group,] metric, matched, cand_total, ref_total)`` — the
     ``rouge<n>`` rows carry :func:`bleu_cells`' clipped-multiset
     counting and the ``rougeL`` row :func:`lcs_cells`' Hyyrö
-    bit-parallel LCS, emitted from ONE Arrow fold over the pairs
-    (guide §1.4: the pre-r18 shape unioned the two operators, running
-    two corpus tokenize+fold passes per call — every ROUGE surface
-    paid the corpus twice).  Cell values are bit-identical to the
-    two-fold union (test-pinned: same gram counting, same bit
-    recurrence, same tokenization).  Additive across disjoint pair
-    sets (both constituents are), which is what the grouped variant
-    and the maintained store lean on.
-
-    The ungrouped empty-corpus contract is preserved: ``lcs_cells``'
-    global aggregation always emits one ``rougeL`` row, so a literal
-    all-zero ``rougeL`` partial is unioned below the aggregation —
-    cells are additive, a zero row changes no sum, and on an empty
-    corpus it is the one surviving row, exactly the old output."""
-    from .fanout import fan_out
-
-    grouped = group_col is not None
-    keep = list(
-        dict.fromkeys([cand_col, ref_col] + ([group_col] if grouped else []))
-    )
-    src = fan_out(df.select(*keep))
-    cols = [
-        _tok(F.col(cand_col)).alias("ct"),
-        _tok(F.col(ref_col)).alias("rt"),
-    ]
-    if grouped:
-        cols.insert(0, F.col(group_col).cast("string").alias("_grp"))
-    base = src.select(*cols)
-
-    def fold(batches):
-        from collections import Counter
-
-        import pandas as pd
-
-        stats: dict = {}
-
-        def bump(key, c, r):
-            cells = stats.get(key)
-            if cells is None:
-                cells = stats[key] = (
-                    [0] * (max_n + 1),  # matched per order
-                    [0] * (max_n + 1),  # cand_total per order
-                    [0] * (max_n + 1),  # ref_total per order
-                    [0, 0, 0],  # rougeL: lcs_sum, cand_sum, ref_sum
-                )
-            matched, cand_tot, ref_tot, lcs_t = cells
-            for n in range(1, max_n + 1):
-                cg = Counter(
-                    tuple(c[i : i + n]) for i in range(len(c) - n + 1)
-                )
-                rg = Counter(
-                    tuple(r[i : i + n]) for i in range(len(r) - n + 1)
-                )
-                cand_tot[n] += sum(cg.values())
-                ref_tot[n] += sum(rg.values())
-                matched[n] += sum(
-                    min(k_c, rg[g]) for g, k_c in cg.items() if g in rg
-                )
-            lcs_t[1] += len(c)
-            lcs_t[2] += len(r)
-            m = len(r)
-            if m == 0 or not c:
-                return
-            pm: dict = {}
-            for i, t in enumerate(r):
-                pm[t] = pm.get(t, 0) | (1 << i)
-            ones = (1 << m) - 1
-            v = ones
-            for tok in c:
-                u = v & pm.get(tok, 0)
-                v = ((v + u) | (v - u)) & ones
-            lcs_t[0] += m - bin(v).count("1")
-
-        for pdf in batches:
-            grps = pdf["_grp"] if grouped else [0] * len(pdf)
-            for g, ct, rt in zip(grps, pdf["ct"], pdf["rt"]):
-                c = list(ct) if ct is not None else []
-                r = list(rt) if rt is not None else []
-                bump(g if (not grouped or g is None) else str(g), c, r)
-        metrics = [f"rouge{n}" for n in range(1, max_n + 1)] + ["rougeL"]
-        out = {
-            "metric": [],
-            "matched": [],
-            "cand_total": [],
-            "ref_total": [],
-        }
-        if grouped:
-            out = {"_grp": [], **out}
-        for key, (matched, cand_tot, ref_tot, lcs_t) in stats.items():
-            if grouped:
-                out["_grp"].extend([key] * (max_n + 1))
-            out["metric"].extend(metrics)
-            out["matched"].extend(matched[1:] + [lcs_t[0]])
-            out["cand_total"].extend(cand_tot[1:] + [lcs_t[1]])
-            out["ref_total"].extend(ref_tot[1:] + [lcs_t[2]])
-        yield pd.DataFrame(out)
-
-    schema = "metric string, matched long, cand_total long, ref_total long"
-    keys = ["metric"]
-    if grouped:
-        schema = "_grp string, " + schema
-        keys = ["_grp", "metric"]
-    partials = base.mapInPandas(fold, schema=schema)
-    if not grouped:
-        # the empty-corpus rougeL row (see docstring): a zero partial is
-        # the additive identity, so it only changes the output when no
-        # real partial exists
-        spark = df.sparkSession
-        zero = spark.range(1).select(
-            F.lit("rougeL").alias("metric"),
-            F.lit(0).cast("long").alias("matched"),
-            F.lit(0).cast("long").alias("cand_total"),
-            F.lit(0).cast("long").alias("ref_total"),
-        )
-        partials = partials.unionByName(zero)
-    cells = partials.groupBy(*keys).agg(
-        F.sum("matched").cast("long").alias("matched"),
-        F.sum("cand_total").cast("long").alias("cand_total"),
-        F.sum("ref_total").cast("long").alias("ref_total"),
-    )
-    if grouped:
-        cells = cells.withColumnRenamed("_grp", group_col)
-    return cells.select(
-        *([group_col] if grouped else []),
-        "metric",
-        "matched",
-        "cand_total",
-        "ref_total",
+    bit-parallel LCS, emitted from ONE :func:`_clip_cells` fold over
+    the pairs (one tokenize+fold pass per call, not one per metric
+    family).  Additive
+    across disjoint pair sets, which is what the grouped variant and
+    the maintained store lean on.  Ungrouped, an empty corpus gives
+    one all-zero ``rougeL`` row."""
+    return _clip_cells(
+        df,
+        [cand_col],
+        ref_col,
+        range(1, max_n + 1),
+        key="metric",
+        lcs=True,
+        group_col=group_col,
     )
 
 
@@ -2166,7 +1714,7 @@ def corpus_rouge_by_group(
 ) -> DataFrame:
     """Corpus ROUGE PER GROUP — the multi-system harness shape for the
     summarization metric, sliced exactly like per-system BLEU/chrF/WER
-    (one row per (group, metric)).  Both folds key their counters on
+    (one row per (group, metric)).  The one fold keys its counters on
     the stringified group (the bleu_cells pattern: exchange
     O(groups * metrics * partitions) rows whatever the corpus) and the
     finisher is :func:`_rouge_finish` VERBATIM, so each group's rows
@@ -2473,90 +2021,14 @@ def chrf_cells(
     stringified group value and emits per-group cells."""
     if max_n < 1:
         raise ValueError(f"chrf_score: max_n must be >= 1, got {max_n}")
-    # Degenerate-parallelism guard (r17): same as bleu_cells — fan the
-    # raw pair rows out so the char-n-gram Arrow fold runs wide instead
-    # of in one Python worker on single-split scans.  Integer cells are
-    # additive, so partitioning cannot change the sums.
-    from .fanout import fan_out
-
-    keep = list(
-        dict.fromkeys(
-            [cand_col, ref_col]
-            + ([group_col] if group_col is not None else [])
-        )
+    return _clip_cells(
+        df,
+        [cand_col],
+        ref_col,
+        range(1, max_n + 1),
+        chars=True,
+        group_col=group_col,
     )
-    src = fan_out(df.select(*keep))
-    strip = lambda c: F.regexp_replace(F.lower(c), r"\s+", "")
-    cols = [
-        strip(F.col(cand_col)).alias("cs"),
-        strip(F.col(ref_col)).alias("rs"),
-    ]
-    if group_col is not None:
-        cols.insert(0, F.col(group_col).cast("string").alias("_grp"))
-    base = src.select(*cols)
-
-    def fold(batches):
-        from collections import Counter
-
-        import pandas as pd
-
-        stats: dict = {}
-
-        def bump(key, c, r):
-            triple = stats.get(key)
-            if triple is None:
-                triple = stats[key] = (
-                    [0] * (max_n + 1),
-                    [0] * (max_n + 1),
-                    [0] * (max_n + 1),
-                )
-            matched, cand_tot, ref_tot = triple
-            for n in range(1, max_n + 1):
-                cg = Counter(c[i : i + n] for i in range(len(c) - n + 1))
-                rg = Counter(r[i : i + n] for i in range(len(r) - n + 1))
-                cand_tot[n] += sum(cg.values())
-                ref_tot[n] += sum(rg.values())
-                matched[n] += sum(
-                    min(k_c, rg[g]) for g, k_c in cg.items() if g in rg
-                )
-
-        grouped = group_col is not None
-        for pdf in batches:
-            grps = pdf["_grp"] if grouped else [0] * len(pdf)
-            for g, cs, rs in zip(grps, pdf["cs"], pdf["rs"]):
-                c = cs if cs is not None else ""
-                r = rs if rs is not None else ""
-                bump(g if (not grouped or g is None) else str(g), c, r)
-        orders = list(range(1, max_n + 1))
-        out = {"n": [], "matched": [], "cand_total": [], "ref_total": []}
-        if grouped:
-            out = {"_grp": [], **out}
-        for key, (matched, cand_tot, ref_tot) in stats.items():
-            if grouped:
-                out["_grp"].extend([key] * max_n)
-            out["n"].extend(orders)
-            out["matched"].extend(matched[1:])
-            out["cand_total"].extend(cand_tot[1:])
-            out["ref_total"].extend(ref_tot[1:])
-        yield pd.DataFrame(out)
-
-    schema = "n int, matched long, cand_total long, ref_total long"
-    keys = ["n"]
-    if group_col is not None:
-        schema = "_grp string, " + schema
-        keys = ["_grp", "n"]
-    cells = (
-        base.mapInPandas(fold, schema=schema)
-        .groupBy(*keys)
-        .agg(
-            F.sum("matched").cast("long").alias("matched"),
-            F.sum("cand_total").cast("long").alias("cand_total"),
-            F.sum("ref_total").cast("long").alias("ref_total"),
-        )
-    )
-    if group_col is not None:
-        cells = cells.withColumnRenamed("_grp", group_col)
-    return cells
 
 
 def chrf_from_cells(
@@ -2684,7 +2156,8 @@ def distinct_ngrams(
 
     def slicer(n: int):
         # single-parameter lambda via factory (the transform()
-        # two-parameter index-clobber trap, same as _gram_cells)
+        # two-parameter index-clobber trap: pyspark would pass
+        # (element, index))
         return lambda i: F.concat_ws(" ", F.slice(toks, i, n))
 
     parts = []

@@ -63,6 +63,14 @@ SUBSET = [
     "pipe_normalize_unicode",
     "pipe_cluster_embeddings",
     "pipe_file_stats",
+    # the one-shot and per-system BLEU/chrF/ROUGE faces: the one
+    # reference-clipped cell fold in evalmetrics, against each oracle
+    "pipe_eval_bleu",
+    "pipe_eval_chrf",
+    "pipe_eval_rouge",
+    "pipe_eval_bleu_by_system",
+    "pipe_eval_chrf_by_system",
+    "pipe_eval_rouge_by_system",
     # the eight paired bootstraps: the one replicate explode and summary
     # in evalmetrics, replayed against each face's DuckDB experiment
     "pipe_eval_bleu_bootstrap",

@@ -78,3 +78,16 @@ def test_one_paired_bootstrap_summary():
     for needle in ("975 // 1000", "F.sequence(F.lit(-1)"):
         n = sum(src.count(needle) for src in sources)
         assert n == 1, f"{needle!r} appears {n} times under lightfusion_spark/"
+
+
+def test_one_reference_clipped_cell_fold():
+    """BLEU, chrF and ROUGE cells (one-shot, per-system and paired) come
+    from one fold, ``evalmetrics._clip_fold``: Hyyro's LCS step is
+    written once in the package and ``evalmetrics`` runs one
+    ``mapInPandas``."""
+    sources = [p.read_text() for p in (REPO / "lightfusion_spark").rglob("*.py")]
+    n = sum(src.count("(v + u) | (v - u)") for src in sources)
+    assert n == 1, f"Hyyro's step appears {n} times under lightfusion_spark/"
+    em = (REPO / "lightfusion_spark" / "operators" / "evalmetrics.py").read_text()
+    n = em.count(".mapInPandas(")
+    assert n == 1, f".mapInPandas( appears {n} times in evalmetrics.py"

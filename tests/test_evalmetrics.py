@@ -3888,139 +3888,140 @@ def test_qa_em_f1_paired_matches_per_side_graders(spark):
             assert paired[qid][f"_f1_{side}"] == want["f1_6"], (side, qid)
 
 
+def _keyed_cells(df, keys, vals):
+    """``{(key values): (cell values)}`` of a cells DataFrame."""
+    return {
+        tuple(r[k] for k in keys): tuple(r[v] for v in vals) for r in df.collect()
+    }
+
+
+def _ref_keyed_cells(rows, labels, orders=(), chars=False, lcs=False):
+    """The driver reference (tests/test_property_round13.py: Counter
+    clipping + the textbook LCS DP) over ``(key, cand texts, ref text)``
+    rows of raw strings, keyed like :func:`_keyed_cells`."""
+    from tests.test_property_round13 import _project, _ref_corpus_cells
+
+    proj = [
+        (k, [_project(c, chars) for c in cands], _project(r, chars))
+        for k, cands, r in rows
+    ]
+    return {
+        (k, label): tuple(cell)
+        for k, cells in _ref_corpus_cells(proj, orders, chars, lcs).items()
+        for label, cell in zip(labels, cells)
+    }
+
+
 def test_paired_seq_and_lcs_cells_match_per_side_folds(spark):
-    """_seq_cells_paired / _lcs_cells_paired (the shared-pass folds the
-    BLEU/chrF/ROUGE bootstraps use) produce, per side, exactly the
-    per-pair cells of the one-sided bleu_cells / chrf_cells /
-    lcs_cells folds — across empty, whitespace-only, and repeated-gram
-    edge cases."""
+    """The two-sided cells the BLEU/chrF bootstraps read (one
+    _clip_cells fold over both candidates, keyed on the pair id) and the
+    two-sided LCS cells equal, per side, a shared-nothing driver
+    reference — Counter clipping and the textbook LCS DP, since the
+    one-sided folds are now the same code — across empty,
+    whitespace-only, and repeated-gram edge cases."""
     from lightfusion_spark.operators import evalmetrics as em
 
-    rows = spark.createDataFrame(
-        [
-            (1, "the cat sat on the mat", "cat the sat", "the cat sat"),
-            (2, "", "x", "a b c"),
-            (3, "a a a b", "b a", "a a b"),
-            (4, "q w e", "", ""),
-        ],
-        "pid long, a string, b string, ref string",
-    )
-
-    def keyed(df, keys, vals):
-        return {
-            tuple(r[k] for k in keys): tuple(r[v] for v in vals)
-            for r in df.collect()
-        }
-
-    for chars, one_sided in ((False, em.bleu_cells), (True, em.chrf_cells)):
-        mx = 6 if chars else 4
-        paired = em._seq_cells_paired(rows, "pid", "a", "b", "ref", mx, chars)
-        got_a = keyed(paired, ["_grp", "n"], ["matched_a", "cand_total_a", "ref_total"])
-        got_b = keyed(paired, ["_grp", "n"], ["matched_b", "cand_total_b", "ref_total"])
-        for side_col, got in (("a", got_a), ("b", got_b)):
-            want = keyed(
-                one_sided(rows, "pid", side_col, "ref", max_n=mx, group_col="pid"),
-                ["pid", "n"],
-                ["matched", "cand_total", "ref_total"],
-            )
-            assert got == want, (chars, side_col)
-    lp = em._lcs_cells_paired(rows, "pid", "a", "b", "ref")
-    got_a = keyed(lp, ["_grp"], ["matched_a", "cand_total_a", "ref_total"])
-    got_b = keyed(lp, ["_grp"], ["matched_b", "cand_total_b", "ref_total"])
-    for side_col, got in (("a", got_a), ("b", got_b)):
-        want = keyed(
-            em.lcs_cells(rows, "pid", side_col, "ref", group_col="pid"),
-            ["pid"],
-            ["matched", "cand_total", "ref_total"],
+    data = [
+        (1, "the cat sat on the mat", "cat the sat", "the cat sat"),
+        (2, "", "x", "a b c"),
+        (3, "a a a b", "b a", "a a b"),
+        (4, "q w e", "", ""),
+    ]
+    rows = spark.createDataFrame(data, "pid long, a string, b string, ref string")
+    raw = [(str(pid), [a, b], ref) for pid, a, b, ref in data]
+    sides = ["matched_a", "cand_total_a", "matched_b", "cand_total_b", "ref_total"]
+    for chars in (False, True):
+        orders = range(1, (6 if chars else 4) + 1)
+        got = em._clip_cells(
+            rows,
+            ["a", "b"],
+            "ref",
+            orders,
+            chars=chars,
+            group_col="pid",
+            keep_grp=True,
         )
-        assert got == want, side_col
+        want = _ref_keyed_cells(raw, labels=orders, orders=orders, chars=chars)
+        assert _keyed_cells(got, ["_grp", "n"], sides) == want, chars
+    got = em._clip_cells(
+        rows, ["a", "b"], "ref", key=None, lcs=True, group_col="pid", keep_grp=True
+    )
+    want = {k: v for (k, _), v in _ref_keyed_cells(raw, [None], lcs=True).items()}
+    assert {k: v for (k,), v in _keyed_cells(got, ["_grp"], sides).items()} == want
 
 
 def test_fused_rouge_cells_match_constituent_folds(spark):
-    """r18: _rouge_cells runs ONE Arrow fold for both metric families;
-    its cells must equal the pre-r18 union of bleu_cells (relabeled
-    rouge<n>) and lcs_cells (rougeL) bit for bit — ungrouped, grouped,
-    and on the empty corpus (where the old lcs_cells global aggregate
-    guaranteed exactly one all-zero rougeL row)."""
+    """_rouge_cells (one Arrow fold for the rouge<n> and rougeL cells)
+    equals a shared-nothing driver reference — Counter clipping and the
+    textbook LCS DP — ungrouped, grouped (with a NULL group), and on the
+    empty corpus, where it keeps exactly one all-zero rougeL row."""
     from lightfusion_spark.operators import evalmetrics as em
     from pyspark.sql import functions as F
 
-    rows = spark.createDataFrame(
-        [
-            (1, "s1", "the cat sat on the mat", "the cat sat"),
-            (2, "s1", "", "a b c"),
-            (3, "s2", "a a a b", "a a b"),
-            (4, "s2", "q w e", ""),
-            (5, None, "x y", "x y"),
-        ],
-        "pid long, sys string, cand string, ref string",
-    )
-
-    def union_ref(df, group_col=None):
-        keys = [group_col] if group_col is not None else []
-        ng = em.bleu_cells(df, "pid", "cand", "ref", max_n=2, group_col=group_col).select(
-            *keys,
-            F.concat(F.lit("rouge"), F.col("n").cast("string")).alias("metric"),
-            "matched", "cand_total", "ref_total",
-        )
-        lcs = em.lcs_cells(df, "pid", "cand", "ref", group_col=group_col).select(
-            *keys, F.lit("rougeL").alias("metric"),
-            "matched", "cand_total", "ref_total",
-        )
-        return ng.unionByName(lcs)
-
-    def rowset(df):
-        return sorted(
-            (tuple(r) for r in df.collect()),
-            key=lambda t: tuple((v is None, v) for v in t),
-        )
-
-    assert rowset(em._rouge_cells(rows, "pid", "cand", "ref", max_n=2)) == rowset(
-        union_ref(rows)
-    )
-    assert rowset(
-        em._rouge_cells(rows, "pid", "cand", "ref", max_n=2, group_col="sys")
-    ) == rowset(union_ref(rows, group_col="sys"))
-    empty = rows.where(F.lit(False))
-    assert rowset(em._rouge_cells(empty, "pid", "cand", "ref", max_n=2)) == rowset(
-        union_ref(empty)
-    )
-    assert rowset(em._rouge_cells(empty, "pid", "cand", "ref", max_n=2)) == [
-        ("rougeL", 0, 0, 0)
+    data = [
+        (1, "s1", "the cat sat on the mat", "the cat sat"),
+        (2, "s1", "", "a b c"),
+        (3, "s2", "a a a b", "a a b"),
+        (4, "s2", "q w e", ""),
+        (5, None, "x y", "x y"),
     ]
+    rows = spark.createDataFrame(
+        data, "pid long, sys string, cand string, ref string"
+    )
+    labels = ["rouge1", "rouge2", "rougeL"]
+    vals = ["matched", "cand_total", "ref_total"]
+    for group_col, key in ((None, lambda sys: 0), ("sys", lambda sys: sys)):
+        got = em._rouge_cells(
+            rows, "pid", "cand", "ref", max_n=2, group_col=group_col
+        )
+        keys = [group_col] if group_col else []
+        got = _keyed_cells(got, keys + ["metric"], vals)
+        if not group_col:
+            got = {(0, *k): v for k, v in got.items()}
+        want = _ref_keyed_cells(
+            [(key(sys), [c], r) for _, sys, c, r in data],
+            labels,
+            lcs=True,
+            orders=range(1, 3),
+        )
+        assert got == want, group_col
+    empty = rows.where(F.lit(False))
+    got = em._rouge_cells(empty, "pid", "cand", "ref", max_n=2).collect()
+    assert [tuple(r) for r in got] == [("rougeL", 0, 0, 0)]
 
 
 def test_fused_paired_rouge_cells_match_constituent_folds(spark):
-    """r18: _rouge_cells_paired emits both sides' rouge<n> AND rougeL
-    cells from one fold; must equal the pre-r18 union of
-    _seq_cells_paired and _lcs_cells_paired bit for bit."""
+    """The two-sided, pair-keyed rouge<n> and rougeL cells that
+    rouge_paired_bootstrap reads (one _clip_cells fold) equal a
+    shared-nothing driver reference — Counter clipping and the textbook
+    LCS DP — for both sides."""
     from lightfusion_spark.operators import evalmetrics as em
-    from pyspark.sql import functions as F
 
-    rows = spark.createDataFrame(
-        [
-            (1, "the cat sat on the mat", "cat the sat", "the cat sat"),
-            (2, "", "x", "a b c"),
-            (3, "a a a b", "b a", "a a b"),
-            (4, "q w e", "", ""),
-        ],
-        "pid long, a string, b string, ref string",
+    data = [
+        (1, "the cat sat on the mat", "cat the sat", "the cat sat"),
+        (2, "", "x", "a b c"),
+        (3, "a a a b", "b a", "a a b"),
+        (4, "q w e", "", ""),
+    ]
+    rows = spark.createDataFrame(data, "pid long, a string, b string, ref string")
+    got = em._clip_cells(
+        rows,
+        ["a", "b"],
+        "ref",
+        range(1, 3),
+        key="metric",
+        lcs=True,
+        group_col="pid",
+        keep_grp=True,
     )
-    ng = em._seq_cells_paired(rows, "pid", "a", "b", "ref", 2, chars=False).select(
-        "_grp",
-        F.concat(F.lit("rouge"), F.col("n").cast("string")).alias("metric"),
-        "matched_a", "cand_total_a", "matched_b", "cand_total_b", "ref_total",
+    sides = ["matched_a", "cand_total_a", "matched_b", "cand_total_b", "ref_total"]
+    want = _ref_keyed_cells(
+        [(str(pid), [a, b], ref) for pid, a, b, ref in data],
+        ["rouge1", "rouge2", "rougeL"],
+        lcs=True,
+        orders=range(1, 3),
     )
-    lcs = em._lcs_cells_paired(rows, "pid", "a", "b", "ref").select(
-        "_grp", F.lit("rougeL").alias("metric"),
-        "matched_a", "cand_total_a", "matched_b", "cand_total_b", "ref_total",
-    )
-    want = sorted(tuple(r) for r in ng.unionByName(lcs).collect())
-    got = sorted(
-        tuple(r)
-        for r in em._rouge_cells_paired(rows, "pid", "a", "b", "ref", max_n=2).collect()
-    )
-    assert got == want
+    assert _keyed_cells(got, ["_grp", "metric"], sides) == want
 
 
 def test_boot_weight_expr_matches_reference_chain(spark):

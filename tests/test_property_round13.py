@@ -9,6 +9,8 @@ word sequences and random alphabet orderings, plus the metric axioms
 the operator's outputs must satisfy.
 """
 
+from collections import Counter
+
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -122,19 +124,67 @@ def _lcs_dp(a, b):
 
 
 def _lcs_bitparallel(cand, ref):
-    """The exact fold body of evalmetrics.lcs_cells, extracted."""
-    m = len(ref)
-    if m == 0 or not cand:
-        return 0
-    pm = {}
-    for i, t in enumerate(ref):
-        pm[t] = pm.get(t, 0) | (1 << i)
-    ones = (1 << m) - 1
-    v = ones
-    for tok in cand:
-        u = v & pm.get(tok, 0)
-        v = ((v + u) | (v - u)) & ones
-    return m - bin(v).count("1")
+    """The shipped LCS: evalmetrics' Hyyro scan over the reference's
+    mask table, exactly as the cell fold calls it."""
+    from lightfusion_spark.operators.evalmetrics import _lcs_len, _lcs_masks
+
+    return _lcs_len(cand, _lcs_masks(ref), len(ref))
+
+
+def _project(text, chars=False):
+    """The JVM projection of one text, driver-side: lowercased
+    whitespace tokens (``_tok``), or the lowercased whitespace-free
+    string for chrF; NULL is empty."""
+    import re
+
+    text = (text or "").lower()
+    return re.sub(r"\s+", "", text) if chars else text.split()
+
+
+def _ref_pair_cells(cands, ref, orders, chars=False, lcs=False):
+    """Shared-nothing reference for one pair's cells: per order, then
+    the LCS when ``lcs``, ``[matched, cand_total]`` per side and the
+    ``ref_total`` — Counter multiset intersection and the textbook DP,
+    no code shared with the fold."""
+    def grams(s, n):
+        return Counter(
+            s[i : i + n] if chars else tuple(s[i : i + n])
+            for i in range(len(s) - n + 1)
+        )
+
+    cells = []
+    for n in orders:
+        rg = grams(ref, n)
+        cell = []
+        for c in cands:
+            cg = grams(c, n)
+            cell += [sum((cg & rg).values()), sum(cg.values())]
+        cells.append(cell + [sum(rg.values())])
+    if lcs:
+        cell = []
+        for c in cands:
+            cell += [_lcs_dp(c, ref), len(c)]
+        cells.append(cell + [len(ref)])
+    return cells
+
+
+def _ref_corpus_cells(rows, orders, chars=False, lcs=False):
+    """``{key: cells}`` summed over ``(key, cands, ref)`` rows of
+    projected texts (None is empty)."""
+    empty = "" if chars else []
+    out = {}
+    for key, cands, ref in rows:
+        cells = _ref_pair_cells(
+            [empty if c is None else c for c in cands],
+            empty if ref is None else ref,
+            orders,
+            chars,
+            lcs,
+        )
+        acc = out.setdefault(key, [[0] * len(c) for c in cells])
+        for a, c in zip(acc, cells):
+            a[:] = [x + y for x, y in zip(a, c)]
+    return out
 
 
 @settings(max_examples=200, deadline=None)
@@ -158,6 +208,98 @@ def test_lcs_axioms(cand, ref):
     assert 0 <= lab <= min(len(cand), len(ref))
     # monotone under concatenation
     assert _lcs_bitparallel(cand + ref, ref) >= lab
+
+
+_FOLD_TOKS = st.lists(st.sampled_from(["a", "b", "c"]), max_size=8)
+_FOLD_CHARS = st.text(alphabet="abc", max_size=8)
+
+
+@settings(max_examples=150, deadline=None)
+@given(data=st.data())
+def test_clip_fold_matches_driver_reference(data):
+    """The shipped cell fold (evalmetrics._clip_fold), driven directly
+    with pandas batches and no JVM, equals the driver-side reference for
+    one and two sides, tokens and characters, with and without the LCS
+    cell, grouped (NULL group included) and ungrouped, with the rows
+    split across batches.  Bound the way _clip_cells binds it, the fold
+    pickles by reference: the payload names the module and carries no
+    code object, so a Python worker imports the package to run it."""
+    import functools
+    import pickletools
+
+    import numpy as np
+    import pandas as pd
+    from pyspark import cloudpickle
+
+    from lightfusion_spark.operators import evalmetrics as em
+
+    sides = data.draw(st.sampled_from([1, 2]), "sides")
+    chars = data.draw(st.booleans(), "chars")
+    lcs = data.draw(st.booleans(), "lcs")
+    grouped = data.draw(st.booleans(), "grouped")
+    orders = tuple(range(1, data.draw(st.integers(0 if lcs else 1, 4)) + 1))
+    text = st.one_of(st.none(), _FOLD_CHARS if chars else _FOLD_TOKS)
+    rows = data.draw(
+        st.lists(
+            st.tuples(
+                st.sampled_from(["g1", "g2", None]) if grouped else st.just(0),
+                st.lists(text, min_size=sides, max_size=sides),
+                text,
+            ),
+            max_size=12,
+        ),
+        "rows",
+    )
+    cuts = sorted(data.draw(st.lists(st.integers(0, len(rows)), max_size=2)))
+
+    n_cells = len(orders) + lcs
+    sums = [
+        f"{c}{s}"
+        for s in (("",) if sides == 1 else ("_a", "_b"))
+        for c in ("matched", "cand_total")
+    ] + ["ref_total"]
+    names = (["_grp"] if grouped else []) + ["cell"] + sums
+    fold = functools.partial(
+        em._clip_fold,
+        orders=orders,
+        lcs=lcs,
+        grouped=grouped,
+        labels=tuple(range(n_cells)),
+        names=names,
+    )
+
+    def column(texts):
+        if chars:
+            return list(texts)
+        # Arrow hands the fold token arrays as object ndarrays
+        return [None if t is None else np.array(t, dtype=object) for t in texts]
+
+    batches = []
+    for lo, hi in zip([0] + cuts, cuts + [len(rows)]):
+        part = rows[lo:hi]
+        cols = {"_grp": [k for k, _, _ in part]} if grouped else {}
+        for i, side in enumerate(("ca", "cb")[:sides]):
+            cols[side] = column(c[i] for _, c, _ in part)
+        cols["rf"] = column(r for _, _, r in part)
+        batches.append(pd.DataFrame(cols))
+    (out,) = list(fold(iter(batches)))
+    assert list(out.columns) == names
+    key = (lambda r: r["_grp"]) if grouped else (lambda r: 0)
+    got = {
+        (key(r), r["cell"]): tuple(int(r[c]) for c in sums)
+        for r in out.to_dict("records")
+    }
+    want = {
+        (k, j): tuple(cell)
+        for k, cells in _ref_corpus_cells(rows, orders, chars, lcs).items()
+        for j, cell in enumerate(cells)
+    }
+    assert got == want
+
+    blob = cloudpickle.dumps(fold)
+    strings = {a for _, a, _ in pickletools.genops(blob) if isinstance(a, str)}
+    assert "lightfusion_spark.operators.evalmetrics" in strings
+    assert not strings & {"CodeType", "_make_function", "_function_setstate"}
 
 
 def test_poisson1_ppm_thresholds_are_correct():
