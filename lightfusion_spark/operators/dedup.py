@@ -30,12 +30,15 @@ from __future__ import annotations
 
 import hashlib
 import os
-import warnings
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from .fanout import fan_out, fixed_point, pin
+from .webgraph import _directed_edges
 
 
 def _md5_long(col: Column, seed: int | None = None) -> Column:
@@ -296,8 +299,6 @@ def doc_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataF
     # transform + explode runs wide on single-split scans (consumers
     # hash/count shingles — exact min-hashes and integer counts, so
     # partitioning cannot change a bit).
-    from .fanout import fan_out
-
     return (
         fan_out(df.select(F.col(id_col), F.col(text_col)))
         .select(F.col(id_col), toks.alias("tk"))
@@ -487,8 +488,6 @@ def minhash_near_duplicates(
     verification joins co-locate on it, exchange-free) and nothing
     corpus-sized pins executor MEMORY_AND_DISK.
     """
-    from .fanout import pin
-
     hashes = doc_shingle_hashes(df, id_col, text_col, shingle_n)
     if checkpoint_path is not None:
         hashes = _materialize_bucketed(
@@ -540,8 +539,6 @@ def minhash_incremental(
     verification join); the CALLER owns the cache lifecycle, as in
     :func:`minhash_near_duplicates`.
     """
-    from .fanout import pin
-
     nh = doc_shingle_hashes(new, id_col, text_col, shingle_n).cache()
     ch = doc_shingle_hashes(corpus, id_col, text_col, shingle_n).cache()
     # each signature table has two pruned consumers (band table +
@@ -594,8 +591,6 @@ def simhash(
     # Degenerate-parallelism guard (r17): the explode + per-word md5
     # lanes + `bits` conditional votes are the heavy map side — fan the
     # projected rows out on single-split scans (integer votes).
-    from .fanout import fan_out
-
     words = fan_out(df.select(id_col, text_col)).select(
         F.col(id_col),
         F.explode(
@@ -736,18 +731,10 @@ def ngram_jaccard_pairs(
     )
 
 
-#: Rounds the last connected_components call took to converge — a
-#: convenience alias kept for tools/scalecheck.py's O(diameter)-vs-O(log n)
-#: A/B; concurrent callers should use :func:`connected_components_detailed`,
-#: whose :class:`CCResult` carries the round count per call.
-last_cc_rounds: int = 0
-
-
 @dataclass
 class CCResult:
     """Per-call result of :func:`connected_components_detailed`:
-    the label DataFrame plus the loop diagnostics that a module global
-    can't report safely under concurrent calls."""
+    the label DataFrame plus the loop diagnostics."""
 
     labels: DataFrame
     rounds: int
@@ -760,35 +747,30 @@ def connected_components(
     id_col: str,
     pair_cols: tuple[str, str] = ("id_a", "id_b"),
     max_iterations: int = 25,
-    algorithm: str = "two_phase",
 ) -> DataFrame:
     """Duplicate-cluster assignment: connected components over a pair
     graph.  Output (id_col, component) for EVERY vertex — singletons
     keep their own id; the component id is the minimum member id (a
-    deterministic canonical representative), whichever algorithm runs.
+    deterministic canonical representative).
 
-    ``algorithm``:
+    The algorithm is the large-star/small-star alternation (Kiveris et
+    al., "Connected Components in MapReduce and Beyond"): each round
+    contracts edges toward component minima from BOTH ends, converging
+    in O(log n) rounds on any topology — the 100 TB choice, where a long
+    duplicate chain (template spam) costs ~log2(chain) rounds instead
+    of one round per hop (measured in docs/SCALE.md: 7 rounds against
+    64 for min-label propagation on a 64-node chain).
 
-    * ``"two_phase"`` (default) — the large-star/small-star alternation
-      (Kiveris et al., "Connected Components in MapReduce and Beyond"):
-      each round contracts edges toward component minima from BOTH ends,
-      converging in O(log n) rounds on any topology.  The 100 TB choice:
-      a long duplicate chain (template spam) costs ~log2(chain) rounds
-      instead of one round per hop.
-    * ``"propagation"`` — plain min-label propagation: one join + one
-      aggregation per round, O(graph diameter) rounds.  Near-dup
-      families are usually shallow (2-4 hops), where its simpler rounds
-      win; it degrades on deep chains.
-
-    Both loops are driver-side with ``localCheckpoint`` truncating
-    lineage each round (the standard Spark shape for iterative graph
-    algorithms — GraphFrames does the same).  If ``max_iterations`` is
-    exhausted before convergence a ``RuntimeWarning`` fires (the labels
-    may still be coarsening); :func:`connected_components_detailed`
-    returns the converged flag + round count explicitly.
+    The rounds run driver-side through ``fanout.fixed_point``, each
+    round's edge set pinned (the standard Spark shape for iterative
+    graph algorithms — GraphFrames does the same).  If
+    ``max_iterations`` is exhausted before convergence a
+    ``RuntimeWarning`` fires (the labels may still be coarsening);
+    :func:`connected_components_detailed` returns the converged flag +
+    round count explicitly.
     """
     return connected_components_detailed(
-        pairs, vertices, id_col, pair_cols, max_iterations, algorithm
+        pairs, vertices, id_col, pair_cols, max_iterations
     ).labels
 
 
@@ -798,108 +780,19 @@ def connected_components_detailed(
     id_col: str,
     pair_cols: tuple[str, str] = ("id_a", "id_b"),
     max_iterations: int = 25,
-    algorithm: str = "two_phase",
 ) -> CCResult:
     """:func:`connected_components` returning :class:`CCResult` — the
-    label DataFrame plus per-call ``rounds``/``converged`` diagnostics
-    (safe under concurrent calls, unlike the ``last_cc_rounds`` alias)."""
-    global last_cc_rounds
-    a, b = pair_cols
-    edges0 = (
-        pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
+    label DataFrame plus per-call ``rounds``/``converged`` diagnostics."""
+    edges, rounds, converged = fixed_point(
+        pin(_directed_edges(pairs, *pair_cols)),
+        _star_round,
+        _edge_set_changed(),
+        None,
+        max_iterations,
+        f"connected_components exhausted max_iterations={max_iterations} "
+        "before the edge set stabilized — component labels may be "
+        "under-merged; raise max_iterations",
     )
-    if algorithm == "two_phase":
-        res = _cc_two_phase(edges0, vertices, id_col, max_iterations)
-    elif algorithm == "propagation":
-        res = _cc_propagation(edges0, vertices, id_col, max_iterations)
-    else:
-        raise ValueError(
-            f"connected_components algorithm must be two_phase|propagation, got {algorithm!r}"
-        )
-    last_cc_rounds = res.rounds
-    if not res.converged:
-        warnings.warn(
-            f"connected_components ({algorithm}) exhausted max_iterations="
-            f"{max_iterations} before the edge set stabilized — component "
-            "labels may be under-merged; raise max_iterations",
-            RuntimeWarning,
-            stacklevel=3,
-        )
-    return res
-
-
-def _cc_two_phase(
-    edges0: DataFrame, vertices: DataFrame, id_col: str, max_iterations: int
-) -> CCResult:
-    """Large-star/small-star alternation.  Each round:
-
-    * **large-star** — per node u over its full neighborhood Γ(u):
-      m = min(Γ(u) ∪ {u}); rewire every LARGER neighbor v > u to m.
-    * **small-star** — orient edges large→small; per node u over its
-      smaller neighbors: m = min(Γ(u)); rewire them (and u) to m.
-
-    The edge set monotonically contracts toward one star per component
-    (center = component min); convergence is detected by an edge-set
-    signature (count + xxhash64 sum) going stable.  Every step is an
-    equi-join/aggregation on node ids — no driver-side graph state.
-    """
-    edges = edges0.localCheckpoint(eager=True)
-    prev_sig = None
-    rounds = 0
-    converged = False
-    for _ in range(max_iterations):
-        # large-star over the symmetrized neighborhood
-        sym = edges.union(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        mins = sym.groupBy("src").agg(F.min("dst").alias("_mn"))
-        ls = (
-            sym.join(mins, "src")
-            .where(F.col("dst") > F.col("src"))
-            .select(
-                F.col("dst").alias("src"),
-                F.least(F.col("_mn"), F.col("src")).alias("dst"),
-            )
-            # no .distinct() here (r18): duplicates from mutual pairs in
-            # sym are absorbed by the min-aggregations and the round's
-            # final distinct, so the extra exchange bought nothing —
-            # result-identical by construction (A/B: same labels, same
-            # round count, one fewer shuffle stage per round).
-        )
-        # small-star over edges oriented large -> small
-        directed = ls.select(
-            F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
-        ).where(F.col("src") != F.col("dst"))
-        mins2 = directed.groupBy("src").agg(F.min("dst").alias("_m"))
-        ss = (
-            directed.join(mins2, "src")
-            .where(F.col("dst") != F.col("_m"))
-            .select(F.col("dst").alias("src"), F.col("_m").alias("dst"))
-            .union(mins2.select(F.col("src"), F.col("_m").alias("dst")))
-            .where(F.col("src") != F.col("dst"))
-            .distinct()
-            # lazy: the signature aggregation below is this round's ONE
-            # job — it materializes the checkpoint as it computes (ss has
-            # a single consumer in that job), halving the per-round job
-            # count vs eager-checkpoint-then-probe.  Next round's
-            # two-branch union reads the already-stored partitions.
-            .localCheckpoint(eager=False)
-        )
-        rounds += 1
-        # order-insensitive set signature; bit_xor (not sum) — edges are
-        # distinct, and xor can't hit ANSI long-overflow
-        row = ss.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(src, dst))").alias("h"),
-        ).collect()[0]
-        sig = (row["n"], row["h"])
-        edges = ss
-        if sig == prev_sig:
-            converged = True
-            break
-        prev_sig = sig
     labels = edges.groupBy("src").agg(F.min("dst").alias("component"))
     out = (
         vertices.select(F.col(id_col).alias("vid"))
@@ -912,50 +805,74 @@ def _cc_two_phase(
     return CCResult(labels=out, rounds=rounds, converged=converged)
 
 
-def _cc_propagation(
-    edges0: DataFrame, vertices: DataFrame, id_col: str, max_iterations: int
-) -> CCResult:
-    """Min-label propagation (the pre-round-5 implementation)."""
-    edges = edges0.union(
-        edges0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+def _star_round(edges: DataFrame) -> DataFrame:
+    """One large-star/small-star round over an ``(src, dst)`` edge set:
+
+    * **large-star** — per node u over its full neighborhood Γ(u):
+      m = min(Γ(u) ∪ {u}); rewire every LARGER neighbor v > u to m.
+    * **small-star** — orient edges large→small; per node u over its
+      smaller neighbors: m = min(Γ(u)); rewire them (and u) to m.
+
+    The edge set monotonically contracts toward one star per component
+    (center = component min).  Every step is an equi-join/aggregation
+    on node ids — no driver-side graph state.
+    """
+    # large-star over the symmetrized neighborhood
+    sym = edges.union(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    comp = vertices.select(
-        F.col(id_col).alias("vid"), F.col(id_col).alias("comp")
-    ).localCheckpoint(eager=True)
-    rounds = 0
-    converged = False
-    for _ in range(max_iterations):
-        nmin = (
-            edges.join(comp, edges.dst == comp.vid)
-            .groupBy("src")
-            .agg(F.min("comp").alias("nmin"))
+    mins = sym.groupBy("src").agg(F.min("dst").alias("_mn"))
+    ls = (
+        sym.join(mins, "src")
+        .where(F.col("dst") > F.col("src"))
+        .select(
+            F.col("dst").alias("src"),
+            F.least(F.col("_mn"), F.col("src")).alias("dst"),
         )
-        new_comp = (
-            comp.join(nmin, comp.vid == nmin.src, "left")
-            .select(
-                comp.vid.alias("vid"),
-                F.least(F.col("comp"), F.coalesce(F.col("nmin"), F.col("comp"))).alias(
-                    "comp"
-                ),
-            )
-            # lazy for the same reason as the two-phase loop: the
-            # `changed` count is the round's one job and materializes
-            # the checkpoint in passing.
-            .localCheckpoint(eager=False)
-        )
-        changed = (
-            new_comp.alias("n")
-            .join(comp.alias("o"), F.col("n.vid") == F.col("o.vid"))
-            .where(F.col("n.comp") < F.col("o.comp"))
-            .count()
-        )
-        comp = new_comp
-        rounds += 1
-        if changed == 0:
-            converged = True
-            break
-    out = comp.select(F.col("vid").alias(id_col), F.col("comp").alias("component"))
-    return CCResult(labels=out, rounds=rounds, converged=converged)
+        # no .distinct() here (r18): duplicates from mutual pairs in
+        # sym are absorbed by the min-aggregations and the round's
+        # final distinct, so the extra exchange bought nothing —
+        # result-identical by construction (A/B: same labels, same
+        # round count, one fewer shuffle stage per round).
+    )
+    # small-star over edges oriented large -> small
+    directed = ls.select(
+        F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
+    ).where(F.col("src") != F.col("dst"))
+    mins2 = directed.groupBy("src").agg(F.min("dst").alias("_m"))
+    return (
+        directed.join(mins2, "src")
+        .where(F.col("dst") != F.col("_m"))
+        .select(F.col("dst").alias("src"), F.col("_m").alias("dst"))
+        .union(mins2.select(F.col("src"), F.col("_m").alias("dst")))
+        .where(F.col("src") != F.col("dst"))
+        .distinct()
+    )
+
+
+def _edge_set_changed() -> Callable[[DataFrame, DataFrame], bool]:
+    """A fresh convergence test for one connected-components loop:
+    whether a round changed the distinct ``(src, dst)`` edge set, by an
+    order-insensitive set signature (count, bit_xor of xxhash64; bit_xor,
+    not sum — edges are distinct, and xor can't hit ANSI long-overflow).
+
+    It hashes only ``new`` and keeps the signature for the next round,
+    whose ``old`` this round's ``new`` is, so a round's probe is one
+    aggregation over the edge set it just built (re-hashing ``old`` in
+    the same job measured about 50 ms more per round); the first round
+    has no signature to match and never converges."""
+    last = None
+
+    def changed(old: DataFrame, new: DataFrame) -> bool:
+        nonlocal last
+        row = new.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.expr("bit_xor(xxhash64(src, dst))").alias("h"),
+        ).collect()[0]
+        prev, last = last, (row["n"], row["h"])
+        return last != prev
+
+    return changed
 
 
 def dedup_keep_best(

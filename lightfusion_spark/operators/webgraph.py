@@ -1,26 +1,38 @@
-"""Web-graph quality signals: link extraction and distributed PageRank.
+"""Web-graph quality signals: link extraction, centrality and grouping.
 
 Pretraining-corpus curation uses the crawl's own link structure as a
 document-quality prior (CommonCrawl-derived pipelines rank hosts by
 centrality before sampling; the reference repo has no graph surface at
-all — this extends SURVEY §2.4's curation family).  Two pieces:
+all — this extends SURVEY §2.4's curation family).  The pieces:
 
 * :func:`extract_links` / :func:`host_graph` — pure-JVM href extraction
   from raw HTML (regexp, no Python crossing) and reduction to a
   host-level edge list;
 * :func:`pagerank` — power-iteration PageRank as the standard Spark
   iterative shape: one equi-join + one exact-decimal aggregation per
-  round, ``localCheckpoint`` truncating lineage, per-call
-  :class:`PRResult` diagnostics with an explicit ``converged`` flag
-  (the connected-components round-6 lesson: iteration exhaustion must
-  be loud, never silently-wrong labels);
-* :func:`personalized_pagerank` — the same iteration with teleport and
+  round, per-call :class:`PRResult` diagnostics with an explicit
+  ``converged`` flag (the connected-components round-6 lesson:
+  iteration exhaustion must be loud, never silently-wrong labels);
+* :func:`personalized_pagerank` — the same rank walk with teleport and
   dangling mass restricted to a SEED set: proximity-to-trusted-sources
   as the rank, the corpus-expansion prior;
 * :func:`hits` — Kleinberg hubs/authorities, the complementary signal
   (what to crawl FROM vs what to KEEP), L2-normalized per round with
   hash-exact arithmetic (exact-decimal sums + correctly-rounded IEEE
-  sqrt/division).
+  sqrt/division);
+* :func:`label_propagation`, :func:`k_core`, :func:`triangle_stats` —
+  link-neighborhood communities, link-farm pruning and local
+  clustering over the undirected graph.
+
+One round loop: PageRank, personalized PageRank, label propagation,
+k-core and ``dedup.connected_components`` all run through
+``fanout.fixed_point`` — ``iterations=k`` rounds, or rounds until the
+operator's probe sees no change within ``max_iterations`` (exhaustion
+warns once, in that loop), every round's state pinned lazily through
+``fanout.pin`` and, in convergence mode, one probe job per round.
+Edges are canonicalized once per direction: :func:`_directed_edges`
+(self-loops dropped, distinct) and :func:`_undirected_edges` (also
+symmetrized).
 
 100 TB shape: the rank/contribution tables are (node, double) pairs —
 a few GB for billions of hosts, partitioned by node; every round
@@ -33,11 +45,12 @@ the shuffle, so no salting is needed.
 
 from __future__ import annotations
 
-import warnings
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .fanout import fixed_point, pin
 
 #: Exact accumulator for rank sums: ranks live in [0, 1] so 18 integer
 #: digits is vast headroom; 20 fractional digits exceed double precision,
@@ -112,6 +125,37 @@ def host_graph(links: DataFrame, src_url: str = "target_uri", dst_url: str = "li
     )
 
 
+def _directed_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Canonical directed edge list ``(src, dst)``: self-loops dropped,
+    distinct — the PageRank, PPR, HITS and connected-components input."""
+    return (
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        .where(F.col("src") != F.col("dst"))
+        .distinct()
+    )
+
+
+def _undirected_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Canonical undirected edge list ``(a, b)``: every edge in both
+    directions, self-loops dropped, distinct — the label-propagation,
+    k-core and triangle input."""
+    fwd = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    return (
+        fwd.union(fwd.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        .where(F.col("a") != F.col("b"))
+        .distinct()
+    )
+
+
+def _vertices(e: DataFrame) -> DataFrame:
+    """Distinct ``node`` column of a directed edge list's endpoints."""
+    return (
+        e.select(F.col("src").alias("node"))
+        .union(e.select(F.col("dst").alias("node")))
+        .distinct()
+    )
+
+
 @dataclass
 class PRResult:
     """Per-call result of :func:`pagerank_detailed`: the rank DataFrame
@@ -130,7 +174,6 @@ def pagerank(
     iterations: int | None = None,
     tol: float = 1e-6,
     max_iterations: int = 40,
-    checkpoint_interval: int = 5,
 ) -> DataFrame:
     """PageRank over a directed edge list; returns ``(node, rank)`` for
     every vertex appearing as a source or destination.
@@ -151,7 +194,7 @@ def pagerank(
     broadcast 1-row relation, never a per-iteration collect.
     """
     return pagerank_detailed(
-        edges, src, dst, damping, iterations, tol, max_iterations, checkpoint_interval
+        edges, src, dst, damping, iterations, tol, max_iterations
     ).ranks
 
 
@@ -163,27 +206,16 @@ def pagerank_detailed(
     iterations: int | None = None,
     tol: float = 1e-6,
     max_iterations: int = 40,
-    checkpoint_interval: int = 5,
 ) -> PRResult:
     """:func:`pagerank` returning :class:`PRResult` with per-call
     ``iterations``/``converged`` diagnostics."""
     # Materialize the loop invariants ONCE: without this every iteration's
     # plan re-derives edges/nodes/degrees all the way from the source scan
     # (5 iterations = 5 re-reads of the upstream relation — at 100 TB, five
-    # crawls).  localCheckpoint also truncates lineage so the iteration-k
-    # plan doesn't nest k copies of the edge derivation.
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    # crawls).  The pin also truncates lineage so the iteration-k plan
+    # doesn't nest k copies of the edge derivation.
+    e = pin(_directed_edges(edges, src, dst))
+    nodes = pin(_vertices(e))
     # ONE bounded driver scalar: the vertex count (like k-means' k x dim
     # and CC's convergence signature — documented driver-side state).
     n = nodes.count()
@@ -191,17 +223,41 @@ def pagerank_detailed(
         return PRResult(ranks=nodes.withColumn("rank", F.lit(0.0)), iterations=0, converged=True)
     n_d = float(n)
     base = (1.0 - damping) / n_d  # IEEE double ops, replayed verbatim in oracles
-    deg = (
-        e.groupBy("src")
-        .agg(F.count(F.lit(1)).cast("double").alias("deg"))
-        .localCheckpoint(eager=True)
+    contrib = F.coalesce(F.col("contrib"), F.lit(0.0))
+    return _rank_walk(
+        "pagerank",
+        e,
+        nodes,
+        start=F.lit(1.0) / F.lit(n_d),
+        update=F.lit(base) + F.lit(damping) * (contrib + F.col("dm") / F.lit(n_d)),
+        iterations=iterations,
+        tol=tol,
+        max_iterations=max_iterations,
     )
 
-    ranks = nodes.select("node", (F.lit(1.0) / F.lit(n_d)).alias("rank"))
-    total_iters = iterations if iterations is not None else max_iterations
-    converged = iterations is not None
-    done = 0
-    for i in range(total_iters):
+
+def _rank_walk(
+    what: str,
+    e: DataFrame,
+    nodes: DataFrame,
+    start: Column,
+    update: Column,
+    iterations: int | None,
+    tol: float,
+    max_iterations: int,
+) -> PRResult:
+    """The power iteration :func:`pagerank_detailed` and
+    :func:`personalized_pagerank_detailed` share.  Per round: the
+    dangling mass ``dm`` (rank held by nodes without out-edges), each
+    destination's ``contrib`` (sum of rank / out-degree over its
+    in-edges), and the new rank ``update`` over ``nodes``' columns,
+    ``contrib`` and ``dm``; in convergence mode the L1 rank delta is the
+    round's probe.  ``start`` and ``update`` are the caller's own rank
+    expressions, so standard PageRank's arithmetic carries no seed
+    CASE."""
+    deg = pin(e.groupBy("src").agg(F.count(F.lit(1)).cast("double").alias("deg")))
+
+    def step(ranks: DataFrame) -> DataFrame:
         dangling = (
             ranks.join(deg, ranks["node"] == deg["src"], "left_anti")
             .agg(
@@ -220,61 +276,36 @@ def pagerank_detailed(
                 .alias("contrib")
             )
         )
-        new_ranks = (
+        return (
             nodes.join(contribs, nodes["node"] == contribs["dst"], "left")
             .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("contrib"), F.lit(0.0))
-                        + F.col("dm") / F.lit(n_d)
-                    )
-                ).alias("rank"),
-            )
+            .select("node", update.alias("rank"))
         )
-        done = i + 1
-        if iterations is None:
-            # convergence mode: materialize + truncate lineage every round
-            # (each round's plan would otherwise nest the previous one),
-            # then pull ONE scalar — the L1 delta.
-            new_ranks = new_ranks.localCheckpoint(eager=True)
-            delta = (
-                ranks.select("node", F.col("rank").alias("_old"))
-                .join(new_ranks, "node")
-                .agg(
-                    F.sum(F.abs(F.col("rank") - F.col("_old")).cast(_PR_DEC))
-                    .cast("double")
-                    .alias("d")
-                )
-                .collect()[0]["d"]
+
+    def moved(old: DataFrame, new: DataFrame) -> bool:
+        delta = (
+            old.select("node", F.col("rank").alias("_old"))
+            .join(new, "node")
+            .agg(
+                F.sum(F.abs(F.col("rank") - F.col("_old")).cast(_PR_DEC))
+                .cast("double")
+                .alias("d")
             )
-            ranks = new_ranks
-            if delta is not None and delta <= tol:
-                converged = True
-                break
-        else:
-            # Lazy checkpoint EVERY iteration (r17): ranks(i) has TWO
-            # consumers in round i+1 — the dangling-mass broadcast and
-            # the contribution join — so an unmaterialized plan doubles
-            # per round (2^k copies of round 1 by round k; the interval
-            # eager checkpoint paid build-time jobs to contain it).
-            # eager=False keeps plan construction job-free; the final
-            # action materializes each round exactly once and both
-            # consumers read the stored partitions.  Same arithmetic —
-            # bit-identical ranks.
-            ranks = new_ranks.localCheckpoint(eager=False)
-    if not converged:
-        warnings.warn(
-            f"pagerank exhausted max_iterations={max_iterations} before the "
-            f"L1 delta reached tol={tol} — ranks are unconverged; raise "
-            "max_iterations or loosen tol",
-            RuntimeWarning,
-            stacklevel=3,
+            .collect()[0]["d"]
         )
-    return PRResult(ranks=ranks, iterations=done, converged=converged)
+        return delta is None or delta > tol
+
+    ranks, rounds, converged = fixed_point(
+        nodes.select("node", start.alias("rank")),
+        step,
+        moved,
+        iterations,
+        max_iterations,
+        f"{what} exhausted max_iterations={max_iterations} before the L1 "
+        f"delta reached tol={tol} — ranks are unconverged; raise "
+        "max_iterations or loosen tol",
+    )
+    return PRResult(ranks=ranks, iterations=rounds, converged=converged)
 
 
 def personalized_pagerank(
@@ -286,7 +317,6 @@ def personalized_pagerank(
     iterations: int | None = None,
     tol: float = 1e-6,
     max_iterations: int = 40,
-    checkpoint_interval: int = 5,
 ) -> DataFrame:
     """Personalized PageRank: random walks restart at a SEED set instead
     of teleporting uniformly — rank becomes proximity to the seeds, the
@@ -307,15 +337,9 @@ def personalized_pagerank(
     fixed IEEE-double operation order, so fixed-``iterations`` runs are
     bit-reproducible across engines and partitionings (the registered
     face replays all iterations as an unrolled DuckDB CTE chain).
-
-    Kept as its own loop rather than a seed-parameterized
-    :func:`pagerank_detailed`: the standard-PR arithmetic and plan are
-    pinned by a benched face, and threading an ``is_seed`` CASE through
-    them would change both for a branch standard PR never takes.
     """
     return personalized_pagerank_detailed(
-        edges, seeds, src, dst, damping, iterations, tol, max_iterations,
-        checkpoint_interval,
+        edges, seeds, src, dst, damping, iterations, tol, max_iterations
     ).ranks
 
 
@@ -328,30 +352,21 @@ def personalized_pagerank_detailed(
     iterations: int | None = None,
     tol: float = 1e-6,
     max_iterations: int = 40,
-    checkpoint_interval: int = 5,
 ) -> PRResult:
     """:func:`personalized_pagerank` returning :class:`PRResult` with
     per-call ``iterations``/``converged`` diagnostics."""
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = pin(_directed_edges(edges, src, dst))
     seed_nodes = seeds.select(F.col(seeds.columns[0]).alias("node")).distinct()
     # nodes carry their seed flag through every iteration; the seed set
     # is curation-sized (a vetted host list), so the flag join broadcasts.
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
+    nodes = pin(
+        _vertices(e)
         .join(
             F.broadcast(seed_nodes.withColumn("is_seed", F.lit(True))),
             "node",
             "left",
         )
         .select("node", F.coalesce(F.col("is_seed"), F.lit(False)).alias("is_seed"))
-        .localCheckpoint(eager=True)
     )
     # TWO bounded driver scalars (vertex + effective-seed counts), the
     # same class as pagerank's n.
@@ -369,97 +384,20 @@ def personalized_pagerank_detailed(
         )
     ns_d = float(ns)
     base_s = (1.0 - damping) / ns_d  # IEEE double ops, replayed in oracles
-    deg = (
-        e.groupBy("src")
-        .agg(F.count(F.lit(1)).cast("double").alias("deg"))
-        .localCheckpoint(eager=True)
+    contrib = F.coalesce(F.col("contrib"), F.lit(0.0))
+    return _rank_walk(
+        "personalized_pagerank",
+        e,
+        nodes,
+        start=F.when(F.col("is_seed"), F.lit(1.0) / F.lit(ns_d)).otherwise(F.lit(0.0)),
+        update=F.when(
+            F.col("is_seed"),
+            F.lit(base_s) + F.lit(damping) * (contrib + F.col("dm") / F.lit(ns_d)),
+        ).otherwise(F.lit(damping) * contrib),
+        iterations=iterations,
+        tol=tol,
+        max_iterations=max_iterations,
     )
-
-    ranks = nodes.select(
-        "node",
-        F.when(F.col("is_seed"), F.lit(1.0) / F.lit(ns_d))
-        .otherwise(F.lit(0.0))
-        .alias("rank"),
-    )
-    total_iters = iterations if iterations is not None else max_iterations
-    converged = iterations is not None
-    done = 0
-    for i in range(total_iters):
-        dangling = (
-            ranks.join(deg, ranks["node"] == deg["src"], "left_anti")
-            .agg(
-                F.coalesce(
-                    F.sum(F.col("rank").cast(_PR_DEC)).cast("double"), F.lit(0.0)
-                ).alias("dm")
-            )
-        )
-        contribs = (
-            e.join(ranks, e["src"] == ranks["node"])
-            .join(deg, "src")
-            .groupBy("dst")
-            .agg(
-                F.sum((F.col("rank") / F.col("deg")).cast(_PR_DEC))
-                .cast("double")
-                .alias("contrib")
-            )
-        )
-        new_ranks = (
-            nodes.join(contribs, nodes["node"] == contribs["dst"], "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                F.when(
-                    F.col("is_seed"),
-                    F.lit(base_s)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("contrib"), F.lit(0.0))
-                        + F.col("dm") / F.lit(ns_d)
-                    ),
-                )
-                .otherwise(
-                    F.lit(damping) * F.coalesce(F.col("contrib"), F.lit(0.0))
-                )
-                .alias("rank"),
-            )
-        )
-        done = i + 1
-        if iterations is None:
-            new_ranks = new_ranks.localCheckpoint(eager=True)
-            delta = (
-                ranks.select("node", F.col("rank").alias("_old"))
-                .join(new_ranks, "node")
-                .agg(
-                    F.sum(F.abs(F.col("rank") - F.col("_old")).cast(_PR_DEC))
-                    .cast("double")
-                    .alias("d")
-                )
-                .collect()[0]["d"]
-            )
-            ranks = new_ranks
-            if delta is not None and delta <= tol:
-                converged = True
-                break
-        else:
-            # Lazy checkpoint EVERY iteration (r17): ranks(i) has TWO
-            # consumers in round i+1 — the dangling-mass broadcast and
-            # the contribution join — so an unmaterialized plan doubles
-            # per round (2^k copies of round 1 by round k; the interval
-            # eager checkpoint paid build-time jobs to contain it).
-            # eager=False keeps plan construction job-free; the final
-            # action materializes each round exactly once and both
-            # consumers read the stored partitions.  Same arithmetic —
-            # bit-identical ranks.
-            ranks = new_ranks.localCheckpoint(eager=False)
-    if not converged:
-        warnings.warn(
-            f"personalized_pagerank exhausted max_iterations={max_iterations} "
-            f"before the L1 delta reached tol={tol} — ranks are unconverged; "
-            "raise max_iterations or loosen tol",
-            RuntimeWarning,
-            stacklevel=3,
-        )
-    return PRResult(ranks=ranks, iterations=done, converged=converged)
 
 
 def hits(
@@ -467,7 +405,6 @@ def hits(
     src: str = "src",
     dst: str = "dst",
     iterations: int = 5,
-    checkpoint_interval: int = 2,
 ) -> DataFrame:
     """HITS hubs-and-authorities over a directed edge list; returns
     ``(node, hub, authority)`` for every vertex.
@@ -494,18 +431,8 @@ def hits(
     :func:`pagerank` — plus each norm reaching the plan as a broadcast
     1-row relation, never a driver round-trip.
     """
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = pin(_directed_edges(edges, src, dst))
+    nodes = pin(_vertices(e))
     hubs = nodes.select("node", F.lit(1.0).alias("h"))
     auth = nodes.select("node", F.lit(0.0).alias("a"))
 
@@ -521,14 +448,12 @@ def hits(
         join against ``nodes`` the sparse form replaces (2 joins per
         half-step -> 1) cannot change a bit.  The dense (node, hub,
         authority) output is restored by ONE fill at the end."""
-        # Lazy checkpoint per half-step (r17): raw has TWO consumers —
-        # the squared-norm broadcast and the normalized output — so an
-        # unmaterialized plan doubles per half-step (2^k copies of the
-        # first fold by half-step k; the old interval-2 eager
-        # checkpoints paid build-time jobs to contain it).  eager=False
-        # keeps plan construction job-free; the final action
-        # materializes each half-step's node-bounded sums exactly once.
-        raw = (
+        # Pinned per half-step (r17): raw has TWO consumers — the
+        # squared-norm broadcast and the normalized output — so an
+        # unpinned plan doubles per half-step (2^k copies of the first
+        # fold by half-step k); the final action materializes each
+        # half-step's node-bounded sums exactly once.
+        raw = pin(
             e.join(scores, e[edge_from] == scores["node"])
             .groupBy(edge_to)
             .agg(
@@ -536,7 +461,6 @@ def hits(
                 .cast("double")
                 .alias("_raw")
             )
-            .localCheckpoint(eager=False)
         )
         norm = raw.agg(
             F.sqrt(
@@ -630,7 +554,6 @@ def label_propagation(
     dst: str = "dst",
     iterations: int | None = None,
     max_iterations: int = 20,
-    checkpoint_interval: int = 3,
 ) -> DataFrame:
     """Synchronous label-propagation community detection over an edge
     list (Raghavan et al. 2007); returns ``(node, community)`` for every
@@ -672,7 +595,7 @@ def label_propagation(
     keys.
     """
     return label_propagation_detailed(
-        edges, src, dst, iterations, max_iterations, checkpoint_interval
+        edges, src, dst, iterations, max_iterations
     ).labels
 
 
@@ -682,25 +605,13 @@ def label_propagation_detailed(
     dst: str = "dst",
     iterations: int | None = None,
     max_iterations: int = 20,
-    checkpoint_interval: int = 3,
 ) -> LPAResult:
     """:func:`label_propagation` returning :class:`LPAResult` with
     per-call ``iterations``/``converged`` diagnostics."""
-    fwd = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    e = (
-        fwd.union(fwd.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes = e.select(F.col("a").alias("node")).distinct().localCheckpoint(
-        eager=True
-    )
-    labels = nodes.select("node", F.col("node").alias("community"))
-    total_iters = iterations if iterations is not None else max_iterations
-    converged = iterations is not None
-    done = 0
-    for i in range(total_iters):
+    e = pin(_undirected_edges(edges, src, dst))
+    nodes = pin(e.select(F.col("a").alias("node")).distinct())
+
+    def step(labels: DataFrame) -> DataFrame:
         votes = (
             e.join(labels, e["a"] == labels["node"])
             .groupBy(F.col("b").alias("node"), "community")
@@ -713,43 +624,34 @@ def label_propagation_detailed(
         # work).  An equivalent per-node row_number window would SORT
         # the vote relation every round (measured: curve exponent 0.87
         # windowed vs 0.52 aggregated — see SCALE.md).
-        new_labels = votes.groupBy("node").agg(
+        return votes.groupBy("node").agg(
             F.min_by(
                 "community",
                 F.struct((-F.col("cnt")).alias("_negc"), F.col("community")),
             ).alias("community")
         )
-        done = i + 1
-        if iterations is None:
-            new_labels = new_labels.localCheckpoint(eager=True)
-            n_changed = (
-                labels.select("node", F.col("community").alias("_old"))
-                .join(new_labels, "node")
-                .where(F.col("community") != F.col("_old"))
-                .count()
-            )
-            labels = new_labels
-            if n_changed == 0:
-                converged = True
-                break
-        else:
-            if (
-                checkpoint_interval
-                and done % checkpoint_interval == 0
-                and done < total_iters
-            ):
-                new_labels = new_labels.localCheckpoint(eager=True)
-            labels = new_labels
-    if not converged:
-        warnings.warn(
-            f"label_propagation exhausted max_iterations={max_iterations} "
-            "with labels still changing (synchronous LPA can oscillate "
-            "with period 2) — labels are the round-"
-            f"{done} snapshot, not a fixed point",
-            RuntimeWarning,
-            stacklevel=3,
+
+    def relabeled(old: DataFrame, new: DataFrame) -> bool:
+        return (
+            old.select("node", F.col("community").alias("_old"))
+            .join(new, "node")
+            .where(F.col("community") != F.col("_old"))
+            .count()
+            > 0
         )
-    return LPAResult(labels=labels, iterations=done, converged=converged)
+
+    labels, rounds, converged = fixed_point(
+        nodes.select("node", F.col("node").alias("community")),
+        step,
+        relabeled,
+        iterations,
+        max_iterations,
+        f"label_propagation exhausted max_iterations={max_iterations} "
+        "with labels still changing (synchronous LPA can oscillate "
+        "with period 2) — labels are the round-"
+        f"{max_iterations} snapshot, not a fixed point",
+    )
+    return LPAResult(labels=labels, iterations=rounds, converged=converged)
 
 
 @dataclass
@@ -795,8 +697,8 @@ def k_core(
 
     100 TB shape: per round, one map-side-combinable degree count +
     two semi-joins restricting the edge list to survivors — everything
-    keyed by node id, no windows, no all-pairs; ``localCheckpoint``
-    truncates the per-round lineage like every iterative operator here.
+    keyed by node id, no windows, no all-pairs; the per-round pin
+    truncates the lineage like every iterative operator here.
     Peeling rounds needed in practice are tiny (a web graph's
     degeneracy ordering collapses in a handful of simultaneous rounds).
     """
@@ -815,41 +717,34 @@ def k_core_detailed(
     ``iterations``/``converged`` diagnostics."""
     if k < 1:
         raise ValueError(f"k_core: k must be >= 1, got {k}")
-    fwd = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    e = (
-        fwd.union(fwd.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
+
+    def degrees(e: DataFrame) -> DataFrame:
+        return e.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
+
+    def peel(e: DataFrame) -> DataFrame:
+        keep = degrees(e).where(F.col("deg") >= k).select("a")
+        return e.join(keep, "a", "leftsemi").join(
+            keep.select(F.col("a").alias("b")), "b", "leftsemi"
+        )
+
+    def peels(old: DataFrame, new: DataFrame) -> bool:
+        # the nodes `peel` drops from `old` are exactly those under degree k
+        return degrees(old).where(F.col("deg") < k).count() > 0
+
+    e, rounds, converged = fixed_point(
+        pin(_undirected_edges(edges, src, dst)),
+        peel,
+        peels,
+        iterations,
+        max_iterations,
+        f"k_core exhausted max_iterations={max_iterations} with nodes "
+        "still peeling — the result may contain sub-k nodes (a partial "
+        "peel), not the k-core fixed point",
     )
-    total_iters = iterations if iterations is not None else max_iterations
-    converged = iterations is not None
-    done = 0
-    for i in range(total_iters):
-        deg = e.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
-        keep = deg.where(F.col("deg") >= k).select("a")
-        n_drop = deg.where(F.col("deg") < k).count() if iterations is None else None
-        e = (
-            e.join(keep, "a", "leftsemi")
-            .join(keep.select(F.col("a").alias("b")), "b", "leftsemi")
-            .localCheckpoint(eager=True)
-        )
-        done = i + 1
-        if iterations is None and n_drop == 0:
-            converged = True
-            break
-    if not converged:
-        warnings.warn(
-            f"k_core exhausted max_iterations={max_iterations} with nodes "
-            "still peeling — the result may contain sub-k nodes (a partial "
-            "peel), not the k-core fixed point",
-            RuntimeWarning,
-            stacklevel=3,
-        )
     out = e.groupBy(F.col("a").alias("node")).agg(
         F.count(F.lit(1)).alias("degree")
     )
-    return KCoreResult(nodes=out, iterations=done, converged=converged)
+    return KCoreResult(nodes=out, iterations=rounds, converged=converged)
 
 
 def triangle_stats(
@@ -892,23 +787,17 @@ def triangle_stats(
     O(m^1.5) wedge bound is the published cost of exact triangle
     counting and is reached only by near-clique graphs.
     """
-    fwd = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    und = (
-        fwd.union(fwd.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _undirected_edges(edges, src, dst)
     # (node, degree) — consumed by both orientation joins AND the final
     # output join; one row per node, so materializing it once is cheap
     # and saves two re-executions of the symmetrize+distinct subtree
-    deg = (
-        und.groupBy("a")
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .localCheckpoint(eager=True)
-    )
+    deg = pin(und.groupBy("a").agg(F.count(F.lit(1)).alias("deg")))
     # Orient a->b iff (deg_a, a) < (deg_b, b): each undirected edge
     # appears in `und` in both directions, so exactly one survives.
-    o = (
+    # consumed THREE times (both wedge sides + the closure probe);
+    # without the pin the symmetrize+degree subtree re-executes per
+    # consumer — the same reuse fix as pagerank's edges
+    o = pin(
         und.join(deg.select(F.col("a"), F.col("deg").alias("da")), "a")
         .join(
             deg.select(F.col("a").alias("b"), F.col("deg").alias("db")), "b"
@@ -918,10 +807,6 @@ def triangle_stats(
             | ((F.col("da") == F.col("db")) & (F.col("a") < F.col("b")))
         )
         .select("a", "b", "db")
-        # consumed THREE times (both wedge sides + the closure probe);
-        # without this the symmetrize+degree subtree re-executes per
-        # consumer — the same reuse fix as pagerank's edges
-        .localCheckpoint(eager=True)
     )
     o1 = o.select(F.col("a").alias("u"), F.col("b").alias("v"), F.col("db").alias("dv"))
     o2 = o.select(F.col("a").alias("u"), F.col("b").alias("w"), F.col("db").alias("dw"))

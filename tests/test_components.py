@@ -1,6 +1,6 @@
-"""Connected-components tests: both algorithms against a pure-Python
-union-find reference on random graphs, and the round-count contrast that
-motivates the two-phase default (O(log n) vs O(diameter) on a path)."""
+"""Connected-components tests: the two-phase (large-star/small-star)
+loop against a pure-Python union-find reference on random graphs, and
+its O(log n) round count on a path."""
 
 import numpy as np
 import pytest
@@ -29,20 +29,19 @@ def _union_find(n_vertices, pairs):
     return {v: min(find(v), roots[find(v)]) for v in range(n_vertices)}
 
 
-def _labels(spark, n, pairs, algorithm, max_iterations=25):
+def _components(spark, n, pairs, max_iterations=25):
     vs = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
     ps = spark.createDataFrame(pairs or [(0, 0)], "id_a long, id_b long")
     if not pairs:
         ps = ps.limit(0)
-    out = dedup.connected_components(
-        ps, vs, "doc_id", max_iterations=max_iterations, algorithm=algorithm
+    res = dedup.connected_components_detailed(
+        ps, vs, "doc_id", max_iterations=max_iterations
     )
-    return {r["doc_id"]: r["component"] for r in out.collect()}
+    return {r["doc_id"]: r["component"] for r in res.labels.collect()}, res
 
 
-@pytest.mark.parametrize("algorithm", ["two_phase", "propagation"])
 @pytest.mark.parametrize("seed", [0, 1, 2])
-def test_matches_union_find_on_random_graphs(spark, algorithm, seed):
+def test_matches_union_find_on_random_graphs(spark, seed):
     rng = np.random.RandomState(seed)
     n = 60
     pairs = [
@@ -51,33 +50,32 @@ def test_matches_union_find_on_random_graphs(spark, algorithm, seed):
         if a != b
     ]
     expected = _union_find(n, pairs)
-    got = _labels(spark, n, pairs, algorithm)
+    got, _ = _components(spark, n, pairs)
     assert got == expected
 
 
-@pytest.mark.parametrize("algorithm", ["two_phase", "propagation"])
-def test_no_edges_all_singletons(spark, algorithm):
-    got = _labels(spark, 5, [], algorithm)
+def test_no_edges_all_singletons(spark):
+    got, _ = _components(spark, 5, [])
     assert got == {i: i for i in range(5)}
 
 
 def test_two_phase_path_graph_converges_in_log_rounds(spark):
-    """The motivating case: a 64-node chain. Propagation moves the min
-    label one hop per round (O(diameter)); two-phase halves the distance
-    per round (O(log n))."""
+    """The motivating case: a 64-node chain. Min-label propagation moves
+    the min label one hop per round (O(diameter)); two-phase halves the
+    distance per round (O(log n))."""
     n = 64
     pairs = [(i, i + 1) for i in range(n - 1)]
-    got = _labels(spark, n, pairs, "two_phase", max_iterations=25)
+    got, res = _components(spark, n, pairs, max_iterations=25)
     assert got == {i: 0 for i in range(n)}
-    assert dedup.last_cc_rounds <= 10, dedup.last_cc_rounds
+    assert res.converged and res.rounds <= 10, res.rounds
 
-    # propagation at the same budget must NOT have finished the chain —
-    # the degradation the two-phase default removes; exhausting the budget
-    # warns instead of silently returning under-merged labels
+    # a budget too small for the chain must exhaust LOUDLY: it warns and
+    # flags converged=False instead of silently returning under-merged
+    # labels
     with pytest.warns(RuntimeWarning, match="max_iterations"):
-        got_prop = _labels(spark, n, pairs, "propagation", max_iterations=8)
-    assert dedup.last_cc_rounds == 8
-    assert got_prop != {i: 0 for i in range(n)}
+        got_short, res = _components(spark, n, pairs, max_iterations=2)
+    assert not res.converged and res.rounds == 2
+    assert got_short != {i: 0 for i in range(n)}
 
 
 def test_detailed_result_reports_rounds_and_convergence(spark):
@@ -87,13 +85,6 @@ def test_detailed_result_reports_rounds_and_convergence(spark):
     assert res.converged and res.rounds >= 1
     got = {r["doc_id"]: r["component"] for r in res.labels.collect()}
     assert got == {0: 0, 1: 0, 2: 0, 3: 3, 4: 4, 5: 4}
-
-
-def test_rejects_unknown_algorithm(spark):
-    vs = spark.createDataFrame([(1,)], "doc_id long")
-    ps = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    with pytest.raises(ValueError, match="two_phase|propagation"):
-        dedup.connected_components(ps, vs, "doc_id", algorithm="nope")
 
 
 def test_incremental_dedup_nulls_and_membership(spark):

@@ -81,6 +81,16 @@ SUBSET = [
     "pipe_eval_qa_bootstrap",
     "pipe_eval_auc_bootstrap",
     "pipe_eval_pr_bootstrap",
+    # the graph faces: PageRank / PPR / LPA / k-core rounds through the
+    # one fanout.fixed_point loop, HITS and triangles through fanout.pin,
+    # each against its unrolled DuckDB replay
+    "pipe_web_pagerank",
+    "pipe_web_ppr",
+    "pipe_web_hits",
+    "pipe_web_rank_sample",
+    "pipe_web_lpa",
+    "pipe_web_kcore",
+    "pipe_web_triangles",
 ]
 
 

@@ -91,3 +91,21 @@ def test_one_reference_clipped_cell_fold():
     em = (REPO / "lightfusion_spark" / "operators" / "evalmetrics.py").read_text()
     n = em.count(".mapInPandas(")
     assert n == 1, f".mapInPandas( appears {n} times in evalmetrics.py"
+
+
+def test_one_fixed_point_loop():
+    """PageRank, personalized PageRank, label propagation, k-core and the
+    two-phase connected components run their rounds through one driver,
+    ``fanout.fixed_point``: the graph modules pin only through
+    ``fanout.pin``, the dropped options are gone, and the five loops share
+    one exhaustion warning."""
+    ops = REPO / "lightfusion_spark" / "operators"
+    src = {n: (ops / n).read_text() for n in ("webgraph.py", "dedup.py", "fanout.py")}
+    for n in ("webgraph.py", "dedup.py"):
+        assert ".localCheckpoint(" not in src[n], n
+    for p in (REPO / "lightfusion_spark").rglob("*.py"):
+        for gone in ("checkpoint_interval", "last_cc_rounds", "_cc_propagation"):
+            assert gone not in p.read_text(), f"{gone} in {p.relative_to(REPO)}"
+    n = sum(s.count("warnings.warn(") for s in src.values())
+    assert n == 1, f"{n} warning sites in webgraph.py, dedup.py and fanout.py"
+    assert "warnings.warn(exhausted, RuntimeWarning" in src["fanout.py"]

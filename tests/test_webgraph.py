@@ -77,6 +77,30 @@ def test_exhaustion_warns_and_flags(spark):
     assert any("unconverged" in str(x.message) for x in w)
 
 
+def test_exhaustion_warning_names_the_callers_line(spark):
+    # the loops share one exhaustion warning; it must point at the line
+    # that called the operator (here, each lambda), not into the
+    # package, whether the call goes through a plain operator, its
+    # `_detailed` form or PageRank's shared rank walk
+    edges = spark.createDataFrame([(0, 1), (1, 2), (2, 0)], "src long, dst long")
+    seeds = spark.createDataFrame([(0,)], "node long")
+    calls = [
+        lambda: webgraph.pagerank(edges, tol=-1.0, max_iterations=1),
+        lambda: webgraph.personalized_pagerank_detailed(
+            edges, seeds, tol=-1.0, max_iterations=1
+        ),
+        lambda: webgraph.label_propagation(edges, max_iterations=1),
+        lambda: webgraph.k_core_detailed(edges, k=3, max_iterations=1),
+    ]
+    for call in calls:
+        with warnings.catch_warnings(record=True) as w:
+            warnings.simplefilter("always")
+            call()
+        assert [
+            (x.filename, x.lineno) for x in w if x.category is RuntimeWarning
+        ] == [(__file__, call.__code__.co_firstlineno)]
+
+
 def test_every_vertex_ranked_including_sink_only(spark):
     # vertex 5 appears only as a destination; it must still get a rank.
     res = _pr(spark, 6, [(0, 5), (1, 5), (2, 5), (3, 5), (4, 5)], iterations=4)

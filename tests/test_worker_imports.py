@@ -135,6 +135,23 @@ def test_package_root_is_lazy_and_leaves_driver_imports_alone():
     subprocess.run([sys.executable, "-c", code], cwd=REPO_ROOT, check=True)
 
 
+def test_operators_package_is_lazy():
+    """A worker importing one operator module (the BLEU/chrF/ROUGE cell
+    fold's ``evalmetrics``) loads none of its siblings; the package's
+    names still resolve on demand."""
+    code = (
+        "import sys\n"
+        "import lightfusion_spark.operators.evalmetrics\n"
+        "assert 'lightfusion_spark.operators.multimodal' not in sys.modules\n"
+        "assert 'lightfusion_spark.operators.asof' not in sys.modules\n"
+        "from lightfusion_spark import operators\n"
+        "from lightfusion_spark.operators import asof\n"
+        "assert operators.multimodal.__name__ == 'lightfusion_spark.operators.multimodal'\n"
+        "assert asof is operators.asof\n"
+    )
+    subprocess.run([sys.executable, "-c", code], cwd=REPO_ROOT, check=True)
+
+
 @eager_zip_invalidation
 def test_package_udf_gates_worker_zip_importers(spark):
     """Two runs of package-backed Arrow UDFs in one session: the workers

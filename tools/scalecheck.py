@@ -143,25 +143,24 @@ def main() -> None:
         lambda: skew.salted_agg(ev20, ["event_type"], "event_id").count(),
     )
 
-    # Connected-components round-count A/B on a worst-case path graph
-    # (template-spam chains): two-phase contracts O(log n), propagation
-    # crawls one hop per round.  rows_out records the converged ROUNDS.
-    def _cc_rounds(n, algorithm, max_iterations):
+    # Connected-components round count on a worst-case path graph
+    # (template-spam chains): two-phase contracts in O(log n) rounds.
+    # rows_out records the converged ROUNDS.
+    def _cc_rounds(n, max_iterations):
         vs = spark.range(n).select(F.col("id").alias("doc_id"))
         ps = spark.range(n - 1).select(
             F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
         )
-        out = dedup.connected_components(
-            ps, vs, "doc_id", max_iterations=max_iterations, algorithm=algorithm
+        res = dedup.connected_components_detailed(
+            ps, vs, "doc_id", max_iterations=max_iterations
         )
-        assert out.where(F.col("component") != 0).count() == 0, algorithm
-        return dedup.last_cc_rounds
+        assert res.labels.where(F.col("component") != 0).count() == 0
+        return res.rounds
 
-    # same 64-node chain: ~6 rounds vs 63
-    timed("cc_two_phase_path64_rounds", lambda: _cc_rounds(64, "two_phase", 25))
-    timed("cc_propagation_path64_rounds", lambda: _cc_rounds(64, "propagation", 70))
+    # 64-node chain: ~7 rounds (min-label propagation took 64)
+    timed("cc_two_phase_path64_rounds", lambda: _cc_rounds(64, 25))
     # 8x the chain costs two-phase only ~log2(8)=3 more rounds
-    timed("cc_two_phase_path512_rounds", lambda: _cc_rounds(512, "two_phase", 25))
+    timed("cc_two_phase_path512_rounds", lambda: _cc_rounds(512, 25))
 
     # Semantic dedup: per-cluster GEMM pair scan at 100x vectors (64 cells
     # keep clusters ~n/64; the SQL pair-scan variant at this size would
